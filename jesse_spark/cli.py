@@ -147,6 +147,8 @@ def _validate_checkpointed(spark, args, clips, codecs, schema, *, cm, snap,
     touched), and its manifest rows are recorded as the group finishes —
     so a crash loses at most one in-flight group and a resume re-does
     only shards with no manifest."""
+    import pandas as pd
+
     from jesse_spark.plans.checkpoint import shard_expr, shard_verdicts, with_shard
     from jesse_spark.plans.pipeline import run_full_suite
 
@@ -189,8 +191,11 @@ def _validate_checkpointed(spark, args, clips, codecs, schema, *, cm, snap,
              bool(got[s]["passed"]) if s in got else True)
             for s in batch
         ]
+        # from pandas through Arrow: a local relation in the JVM, where a
+        # Python list would cost a Python worker stage per batch
         svdf = spark.createDataFrame(
-            sv_rows, "shard int, rows long, invalid_rows long, passed boolean")
+            pd.DataFrame(sv_rows, columns=["shard", "rows", "invalid_rows", "passed"]),
+            "shard int, rows long, invalid_rows long, passed boolean")
         cm.record(args.run_id, snap, svdf, wall_sec=time.time() - tb)
         rows_this_run += sum(r[1] for r in sv_rows)
         # each batch persists its own narrow projection (pipeline.py);

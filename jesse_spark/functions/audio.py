@@ -74,6 +74,12 @@ def alaw_decode(a: np.ndarray) -> np.ndarray:
     return np.where(sign != 0, mag, -mag).astype(np.int16)
 
 
+# G.711 decoding maps each byte on its own, so a 256-entry table indexed
+# by the byte is bit-equal to the arithmetic above and 4-6x faster
+_ULAW_TABLE = ulaw_decode(np.arange(256, dtype=np.uint8))
+_ALAW_TABLE = alaw_decode(np.arange(256, dtype=np.uint8))
+
+
 # ---------------------------------------------------------------------------
 # PCM16 (raw little-endian)
 # ---------------------------------------------------------------------------
@@ -100,9 +106,9 @@ def decode(raw: bytes, codec: str) -> np.ndarray:
     if codec == "pcm_s16le":
         return pcm16_decode(raw)
     if codec == "ulaw":
-        return ulaw_decode(np.frombuffer(raw, dtype=np.uint8))
+        return _ULAW_TABLE.take(np.frombuffer(raw, dtype=np.uint8))
     if codec == "alaw":
-        return alaw_decode(np.frombuffer(raw, dtype=np.uint8))
+        return _ALAW_TABLE.take(np.frombuffer(raw, dtype=np.uint8))
     raise ValueError(f"unknown codec {codec!r}")
 
 
@@ -188,15 +194,15 @@ def reference_transcript(clip_id: str) -> str:
 
 
 def snr_db(ref: np.ndarray, dec: np.ndarray) -> float:
-    n = min(len(ref), len(dec))
-    if n == 0:
-        return -np.inf
-    r = ref[:n].astype(np.float64)
-    d = dec[:n].astype(np.float64)
-    sig = float(np.sum(r * r))
-    noise = float(np.sum((r - d) * (r - d)))
-    if len(ref) != len(dec):
-        return -np.inf  # truncation is corruption
+    """SNR of ``dec`` against ``ref`` in dB.  The energies are int64 dot
+    products: exact for int16 inputs (below 2**31 samples), so they
+    equal the float64 sums of the squares wherever those are exact."""
+    if len(ref) == 0 or len(ref) != len(dec):
+        return -np.inf  # empty or truncated: corruption
+    r = ref.astype(np.int64)
+    e = r - dec
+    sig = float(r @ r)
+    noise = float(e @ e)
     if noise == 0.0:
         return 120.0
     if sig == 0.0:
@@ -216,18 +222,17 @@ AUDIO_CHECK_SCHEMA = T.StructType([
 
 def _decode_batch(rw: np.ndarray, cod: np.ndarray) -> list:
     """Vectorized per-codec decode of one Arrow batch: all of a codec's
-    payloads are concatenated and decoded in ONE numpy pass, then split
-    back by offset — the G.711 table math runs over the whole batch
-    instead of clip-at-a-time.  Unknown codec / null bytes → None."""
+    payloads are concatenated and decoded in ONE table lookup, then split
+    back by offset.  Unknown codec / null bytes → None."""
     n = len(rw)
     decoded: list = [None] * n
-    for codec_name, dec_fn in (("ulaw", ulaw_decode), ("alaw", alaw_decode)):
+    for codec_name, table in (("ulaw", _ULAW_TABLE), ("alaw", _ALAW_TABLE)):
         idx = np.nonzero(cod == codec_name)[0]
         if len(idx) == 0:
             continue
         bufs = [rw[i] if rw[i] is not None else b"" for i in idx]
         lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-        dec_all = dec_fn(np.frombuffer(b"".join(bufs), dtype=np.uint8))
+        dec_all = table.take(np.frombuffer(b"".join(bufs), dtype=np.uint8))
         offs = np.concatenate(([0], np.cumsum(lens)))
         for j, i in enumerate(idx):
             if rw[i] is not None:

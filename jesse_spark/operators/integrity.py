@@ -35,8 +35,11 @@ def ri_valid(df: DataFrame, key: str, ref: DataFrame, ref_key: str | None = None
 
 def ri_violations(df: DataFrame, key: str, ref: DataFrame, ref_key: str | None = None,
                   *, broadcast_ref: bool = True) -> DataFrame:
+    """Rows of ``df`` whose ``key`` has no match in ``ref``.  The
+    reference keys are not deduplicated: an anti join's result does not
+    depend on duplicate build keys."""
     ref_key = ref_key or key
-    r = _maybe_broadcast(ref.select(F.col(ref_key).alias(key)).distinct(), broadcast_ref)
+    r = _maybe_broadcast(ref.select(F.col(ref_key).alias(key)), broadcast_ref)
     return df.join(r, on=key, how="left_anti")
 
 

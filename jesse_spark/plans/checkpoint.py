@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import time
+import warnings
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,9 +86,18 @@ class CheckpointManager:
         Path(manifest_dir).mkdir(parents=True, exist_ok=True)
 
     def completed_shards(self, run_id: str, snapshot_id: str) -> list[int]:
+        """Shards with a manifest row for ``(run_id, snapshot_id)``.  An
+        empty store answers without a Spark job.  An unreadable store
+        warns and yields ``[]``: the only consequence is re-processing
+        (unlike :meth:`run_totals`, which must raise)."""
+        if not any(Path(self.dir).rglob("*.parquet")):
+            return []
         try:
             m = self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.dir)
-        except Exception:
+        except Exception as e:
+            warnings.warn(f"checkpoint manifests in {self.dir} are unreadable "
+                          f"({type(e).__name__}: {e}); re-processing every shard",
+                          RuntimeWarning, stacklevel=2)
             return []
         rows = (
             m.filter((F.col("run_id") == run_id) & (F.col("snapshot_id") == snapshot_id))

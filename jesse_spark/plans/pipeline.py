@@ -17,19 +17,23 @@ Stage layout (north_star / SURVEY.md §3 engine lifecycle):
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from jesse_spark.compiler import compile_checks
 from jesse_spark.functions.audio import audio_violations, with_audio_checks
 from jesse_spark.operators.integrity import ri_violation_rows
 from jesse_spark.operators.uniqueness import uniqueness_violations
 from jesse_spark.plans.validate import (
+    check_preds,
+    fail_fast_pred,
     partition_verdicts,
     violation_rows,
-    with_violations,
+    violations_array,
 )
 from jesse_spark.sources.fixtures import CLIPS_CONSTRAINT_SCHEMA
 
@@ -41,7 +45,43 @@ class SuiteResult:
     verdicts: DataFrame        # per-partition pass/fail
 
 
-VIOLATION_COLS = ("clip_id", "constraint", "path", "observed")
+# Compiled suites, the engine's jesse_database schema store (SURVEY.md
+# §2.4): the check Columns of a (schema, input type, compile options)
+# triple, built through py4j once (~2,000 round trips for the clips
+# suite) and reused by every later plan.  Keyed by the active JVM too,
+# because a Column is a handle to a JVM object; each entry holds that
+# JVM's view, so its id() cannot be reused while the entry lives.
+# Cleared when full.
+_SUITES_MAX = 32
+_suites: dict[tuple, tuple] = {}
+
+
+def _check_columns(schema, data_type: T.StructType, compile_opts: dict,
+                   jvm) -> tuple[Column, Column]:
+    """``(violations array, fail-fast predicate)`` of ``schema`` over
+    rows of ``data_type``.  A schema or option that does not serialize
+    to JSON is compiled on every call.  Compile-time warnings (pattern
+    lint, anyOf detail budget) fire on the compiling call only."""
+    try:
+        key = (json.dumps(schema, sort_keys=True), data_type.json(),
+               json.dumps(compile_opts, sort_keys=True), id(jvm))
+    except TypeError:
+        key = None
+    hit = _suites.get(key) if key else None
+    if hit is not None:
+        return hit[1:]
+    inst = F.struct(*[F.col(f.name) for f in data_type.fields])
+    checks = compile_checks(schema, data_type, null_is_absent=True, **compile_opts)
+    # the violations array and the audio stage's fail-fast conjunction
+    # share each check's predicate Column
+    preds = check_preds(checks, inst)
+    cols = (violations_array(checks, inst, preds),
+            fail_fast_pred(checks, inst, preds))
+    if key:
+        if len(_suites) >= _SUITES_MAX:
+            _suites.clear()
+        _suites[key] = (jvm, *cols)
+    return cols
 
 
 def run_full_suite(
@@ -75,44 +115,29 @@ def run_full_suite(
 
     ``compile_opts`` forwards compile options to
     :func:`compile_checks` (anyof_detail_max, ref_unroll_max,
-    pattern_lint)."""
+    pattern_lint).  A later build with the same schema, data columns
+    and options reuses the compiled check Columns."""
     from pyspark import StorageLevel
-    from pyspark.sql import types as T
 
     schema = schema or CLIPS_CONSTRAINT_SCHEMA
-    data_cols = [c for c in clips.columns if c not in set(ignore_cols)]
-    data_type = T.StructType([clips.schema[c] for c in data_cols])
-    inst = F.struct(*[F.col(c) for c in data_cols])
-    checks = compile_checks(schema, data_type, null_is_absent=True,
-                            **(compile_opts or {}))
-    # build each check's predicate Column ONCE; the violations array
-    # and the audio stage's fail-fast conjunction share the list
-    # (rebuilding them through py4j cost ~0.5 s of driver time per
-    # suite plan — guide §1, measured r6)
-    from jesse_spark.plans.validate import check_preds, violations_array
-
-    preds = check_preds(checks, inst)
-    validated = (clips.withColumn(
-        "violations", violations_array(checks, inst, preds))
-        .withColumn("valid", F.size("violations") == 0))
+    data_type = T.StructType([f for f in clips.schema if f.name not in ignore_cols])
+    violations, fail_fast = _check_columns(schema, data_type, compile_opts or {},
+                                           clips.sparkSession._jvm)
+    validated = (clips.withColumn("violations", violations)
+                 .withColumn("valid", F.size("violations") == 0))
 
     narrow = validated.drop("bytes")
     if persist:
         narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
 
-    row_v = violation_rows(narrow, ["clip_id"])
-
-    parts = [row_v.select(*VIOLATION_COLS)]
+    # every part has exactly the columns (clip_id, constraint, path, observed)
+    parts = [violation_rows(narrow, ["clip_id"])]
     if with_audio:
-        from jesse_spark.plans.validate import fail_fast_pred
-
-        passing = clips.filter(
-            fail_fast_pred(checks, inst, preds)
-        ).select("clip_id", "bytes", "codec", "sr_hz", "transcript")
-        checked = with_audio_checks(passing)
-        parts.append(audio_violations(checked).select(*VIOLATION_COLS))
-    parts.append(uniqueness_violations(narrow, "clip_id").select(*VIOLATION_COLS))
-    parts.append(ri_violation_rows(narrow, "codec", codecs).select(*VIOLATION_COLS))
+        passing = clips.filter(fail_fast).select(
+            "clip_id", "bytes", "codec", "sr_hz", "transcript")
+        parts.append(audio_violations(with_audio_checks(passing)))
+    parts.append(uniqueness_violations(narrow, "clip_id"))
+    parts.append(ri_violation_rows(narrow, "codec", codecs))
 
     all_v = parts[0]
     for p in parts[1:]:

@@ -166,11 +166,13 @@ def clips_df(
 
 
 def codecs_df(spark: SparkSession) -> DataFrame:
-    """RI reference table (FIXTURES.md §2)."""
-    return spark.createDataFrame(
-        [("pcm_s16le", 16), ("ulaw", 8), ("alaw", 8)],
-        "codec string, bits_per_sample int",
-    )
+    """RI reference table (FIXTURES.md §2).  An inline ``VALUES``
+    relation plans as a ``LocalTableScan`` in the JVM; a DataFrame
+    built from a Python list would start a Python worker stage that the
+    RI join waits for."""
+    return spark.sql(
+        "SELECT * FROM VALUES ('pcm_s16le', 16), ('ulaw', 8), ('alaw', 8)"
+        " AS t(codec, bits_per_sample)")
 
 
 # ---------------------------------------------------------------------------

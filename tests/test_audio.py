@@ -75,3 +75,54 @@ def test_synth_pcm_paths_and_shapes():
         got = A.synth_pcm("clip-x", sr, n)
         assert got.dtype == np.int16 and len(got) == n
         assert np.array_equal(got, A.synth_pcm("clip-x", sr, n))
+
+
+@pytest.mark.parametrize("codec, arith", [("ulaw", audio.ulaw_decode),
+                                          ("alaw", audio.alaw_decode)])
+def test_g711_table_decode_matches_arithmetic(codec, arith):
+    """The 256-entry lookup tables behind decode() and the batch decode
+    are bit-equal to the arithmetic G.711 decoders on every code."""
+    raw = bytes(range(256))
+    want = arith(np.arange(256, dtype=np.uint8))
+    got = audio.decode(raw, codec)
+    assert got.dtype == np.int16 and np.array_equal(got, want)
+    batch = audio._decode_batch(np.array([raw, None, raw[::-1]], dtype=object),
+                                np.array([codec] * 3, dtype=object))
+    assert np.array_equal(batch[0], want) and batch[1] is None
+    assert np.array_equal(batch[2], want[::-1])
+
+
+def _snr_float_sums(ref, dec):
+    """The float64-sum SNR formula, the reference for snr_db."""
+    n = min(len(ref), len(dec))
+    if n == 0:
+        return -np.inf
+    r = ref[:n].astype(np.float64)
+    d = dec[:n].astype(np.float64)
+    sig = float(np.sum(r * r))
+    noise = float(np.sum((r - d) * (r - d)))
+    if len(ref) != len(dec):
+        return -np.inf
+    if noise == 0.0:
+        return 120.0
+    if sig == 0.0:
+        return -np.inf
+    return 10.0 * np.log10(sig / noise)
+
+
+def test_snr_db_matches_float_sums_on_fixture_clips():
+    """Clean clips of every codec, a corrupt clip (defect kind 7) and
+    truncated decodes give the same SNR, bit for bit."""
+    from jesse_spark.sources.fixtures import _gen_row
+
+    snrs, codecs = [], set()
+    for i in [*range(12), 357, 757]:     # 357 and 757 are corrupt
+        cid, raw, sr, _dur, codec, _tr = _gen_row(i, (200, 2000))
+        dec = audio.decode(raw, codec)
+        ref = audio.synth_pcm(cid, sr, len(dec))
+        for d in (dec, dec[:-7], dec[:0]):
+            assert audio.snr_db(ref, d) == _snr_float_sums(ref, d), (i, len(d))
+        snrs.append(audio.snr_db(ref, dec))
+        codecs.add(codec)
+    assert codecs == set(audio.CODECS)
+    assert min(snrs[-2:]) < audio.SNR_THRESHOLD_DB < min(snrs[:7])

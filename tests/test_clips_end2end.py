@@ -46,3 +46,67 @@ def test_generation_deterministic(spark):
     a = clips_df(spark, 50).orderBy("clip_id").toPandas()
     b = clips_df(spark, 50, partitions=7).orderBy("clip_id").toPandas()
     pd.testing.assert_frame_equal(a, b)
+
+
+# ---------------------------------------------------------------------------
+# compiled-suite memo: a repeated build reuses the compiled check Columns
+# ---------------------------------------------------------------------------
+@pytest.fixture
+def compile_calls(monkeypatch):
+    """An empty suite memo and a list that grows by one per
+    compile_checks call the pipeline makes."""
+    from jesse_spark.plans import pipeline
+
+    calls = []
+    real = pipeline.compile_checks
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "_suites", {})
+    monkeypatch.setattr(pipeline, "compile_checks", counting)
+    return calls
+
+
+def _collected(res):
+    viol = sorted(tuple(r) for r in res.violations.collect())
+    verd = res.verdicts.agg(F.sum("rows"), F.sum("invalid_rows")).head()
+    res.validated.unpersist()
+    return viol, tuple(verd)
+
+
+def test_suite_memo_hit_skips_compile(spark, compile_calls):
+    clips = clips_df(spark, 120)
+    first = _collected(run_full_suite(clips, codecs_df(spark)))
+    assert len(compile_calls) == 1
+    second = _collected(run_full_suite(clips_df(spark, 120), codecs_df(spark)))
+    assert len(compile_calls) == 1, "same schema and input type must hit the memo"
+    assert second == first
+
+
+@pytest.mark.parametrize("change", ["compile_opts", "schema", "type", "nullability"])
+def test_suite_memo_misses_on_any_key_change(spark, compile_calls, change):
+    from pyspark.sql import types as T
+
+    from jesse_spark.sources.fixtures import CLIPS_CONSTRAINT_SCHEMA, CLIPS_SCHEMA
+
+    base = spark.createDataFrame([], CLIPS_SCHEMA)
+    codecs = codecs_df(spark)
+    run_full_suite(base, codecs, persist=False)
+    run_full_suite(base, codecs, persist=False)
+    assert len(compile_calls) == 1
+    kw = {}
+    clips = base
+    if change == "compile_opts":
+        kw["compile_opts"] = {"pattern_lint": False}
+    elif change == "schema":
+        kw["schema"] = {**CLIPS_CONSTRAINT_SCHEMA, "additionalProperties": True}
+    elif change == "type":
+        clips = base.withColumn("sr_hz", F.col("sr_hz").cast("long"))
+    else:
+        clips = spark.createDataFrame([], T.StructType([
+            T.StructField(f.name, f.dataType, f.name != "clip_id")
+            for f in base.schema]))
+    run_full_suite(clips, codecs, persist=False, **kw)
+    assert len(compile_calls) == 2, f"a changed {change} must recompile"

@@ -312,6 +312,24 @@ def test_cli_resume_skips_completed_shards(spark, tmp_path):
     assert set(r["s"] for r in v.select("s").distinct().collect()) <= {1, 3}
 
 
+def test_completed_shards_empty_store_and_unreadable_store(tmp_path):
+    """An empty manifest store answers [] without touching Spark; an
+    unreadable one still falls back to [] (re-process everything) but
+    warns with the error instead of swallowing it."""
+    from jesse_spark.plans.checkpoint import CheckpointManager
+
+    class Unreadable:
+        @property
+        def read(self):
+            raise OSError("manifest store is gone")
+
+    cm = CheckpointManager(Unreadable(), str(tmp_path / "ckpt"))
+    assert cm.completed_shards("r", "s") == []
+    (tmp_path / "ckpt" / "part-0.parquet").write_bytes(b"")
+    with pytest.warns(RuntimeWarning, match="OSError: manifest store is gone"):
+        assert cm.completed_shards("r", "s") == []
+
+
 def test_streaming_validation(spark, tmp_path):
     """readStream → compiled checks → windowed verdicts (availableNow)."""
     from jesse_spark.streaming import streaming_verdicts, validate_stream

@@ -184,8 +184,13 @@ def test_clips_pipeline_plan_shape(spark):
             assert "CartesianProduct" not in p
             assert "SortMergeJoin" not in p, \
                 "codec dim join must stay broadcast"
-        assert plan_str(spark, res.violations).count("Exchange") <= 3
+        v = plan_str(spark, res.violations)
+        assert v.count("Exchange") <= 3
         assert plan_str(spark, res.verdicts).count("Exchange") <= 1
+        # the codecs table is a JVM-local relation: no Python worker
+        # stage for the RI join to wait on
+        assert "LocalTableScan" in v and "Scan ExistingRDD" not in v
+        assert v.count("ArrowEvalPython") == 1, "the audio UDF must run once"
     finally:
         res.validated.unpersist()
 
