@@ -602,7 +602,7 @@ cdf AS (
 SELECT CAST(floor(max(abs(ca - cb)) * 1000000 + 0.5) AS BIGINT) AS ks_x1e6 FROM cdf
 """
 
-# exact all-pairs token-bigram Jaccard (mirrors token_shingles(text, 2))
+# exact all-pairs token-bigram Jaccard (mirrors with_shingles(text, k=5, mode="token"))
 _MINHASH_SQL = r"""
 WITH d AS (
   SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks

@@ -17,65 +17,56 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# normalization + shingling (shared by minhash / jaccard / fingerprint)
+# normalization + shingling (shared by minhash / jaccard)
 # ---------------------------------------------------------------------------
 def normalized(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles as an array<string> — built with
-    sequence+transform (JVM, no UDF).
+def _shingle_sets(df: DataFrame, text_col: str, *, k: int, mode: str,
+                  out: str, shingle: Callable[[Column], Column]) -> DataFrame:
+    """Distinct ``shingle(slice)`` over every n-slice of the normalized
+    text: n = ``k`` chars, or ``max(k // 2, 2)`` space-separated tokens
+    when ``mode == "token"``.
 
-    NOTE: ``substr(i, k)`` on a UTF8String seeks from the start (O(i)),
-    so naive shingling is O(n²) per row.  Prefer :func:`with_shingles`,
-    which stages a char array and slices it (O(n·k))."""
-    t = normalized(text)
-    n = F.greatest(F.length(t) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-    )
+    The parts array (chars or tokens) is staged behind a projection
+    boundary, so each slice is O(n) over a bound attribute.  Inlining
+    the split re-evaluates the full regexp_replace+split chain for EVERY
+    position (the split sits inside the transform lambda) — O(len²) per
+    row, measured 2.5-3.5 s over 50k docs at sf1.0 for what is a ~0.3 s
+    linear pass — and a ``substr`` per position seeks from the start of
+    the UTF8String, O(n²) again.
+
+    A null text's split is coalesced to ``[""]``, so null and empty
+    texts yield the same degenerate one-element set."""
+    if mode == "token":
+        n = max(k // 2, 2)
+        parts = F.split(F.trim(normalized(F.col(text_col))), " ")
+    else:
+        n = k
+        parts = F.split(normalized(F.col(text_col)), "")
+    d = df.withColumn("_parts", F.coalesce(parts, F.array(F.lit(""))))
+    cnt = F.greatest(F.size(F.col("_parts")) - (n - 1), F.lit(1))
+    return d.withColumn(out, F.array_distinct(F.transform(
+        F.sequence(F.lit(1), cnt),
+        lambda i: shingle(F.slice(F.col("_parts"), i, n)),
+    ))).drop("_parts")
 
 
 def with_shingles(df: DataFrame, text_col: str, *, k: int = 5,
                   mode: str = "char", out: str = "sh") -> DataFrame:
-    """Stage shingles as a column: char array first (one split per
-    row), then O(k) slices — avoids both the O(n²) substr seek and
-    CollapseProject re-evaluation."""
-    if mode == "token":
-        # same staging discipline as char mode: materialize the token
-        # array behind a projection boundary so each n-gram slice is
-        # O(n-gram) over a bound attribute.  Inlining token_shingles
-        # directly re-evaluates the full regexp_replace+split chain for
-        # EVERY position (the split sits inside the transform lambda) —
-        # O(len²) per row, measured 2.5-3.5 s over 50k docs at sf1.0
-        # for what is a ~0.3 s linear pass.
-        n_gram = max(k // 2, 2)
-        d = df.withColumn("_toks", F.split(F.trim(normalized(F.col(text_col))), " "))
-        cnt = F.greatest(F.size(F.col("_toks")) - (n_gram - 1), F.lit(1))
-        d = d.withColumn(
-            out,
-            F.array_distinct(F.transform(
-                F.sequence(F.lit(0), cnt - 1),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, n_gram)),
-            )),
-        )
-        return d.drop("_toks")
-    d = df.withColumn("_chars", F.split(normalized(F.col(text_col)), ""))
-    n = F.greatest(F.size(F.col("_chars")) - (k - 1), F.lit(1))
-    d = d.withColumn(
-        out,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws("", F.slice(F.col("_chars"), i, k)),
-        )),
-    )
-    return d.drop("_chars")
+    """Distinct shingles as ``array<string>`` (tokens joined by a
+    space, chars by nothing), staged by :func:`_shingle_sets`."""
+    sep = " " if mode == "token" else ""
+    return _shingle_sets(df, text_col, k=k, mode=mode, out=out,
+                         shingle=lambda s: F.concat_ws(sep, s))
 
 
 def hashed_shingles(df: DataFrame, text_col: str, *, k: int = 5,
@@ -90,40 +81,9 @@ def hashed_shingles(df: DataFrame, text_col: str, *, k: int = 5,
     are single chars), so set sizes and intersections match unless two
     distinct shingles collide in 64 bits (~1e-16 per pair).  NOT for
     minhash_signatures, whose ``hash(string, i)`` values are pinned
-    bit-for-bit.
-
-    Null/empty texts keep the string formulation's degenerate set: the
-    split is coalesced to ``[""]``, so every such doc yields the same
-    single-element set (mirroring concat_ws(NULL) → "")."""
-    if mode == "token":
-        n_gram = max(k // 2, 2)
-        d = df.withColumn("_parts", F.coalesce(
-            F.split(F.trim(normalized(F.col(text_col))), " "),
-            F.array(F.lit(""))))
-        cnt = F.greatest(F.size(F.col("_parts")) - (n_gram - 1), F.lit(1))
-        hashed = F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.xxhash64(F.slice(F.col("_parts"), i + 1, n_gram)))
-    else:
-        d = df.withColumn("_parts", F.coalesce(
-            F.split(normalized(F.col(text_col)), ""), F.array(F.lit(""))))
-        n = F.greatest(F.size(F.col("_parts")) - (k - 1), F.lit(1))
-        hashed = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(F.slice(F.col("_parts"), i, k)))
-    return d.withColumn(out, F.array_distinct(hashed)).drop("_parts")
-
-
-def token_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams."""
-    toks = F.split(F.trim(normalized(text)), " ")
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
+    bit-for-bit."""
+    return _shingle_sets(df, text_col, k=k, mode=mode, out=out,
+                         shingle=F.xxhash64)
 
 
 # ---------------------------------------------------------------------------
@@ -172,74 +132,34 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# shared: capped bucket → pair explosion
+# shared: capped bucket → pairs
 # ---------------------------------------------------------------------------
-def bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """Explode a bucketed id-list column into ordered (id_a < id_b)
-    pairs.  The caller is expected to have capped the list (slice) so a
-    pathological hot bucket cannot go quadratic — this is the one shape
-    shared by every LSH family (MinHash bands, SimHash chunks,
-    hyperplane buckets)."""
-    ids = F.col(ids_col)
-    return buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(ids) - 1),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, F.size(ids)),
-                        lambda j: F.struct(
-                            F.element_at(ids, i).alias("id_a"),
-                            F.element_at(ids, j).alias("id_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-
-
-def _capped_id_buckets(tagged: DataFrame, key_cols: list[str], *,
-                       max_bucket: int) -> DataFrame:
-    """Bucket key → sorted id list of AT MOST max_bucket ids.
-
-    Membership is capped BEFORE the aggregation: a row_number window
-    over the bucket key (ordered by id — keeps the survivor set the
-    deterministic min ids) filtered to ``<= max_bucket``, then the
-    bounded collect.  The window's sort is spillable; an uncapped
-    ``collect_list`` buffer on a degenerate hot bucket (billions of
-    identical texts → one bucket) is a single-reducer OOM at 100 TB."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy("id")
-    capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= max_bucket)
-    return (
-        capped.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-
-
 def capped_bucket_pairs(tagged: DataFrame, key_cols: list[str], *,
                         max_bucket: int) -> DataFrame:
     """Ordered (id_a < id_b) pairs of ids sharing a bucket key, capped
-    at ``max_bucket`` members per bucket — the codegen formulation of
-    ``bucket_pairs(_capped_id_buckets(...))``.
+    at ``max_bucket`` members per bucket.
 
-    Same cap discipline (row_number window ordered by id keeps the
-    deterministic min-id survivors), but pairs come from a within-bucket
+    Preconditions (not checked — checking costs a job): every key
+    column is non-null, since a null key never matches in the join; and
+    each (key, id) row is unique, since a duplicate takes a cap slot
+    and repeats its pairs.
+
+    Membership is capped BEFORE pairing: a row_number window over the
+    bucket key, ordered by id, keeps the deterministic min-id survivors
+    (the window sort spills; an uncapped collect_list buffer on a hot
+    bucket is a single-reducer OOM).  Pairs come from a within-bucket
     self-join with ``id_a < id_b`` instead of collect_list + nested
     transform/explode: the pair loop runs in whole-stage codegen rather
     than interpreted HOF lambdas, and the collect_list aggregation
     buffer disappears.  SHUFFLE_MERGE hint: spillable, never broadcast
     (bucket membership scales with the corpus).  Pair-set equality with
-    the exploded formulation is pinned by tests/test_dedup_similarity.py
-    and was verified at 735k (minhash, sf1.0) and 14.3M (hyperplane,
-    10x-duplicated corpus) pair volumes — at the 14.3M volume this is
-    ~2.4x faster; the ~400M-pair regime where AQE-coalesced SMJ pairing
-    degenerated (see minhash_lsh_candidates) only arises with a true
-    multi-permutation signature, which no caller ships."""
+    the collect_list + explode formulation, kept as the oracle in
+    tests/test_dedup_similarity.py, is pinned there and was verified at
+    735k (minhash, sf1.0) and 14.3M (hyperplane, 10x-duplicated corpus)
+    pair volumes — at the 14.3M volume this is ~2.4x faster; the
+    ~400M-pair regime where AQE-coalesced SMJ pairing degenerated (see
+    minhash_lsh_candidates) only arises with a true multi-permutation
+    signature, which no caller ships."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy("id")
@@ -569,33 +489,6 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def hyperplane_buckets(vec: Column, planes_flat: Column,
-                       n_tables: int, n_planes: int, dim: int) -> Column:
-    """All tables' sign-bit buckets at once: ``array<long>`` of length
-    ``n_tables``.  ``planes_flat`` is the row-major T×P×dim plane
-    tensor as one flat array<double> column — shipped as a broadcast
-    1-row DataFrame by the caller, NOT inlined as literals (16k lit()
-    elements cost ~8 s of py4j driver time, and the unrolled per-plane
-    expression tree costs seconds of janino compile).  Each plane is a
-    runtime ``slice``; the dots run as ``aggregate`` loops, keeping
-    whole-stage codegen small and the stage embarrassingly parallel."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc.bitwiseOR(
-                F.when(
-                    _dot(vec, F.slice(planes_flat,
-                                      (t * n_planes + p) * dim + 1, dim)) >= 0,
-                    F.call_function("shiftleft", F.lit(1).cast("long"),
-                                    p.cast("int")),
-                ).otherwise(F.lit(0).cast("long"))
-            ),
-        ),
-    )
 
 
 def embedding_near_duplicates(

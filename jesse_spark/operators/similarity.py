@@ -14,7 +14,7 @@ literals, i.e. an implicit broadcast).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jesse_spark.operators.dedup import _dot, _norm
@@ -78,40 +78,6 @@ def train_ivf_centroids(
     return C.tolist()
 
 
-def train_ivf_index(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str | None = None,
-    *,
-    n_cells: int = 16,
-    sample: int = 2048,
-    iters: int = 10,
-    seed: int = 42,
-) -> tuple[list[list[float]], list[float]]:
-    """Centroids + per-cell angular radii (max angle between a member
-    and its centroid, one groupBy pass).  The radii make bound-based
-    exact search possible: any x in cell c satisfies
-    angle(q,x) ≥ angle(q,c) − radius_c."""
-    cents = train_ivf_centroids(df, vec_col, id_col, n_cells=n_cells,
-                                sample=sample, iters=iters, seed=seed)
-    v = F.col(vec_col).cast("array<double>")
-    scores = F.array(*[_dot(v, F.lit(c).cast("array<double>")) for c in cents])
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).alias("cell")
-    # dot(v̂, c_assigned) = max_score / |v| (assignment is argmax dot,
-    # invariant under the positive scaling)
-    cosc = F.array_max(scores) / _norm(v)
-    ang = F.acos(F.greatest(F.least(cosc, F.lit(1.0)), F.lit(-1.0)))
-    rows = (
-        df.select(cell, ang.alias("ang"))
-        .groupBy("cell").agg(F.max("ang").alias("radius"))
-        .collect()
-    )
-    radii = [0.0] * len(cents)
-    for r in rows:
-        radii[int(r["cell"])] = float(r["radius"])
-    return cents, radii
-
-
 class IvfIndex:
     """Materialized IVF index: centroids + per-cell radii + the assigned
     projection (id, v, cell, ang) cached once.
@@ -169,9 +135,13 @@ def build_ivf_index(
 
 
 def ivf_search(index: IvfIndex, query: list[float], k: int = 10) -> DataFrame:
-    """EXACT top-k over a built index (same bound-based probing as
-    :func:`ivf_topk_exact`, but both phases reuse the cached assignment
-    — no argmax re-evaluation, no table rescans)."""
+    """EXACT top-k through IVF pruning over a built index: probe the
+    nearest cell for a kth-best candidate t, then search only cells
+    whose best possible cosine — cos(max(0, angle(q,c) − radius_c)) —
+    can reach t.  On clustered data this prunes most cells; on
+    adversarial data it degrades to a full (still correct) scan.  Both
+    phases filter the cached assignment — no argmax re-evaluation, no
+    table rescans; the phase-1 collect is k rows."""
     qu = np.asarray(_unit(query))
     C = np.asarray(index.centroids)
     qdots = np.clip(C @ qu, -1.0, 1.0)
@@ -187,94 +157,12 @@ def ivf_search(index: IvfIndex, query: list[float], k: int = 10) -> DataFrame:
     )
     t = phase1[k - 1]["cosine"] if len(phase1) >= k else -2.0
     bounds = np.cos(np.maximum(0.0, np.arccos(qdots) - np.asarray(index.radii)))
+    # 1e-9 slack absorbs float error in the bound; ties (== t) included
     probe = [int(c) for c in range(len(index.centroids))
              if c == first or bounds[c] >= t - 1e-9]
     return (
         index.assigned.filter(F.col("cell").isin(probe))
         .select("id", cos_col)
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-    )
-
-
-def ivf_topk_exact(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    *,
-    centroids: list[list[float]],
-    radii: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """EXACT top-k through IVF pruning: probe the nearest cell for a
-    kth-best candidate t, then search only cells whose best possible
-    cosine — cos(max(0, angle(q,c) − radius_c)) — can reach t.  On
-    clustered data this prunes most cells; on adversarial data it
-    degrades to a full (still correct) scan.  Two jobs; the phase-1
-    collect is k rows."""
-    qu = np.asarray(_unit(query))
-    C = np.asarray(centroids)
-    qdots = np.clip(C @ qu, -1.0, 1.0)
-    order = np.argsort(-qdots)
-    first = int(order[0])
-    cell = _cell_assignment(F.col(vec_col), centroids)
-    q = F.lit(list(qu)).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
-    cos_col = (_dot(v, q) / _norm(v)).alias("cosine")
-    base = df.withColumn("_cell", cell)
-    phase1 = (
-        base.filter(F.col("_cell") == first)
-        .select(F.col(id_col).alias("id"), cos_col)
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-        .collect()
-    )
-    t = phase1[k - 1]["cosine"] if len(phase1) >= k else -2.0
-    ang_qc = np.arccos(qdots)
-    bounds = np.cos(np.maximum(0.0, ang_qc - np.asarray(radii)))
-    # 1e-9 slack absorbs float error in the bound; ties (== t) included
-    probe = [int(c) for c in range(len(centroids))
-             if c == first or bounds[c] >= t - 1e-9]
-    return (
-        base.filter(F.col("_cell").isin(probe))
-        .select(F.col(id_col).alias("id"), cos_col)
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-    )
-
-
-def _cell_assignment(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmax cell id as a Column expression (centroids inlined)."""
-    v = vec.cast("array<double>")
-    scores = F.array(*[_dot(v, F.lit(c).cast("array<double>")) for c in centroids])
-    return F.array_position(scores, F.array_max(scores)) - 1
-
-
-def ivf_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    *,
-    centroids: list[list[float]],
-    n_probe: int = 4,
-    k: int = 10,
-) -> DataFrame:
-    """Search only the n_probe cells nearest the query.  The cell filter
-    prunes before the expensive full-dimension dot product; on a
-    cell-partitioned (bucketed) table it becomes partition pruning."""
-    qu = np.asarray(_unit(query))
-    C = np.asarray(centroids)
-    order = np.argsort(-(C @ qu))[:n_probe]
-    probe = [int(i) for i in order]
-    cell = _cell_assignment(F.col(vec_col), centroids)
-    q = F.lit(list(qu)).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        df.withColumn("_cell", cell)
-        .filter(F.col("_cell").isin(probe))
-        .select(F.col(id_col).alias("id"), (_dot(v, q) / _norm(v)).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("id"))
         .limit(k)
     )

@@ -1,10 +1,8 @@
 """Text-analysis operators for training-data pipelines (all JVM-side
 Column expressions — no UDFs in any of these).
 
-- token counting (whitespace + a BPE-ish word/number/punct regex)
 - quality scoring (length / punctuation / stopword / alpha ratios)
 - language-ID (top-trigram overlap heuristic)
-- document fingerprinting (normalized hash + winnowed min-shingle)
 """
 
 from __future__ import annotations
@@ -12,11 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jesse_spark.operators.dedup import normalized, shingles
-
-# BPE-ish pre-tokenizer: words with optional leading space, numbers,
-# punctuation runs (the common GPT-2-style split, regex-only subset)
-BPE_ISH = r"[A-Za-zÀ-ɏЀ-ӿ一-鿿]+|[0-9]+|[^\sA-Za-z0-9À-ɏЀ-ӿ一-鿿]+"
+from jesse_spark.operators.dedup import normalized
 
 STOPWORDS = (
     "the a an and or of to in is it you that he was for on are with as "
@@ -33,21 +27,11 @@ _LANG_TRIGRAMS = {
 }
 
 
-def whitespace_token_count(text: Column) -> Column:
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+")))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    return F.coalesce(F.regexp_count(text, F.lit(BPE_ISH)), F.lit(0))
-
-
 _ASCII_ALPHA = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
 
 def quality_features(df: DataFrame, text_col: str) -> DataFrame:
-    """Append length / ratio features + a composite quality score.
+    r"""Append length / ratio features + a composite quality score.
 
     r6: the alpha count splits into translate(ASCII letters) — one
     pass, no per-match regex cost — plus regexp_count of the
@@ -73,7 +57,7 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
     # one regex split per row, staged behind a projection boundary:
     # token count and the stopword filter both read _toks (lowering
     # never changes whitespace structure, so size(split(lower(trim)))
-    # == whitespace_token_count for non-empty text)
+    # is the whitespace token count for non-empty text)
     toks = F.col("_toks")
     n_tok = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(F.size(toks))
     n_stop = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS)))
@@ -101,42 +85,15 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
             .withColumn("quality_score", F.round(score, 6)))
 
 
-def _char_trigrams(text: Column) -> Column:
-    """Trigrams via substr — O(n²) seek; used only by the Column-level
-    lang_id.  with_lang_id stages a char array instead (O(n))."""
-    t = F.concat(F.lit(" "), normalized(text), F.lit(" "))
-    n = F.greatest(F.length(t) - 2, F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(3))))
-
-
-def _trigrams_from_chars(chars: Column) -> Column:
-    n = F.greatest(F.size(chars) - 2, F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n),
-                    lambda i: F.concat_ws("", F.slice(chars, i, 3))))
-
-
-def _lang_scores(tri: Column) -> Column:
-    """array<struct<score,lang>> of per-language trigram overlaps."""
-    return F.array(*[
-        F.struct(
-            F.size(F.array_intersect(
-                tri, F.array(*[F.lit(g) for g in grams]))).alias("score"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, grams in _LANG_TRIGRAMS.items()
-    ])
-
-
 def _lang_scores_contains(padded: Column) -> Column:
-    """Same scores as :func:`_lang_scores` over the padded text, without
-    materializing the trigram array: each language's reference grams are
-    DISTINCT 3-char strings, so ``|distinct_trigrams(text) ∩ grams|`` is
-    exactly the number of grams that occur as a substring of the padded
-    text — 10 ``contains`` probes per language (bytewise UTF8 search;
-    safe because a gram's first byte is ASCII or a UTF-8 lead byte, so a
-    match can never start mid-character)."""
+    """Per-language trigram overlaps (``array<struct<score,lang>>``) of
+    the padded text, without materializing the trigram array: each
+    language's reference grams are DISTINCT 3-char strings, so
+    ``|distinct_trigrams(text) ∩ grams|`` is exactly the number of grams
+    that occur as a substring of the padded text — 10 ``contains``
+    probes per language (bytewise UTF8 search; safe because a gram's
+    first byte is ASCII or a UTF-8 lead byte, so a match can never start
+    mid-character)."""
     return F.array(*[
         F.struct(
             sum((padded.contains(F.lit(g)).cast("int") for g in grams),
@@ -165,41 +122,3 @@ def with_lang_id(df: DataFrame, text_col: str, out: str = "pred_lang") -> DataFr
                     .otherwise(F.lit("und")))
         .drop("_pad", "_best")
     )
-
-
-def lang_id(text: Column) -> Column:
-    """Column-expression variant (convenient for small data; prefer
-    :func:`with_lang_id` in pipelines — it stages the trigram array)."""
-    best = F.array_max(_lang_scores(_char_trigrams(text)))
-    return F.when(best.getField("score") > 0, best.getField("lang")).otherwise(F.lit("und"))
-
-
-def doc_fingerprint(text: Column) -> Column:
-    """Stable content fingerprint: md5 of the aggressively-normalized
-    text (case/space/punct-insensitive)."""
-    return F.md5(F.regexp_replace(F.lower(text), r"[\W_]+", ""))
-
-
-def min_shingle_fingerprint(text: Column, k: int = 8) -> Column:
-    """Winnowing-style fingerprint: min xxhash64 over k-shingles —
-    robust to local edits, cheap to compare.
-
-    Column-expression convenience for short strings; in a pipeline use
-    :func:`with_min_shingle_fingerprint`, which stages the char array
-    behind a projection boundary (O(n·k)) instead of the O(n²)
-    substr-seek path."""
-    return F.array_min(F.transform(shingles(text, k), lambda s: F.xxhash64(s)))
-
-
-def with_min_shingle_fingerprint(df: DataFrame, text_col: str, *,
-                                 k: int = 8, out: str = "msf") -> DataFrame:
-    """Staged fingerprint: char-array shingling via
-    :func:`jesse_spark.operators.dedup.with_shingles` (one split per
-    row, O(k) slices — linear in document length), then min-hash.
-    Identical output to :func:`min_shingle_fingerprint`."""
-    from jesse_spark.operators.dedup import with_shingles
-
-    staged = with_shingles(df, text_col, k=k, out="_msf_sh")
-    return staged.withColumn(
-        out, F.array_min(F.transform(F.col("_msf_sh"), lambda s: F.xxhash64(s)))
-    ).drop("_msf_sh")

@@ -16,16 +16,63 @@ from jesse_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
     ivf_search,
-    ivf_topk,
-    ivf_topk_exact,
     train_ivf_centroids,
-    train_ivf_index,
 )
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
     "on the warm windowsill in the afternoon sun every single day"
 )
+
+
+# ---------------------------------------------------------------------------
+# reference pairing: collect_list buckets + nested-transform explode — the
+# formulation capped_bucket_pairs replaced, kept as its oracle
+# ---------------------------------------------------------------------------
+def bucket_pairs(buckets, ids_col: str = "ids"):
+    """Explode a bucketed id-list column into ordered (id_a < id_b)
+    pairs.  The caller is expected to have capped the list (slice) so a
+    pathological hot bucket cannot go quadratic — this is the one shape
+    shared by every LSH family (MinHash bands, SimHash chunks,
+    hyperplane buckets)."""
+    ids = F.col(ids_col)
+    return buckets.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(ids) - 1),
+                    lambda i: F.transform(
+                        F.sequence(i + 1, F.size(ids)),
+                        lambda j: F.struct(
+                            F.element_at(ids, i).alias("id_a"),
+                            F.element_at(ids, j).alias("id_b"),
+                        ),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.id_a", "p.id_b")
+
+
+def _capped_id_buckets(tagged, key_cols: list[str], *, max_bucket: int):
+    """Bucket key → sorted id list of AT MOST max_bucket ids.
+
+    Membership is capped BEFORE the aggregation: a row_number window
+    over the bucket key (ordered by id — keeps the survivor set the
+    deterministic min ids) filtered to ``<= max_bucket``, then the
+    bounded collect.  The window's sort is spillable; an uncapped
+    ``collect_list`` buffer on a degenerate hot bucket (billions of
+    identical texts → one bucket) is a single-reducer OOM at 100 TB."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*key_cols).orderBy("id")
+    capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_bucket)
+    return (
+        capped.groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -121,9 +168,7 @@ def test_capped_bucket_pairs_equals_exploded_formulation(spark):
     cap binding (min-id survivors)."""
     import random
 
-    from jesse_spark.operators.dedup import (_capped_id_buckets,
-                                             bucket_pairs,
-                                             capped_bucket_pairs)
+    from jesse_spark.operators.dedup import capped_bucket_pairs
 
     rng = random.Random(7)
     # 6 buckets across 2 key columns; one hot bucket of 40 ids (cap 10
@@ -151,10 +196,7 @@ def test_minhash_candidates_match_exploded_band_formulation(spark):
     formulation, band_votes included."""
     from pyspark.sql import functions as F
 
-    from jesse_spark.operators.dedup import (_capped_id_buckets,
-                                             bucket_pairs,
-                                             minhash_signatures,
-                                             with_shingles)
+    from jesse_spark.operators.dedup import minhash_signatures, with_shingles
     from jesse_spark.session import ensure_parallelism
 
     rows = [(i, f"some shared text plus token{i % 7} and token{i % 3}")
@@ -300,41 +342,22 @@ def test_embedding_near_dups_multi_table_recall(spark):
     assert pairs == expected
 
 
-def test_ivf_exact_equals_brute_force(vectors):
-    """Bound-based IVF is exact by construction — equality with brute
-    force must hold for any k and any (deterministic) centroids."""
-    rows = vectors.orderBy("vec_id").collect()
-    q = rows[3]["embedding"]
-    cents, radii = train_ivf_index(vectors, "embedding", "vec_id", n_cells=4,
-                                   sample=32)
-    for k in (1, 3, 7):
-        got = [(r["id"], round(r["cosine"], 9)) for r in
-               ivf_topk_exact(vectors, "embedding", "vec_id", q,
-                              centroids=cents, radii=radii, k=k).collect()]
-        exp = [(r["id"], round(r["cosine"], 9)) for r in
-               brute_force_topk(vectors, "embedding", "vec_id", q, k=k).collect()]
-        assert got == exp
-
-
 def test_ivf_index_search_equals_brute_force(vectors):
     """The cached-assignment index path must stay exact — equal to
     brute force for any k — and reuse one persisted projection."""
     rows = vectors.orderBy("vec_id").collect()
-    q = rows[5]["embedding"]
     idx = build_ivf_index(vectors, "embedding", "vec_id", n_cells=4, sample=32)
     try:
         assert idx.assigned.is_cached
-        for k in (1, 4, 9):
-            got = [(r["id"], round(r["cosine"], 9)) for r in
-                   ivf_search(idx, q, k=k).collect()]
-            exp = [(r["id"], round(r["cosine"], 9)) for r in
-                   brute_force_topk(vectors, "embedding", "vec_id", q, k=k).collect()]
-            assert got == exp
-        # index agrees with the uncached trainer on centroids + radii
-        cents, radii = train_ivf_index(vectors, "embedding", "vec_id",
-                                       n_cells=4, sample=32)
-        assert idx.centroids == cents
-        assert [round(r, 12) for r in idx.radii] == [round(r, 12) for r in radii]
+        for qi, ks in ((5, (1, 4, 9)), (3, (1, 3, 7))):
+            q = rows[qi]["embedding"]
+            for k in ks:
+                got = [(r["id"], round(r["cosine"], 9)) for r in
+                       ivf_search(idx, q, k=k).collect()]
+                exp = [(r["id"], round(r["cosine"], 9)) for r in
+                       brute_force_topk(vectors, "embedding", "vec_id", q,
+                                        k=k).collect()]
+                assert got == exp, (qi, k)
     finally:
         idx.unpersist()
 
@@ -344,16 +367,3 @@ def test_train_ivf_deterministic_under_partitioning(vectors):
     b = train_ivf_centroids(vectors.repartition(7), "embedding", "vec_id",
                             n_cells=4, sample=16)
     assert a == b
-
-
-def test_ivf_topk_recall(vectors):
-    rows = vectors.collect()
-    q = rows[0]["embedding"]
-    cents = train_ivf_centroids(vectors, "embedding", n_cells=4, sample=32)
-    got = {r["id"] for r in
-           ivf_topk(vectors, "embedding", "vec_id", q,
-                    centroids=cents, n_probe=4, k=3).collect()}
-    # n_probe == n_cells → exhaustive → exact top-3
-    exp = {r["id"] for r in
-           brute_force_topk(vectors, "embedding", "vec_id", q, k=3).collect()}
-    assert got == exp

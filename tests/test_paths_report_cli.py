@@ -611,3 +611,19 @@ def test_pyfiles_zip_imports(tmp_path):
                          capture_output=True, text=True)
     assert out.returncode == 0, out.stderr
     assert "zipimport-ok" in out.stdout
+
+
+def test_product_sources_compile_warning_free():
+    """Every jesse_spark module compiles with warnings as errors: an
+    invalid escape sequence in a plain string (``"\\w"``) is a
+    DeprecationWarning on Python 3.11 and a SyntaxWarning from 3.12."""
+    import pathlib
+    import warnings
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "jesse_spark"
+    sources = sorted(root.rglob("*.py"))
+    assert sources
+    for path in sources:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(path.read_text(encoding="utf-8"), str(path), "exec")

@@ -121,20 +121,3 @@ def test_canonical_escaping_no_collisions(spark):
                              null_is_absent=False, draft=4)
     assert tdf.select(F.coalesce(tchecks[0].pred(F.col("v")),
                                  F.lit(False)).alias("ok")).head()["ok"] is True
-
-
-def test_media_operators_survive_corrupt_payloads(spark):
-    """A sniffed-but-corrupt payload yields a null output row, never a
-    task failure that 4x-fails the job."""
-    from jesse_spark.operators import multimodal
-
-    rows = [("bad_bmp", b"BM" + b"\x01" * 20, "image", "image/bmp", 8, 8, None, None),
-            ("bad_y4m", b"YUV4MPEG2 bogus\n" + b"\x00" * 8, "video",
-             "video/x-yuv4mpeg", 8, 8, 3, None)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = multimodal.image_features(
-        media.filter(F.col("media_type") == "image")).collect()
-    assert len(feats) == 1 and feats[0]["feature"] is None
-    frames = multimodal.video_frame_sample(
-        media.filter(F.col("media_type") == "video")).collect()
-    assert [(f["frame_idx"], f["frame"]) for f in frames] == [(-1, None)]
