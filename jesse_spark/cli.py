@@ -22,8 +22,11 @@ import argparse
 import json
 import sys
 import time
+import uuid
 
 from pyspark.sql import functions as F
+
+from jesse_spark.plans.report import write_json_reports, write_violations
 
 
 def _read_input(spark, path: str):
@@ -72,7 +75,6 @@ def _compile_opts(args) -> dict:
 
 def cmd_validate(args) -> int:
     from jesse_spark.plans.pipeline import run_full_suite
-    from jesse_spark.plans.report import write_json_reports, write_violations
     from jesse_spark.session import get_spark
     from jesse_spark.sources.fixtures import codecs_df
 
@@ -85,79 +87,67 @@ def cmd_validate(args) -> int:
     codecs = _read_input(spark, args.codecs) if args.codecs else codecs_df(spark)
 
     t0 = time.time()
-    if not args.checkpoint_dir:
+    if args.checkpoint_dir:
+        from jesse_spark.plans.checkpoint import CheckpointManager, input_snapshot_id
+
+        # snapshot pinned ONCE for the whole invocation (input_ref carries
+        # the @snapshot for iceberg inputs, so reads are pinned too):
+        # processing and the final verdict must agree even if the input
+        # moves underneath us
+        snap = input_snapshot_id(spark, input_ref)
+        cm = CheckpointManager(spark, args.checkpoint_dir)
+        # outputs are scoped by run_id AND snapshot: reusing a --run-id
+        # after the input changed (new snapshot ⇒ all shards pending again)
+        # starts from an empty directory instead of next to the old
+        # snapshot's committed batches (ADVICE r2)
+        out_dir = f"{args.output}/run_id={args.run_id}/snapshot={snap}"
+        rep_dir = (f"{args.json_reports}/run_id={args.run_id}/snapshot={snap}"
+                   if args.json_reports else None)
+        extra = {"rows_this_run": _validate_checkpointed(
+            spark, args, clips, codecs, schema, cm=cm, snap=snap,
+            out_dir=out_dir, rep_dir=rep_dir)}
+        # run verdict = union of ALL completed shards' manifests, so a
+        # resumed (or re-run) invocation reports and exits on the whole
+        # run, not just the shards it happened to process
+        rows, invalid = cm.run_totals(args.run_id, snap)
+    else:
         # plain one-shot run: overwrite outputs, verdict from this run
+        out_dir, extra = args.output, {}
         res = run_full_suite(clips, codecs, schema=schema,
                              with_audio=not args.no_audio,
                              compile_opts=_compile_opts(args))
-        write_violations(res.violations, args.output)
+        write_violations(res.violations, out_dir)
         if args.json_reports:
             write_json_reports(res.validated, args.json_reports, key_col=args.key)
         verd = res.verdicts.agg(
             F.sum("rows").alias("rows"),
             F.sum("invalid_rows").alias("invalid")).head()
         rows, invalid = verd["rows"] or 0, verd["invalid"] or 0
-        print(json.dumps({
-            "rows": rows, "invalid_rows": invalid,
-            "wall_sec": round(time.time() - t0, 2),
-            "violations_path": args.output,
-        }))
-        spark.stop()
-        # halt(1) on any failing instance, like the reference CLI
-        return 1 if invalid > 0 else 0
-
-    from jesse_spark.plans.checkpoint import CheckpointManager, input_snapshot_id
-
-    # snapshot pinned ONCE for the whole invocation (input_ref carries
-    # the @snapshot for iceberg inputs, so reads are pinned too):
-    # processing and the final verdict must agree even if the input
-    # moves underneath us
-    snap = input_snapshot_id(spark, input_ref)
-    cm = CheckpointManager(spark, args.checkpoint_dir)
-    # outputs are scoped by run_id AND snapshot: reusing a --run-id
-    # after the input changed (new snapshot ⇒ all shards pending again)
-    # must not inherit stale (shard, constraint) partitions that were
-    # dirty under the old snapshot but are clean now — dynamic overwrite
-    # only replaces partitions present in the NEW write (ADVICE r2)
-    out_dir = f"{args.output}/run_id={args.run_id}/snapshot={snap}"
-    rep_dir = (f"{args.json_reports}/run_id={args.run_id}/snapshot={snap}"
-               if args.json_reports else None)
-    rows_this_run = _validate_checkpointed(spark, args, clips, codecs, schema,
-                                           cm=cm, snap=snap,
-                                           out_dir=out_dir, rep_dir=rep_dir)
-    # run verdict = union of ALL completed shards' manifests, so a
-    # resumed (or re-run) invocation reports and exits on the whole run,
-    # not just the shards it happened to process
-    rows, invalid = cm.run_totals(args.run_id, snap)
     print(json.dumps({
-        "rows": rows, "invalid_rows": invalid,
-        "rows_this_run": rows_this_run,
+        "rows": rows, "invalid_rows": invalid, **extra,
         "wall_sec": round(time.time() - t0, 2),
         "violations_path": out_dir,
     }))
     spark.stop()
+    # halt(1) on any failing instance, like the reference CLI
     return 1 if invalid > 0 else 0
 
 
 def _validate_checkpointed(spark, args, clips, codecs, schema, *, cm, snap,
                            out_dir, rep_dir) -> int:
-    """Resumable run: shards are processed in ``--shard-batches`` groups;
-    each group's violations/reports land in per-shard partitions via
-    DYNAMIC partition overwrite (completed shards' output is never
-    touched), and its manifest rows are recorded as the group finishes —
-    so a crash loses at most one in-flight group and a resume re-does
-    only shards with no manifest."""
-    import pandas as pd
-
-    from jesse_spark.plans.checkpoint import shard_expr, shard_verdicts, with_shard
+    """Resumable run in ``--shard-batches`` groups.  Each group writes
+    through the one-shot sinks to fresh ``out_dir/batch=<id>/`` and
+    ``rep_dir/batch=<id>/`` directories, then commits them with manifest
+    rows naming the id.  ``batch=*`` directories no manifest names (a
+    group that crashed before it committed) are deleted first, so a
+    resume re-does only shards with no manifest, over clean output."""
+    from jesse_spark.plans.checkpoint import shard_verdicts, with_shard
     from jesse_spark.plans.pipeline import run_full_suite
 
     done = set(cm.completed_shards(args.run_id, snap))
+    cm.sweep(args.run_id, snap, *filter(None, (out_dir, rep_dir)))
     pending = [s for s in range(args.shards) if s not in done]
     sharded = with_shard(clips, args.key, args.shards)
-    # only this run's shard partitions are replaced; completed shards
-    # from earlier (crashed/partial) invocations survive
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     n_batches = max(1, min(args.shard_batches, len(pending) or 1))
     rows_this_run = 0
@@ -166,37 +156,24 @@ def _validate_checkpointed(spark, args, clips, codecs, schema, *, cm, snap,
         if not batch:
             continue
         tb = time.time()
+        batch_id = uuid.uuid4().hex
         part = sharded.filter(F.col("_shard").isin(batch))
         res = run_full_suite(part, codecs, schema=schema,
                              with_audio=not args.no_audio,
                              compile_opts=_compile_opts(args),
                              ignore_cols=("_shard",))
-        viol = res.violations.withColumn("_shard", shard_expr(args.key, args.shards))
-        (viol.write.mode("overwrite").partitionBy("_shard", "constraint")
-         .parquet(out_dir))
+        write_violations(res.violations, f"{out_dir}/batch={batch_id}")
         if rep_dir:
-            from jesse_spark.plans.report import per_row_reports
-
-            rep = per_row_reports(res.validated, key_col=args.key).withColumn(
-                "_shard", shard_expr(args.key, args.shards))
-            rep.write.mode("overwrite").partitionBy("_shard").json(rep_dir)
+            write_json_reports(res.validated, f"{rep_dir}/batch={batch_id}",
+                               key_col=args.key)
         # manifest covers EVERY shard of the batch (incl. empty ones),
         # else a rowless shard would stay pending forever; collect once
         # (≤ |batch| tiny rows) so the suite isn't re-evaluated
-        got = {r["shard"]: r for r in shard_verdicts(res.validated).collect()}
-        sv_rows = [
-            (s,
-             int(got[s]["rows"]) if s in got else 0,
-             int(got[s]["invalid_rows"]) if s in got else 0,
-             bool(got[s]["passed"]) if s in got else True)
-            for s in batch
-        ]
-        # from pandas through Arrow: a local relation in the JVM, where a
-        # Python list would cost a Python worker stage per batch
-        svdf = spark.createDataFrame(
-            pd.DataFrame(sv_rows, columns=["shard", "rows", "invalid_rows", "passed"]),
-            "shard int, rows long, invalid_rows long, passed boolean")
-        cm.record(args.run_id, snap, svdf, wall_sec=time.time() - tb)
+        got = {r["shard"]: (r["rows"], r["invalid_rows"], r["passed"])
+               for r in shard_verdicts(res.validated).collect()}
+        sv_rows = [(s, *got.get(s, (0, 0, True))) for s in batch]
+        cm.record(args.run_id, snap, sv_rows, wall_sec=time.time() - tb,
+                  batch=batch_id)
         rows_this_run += sum(r[1] for r in sv_rows)
         # each batch persists its own narrow projection (pipeline.py);
         # release it so a many-batch run doesn't accumulate caches

@@ -3,6 +3,7 @@
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +11,9 @@ from pyspark.sql import types as T
 
 from jesse_spark.functions.paths import kvc_agg, pointer_get, pointer_tokens
 from jesse_spark.plans.report import per_row_reports
+
+# the checkout these tests live in: CLI subprocesses run its code
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_pointer_tokens_unescaping():
@@ -142,7 +146,7 @@ def test_cli_end_to_end(spark, tmp_path):
            "--input", inp, "--output", out, "--master", "local[2]",
            "--checkpoint-dir", ckpt, "--run-id", "t1", "--shards", "4",
            "--shard-batches", "2", "--json-reports", reports]
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     assert r.returncode == 1, r.stderr[-2000:]   # invalid rows → halt(1)
     stats = _cli_stats(r)
     assert stats["rows"] == n and stats["invalid_rows"] > 0
@@ -154,7 +158,7 @@ def test_cli_end_to_end(spark, tmp_path):
 
     # re-run of a completed run: nothing reprocessed, output NOT
     # clobbered, exit code still reflects the whole run's verdict
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     stats2 = _cli_stats(r2)
     assert r2.returncode == 1
     assert stats2["rows"] == n and stats2["rows_this_run"] == 0
@@ -163,11 +167,11 @@ def test_cli_end_to_end(spark, tmp_path):
 
 def test_cli_same_run_id_new_snapshot_no_stale_violations(spark, tmp_path):
     """Reusing a --run-id after the input changed must not inherit
-    stale violation partitions: a shard that was dirty under the old
-    snapshot but is clean now would survive dynamic overwrite (only
-    partitions present in the NEW write are replaced) — outputs are
-    therefore scoped by snapshot too, and the summary prints the scoped
-    path (ADVICE r2)."""
+    stale violations: the old snapshot's manifests commit its
+    ``batch=<id>`` directories, and a shard that was dirty under the old
+    snapshot but is clean now must not show them.  Outputs are therefore
+    scoped by snapshot too, and the summary prints the scoped path
+    (ADVICE r2)."""
     from jesse_spark.sources.fixtures import clips_df
 
     n = 60
@@ -179,7 +183,7 @@ def test_cli_same_run_id_new_snapshot_no_stale_violations(spark, tmp_path):
            "--input", inp, "--output", out, "--master", "local[2]",
            "--checkpoint-dir", ckpt, "--run-id", "same", "--shards", "4",
            "--no-audio"]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     stats1 = _cli_stats(r1)
     assert r1.returncode == 1 and stats1["invalid_rows"] > 0
     assert f"run_id=same/snapshot=" in stats1["violations_path"]
@@ -194,7 +198,7 @@ def test_cli_same_run_id_new_snapshot_no_stale_violations(spark, tmp_path):
     bad = [t[0] for t in expected_violations(n).values.tolist()]
     shutil.rmtree(inp)
     clips_df(spark, n).filter(~F.col("clip_id").isin(bad)).write.parquet(inp)
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     stats2 = _cli_stats(r2)
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert stats2["invalid_rows"] == 0
@@ -302,7 +306,7 @@ def test_cli_resume_skips_completed_shards(spark, tmp_path):
            "--input", inp, "--output", out, "--master", "local[2]",
            "--checkpoint-dir", ckpt, "--run-id", "t2", "--shards", str(shards),
            "--no-audio"]
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     stats = _cli_stats(r)
     remaining = n - sum(counts.get(s, 0) for s in pre_done)
     assert stats["rows_this_run"] == remaining
@@ -312,22 +316,142 @@ def test_cli_resume_skips_completed_shards(spark, tmp_path):
     assert set(r["s"] for r in v.select("s").distinct().collect()) <= {1, 3}
 
 
-def test_completed_shards_empty_store_and_unreadable_store(tmp_path):
-    """An empty manifest store answers [] without touching Spark; an
-    unreadable one still falls back to [] (re-process everything) but
-    warns with the error instead of swallowing it."""
+def _cli_in_process(monkeypatch, capsys, argv):
+    """``cli.main`` on the test session: its ``spark.stop()`` is skipped
+    and the session keeps the test session's sizing.  Returns the exit
+    code and the printed summary."""
+    from pyspark.sql import SparkSession
+
+    from jesse_spark import cli
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    rc = cli.main(argv)
+    out = capsys.readouterr().out
+    return rc, json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
+
+
+def test_cli_sweeps_uncommitted_batch_output(spark, tmp_path, monkeypatch, capsys):
+    """A ``batch=<id>`` directory that no manifest names is what a batch
+    leaves when it crashes after writing and before recording its
+    manifest.  The next run deletes it before processing anything, so
+    its rows never reach the output."""
+    from jesse_spark.plans.checkpoint import input_snapshot_id
+    from jesse_spark.plans.report import write_violations
+    from jesse_spark.sources.fixtures import clips_df, expected_violations
+
+    n = 60
+    inp = str(tmp_path / "clips")
+    clips_df(spark, n).write.parquet(inp)
+    out, reports = tmp_path / "violations", tmp_path / "reports"
+    scope = f"run_id=crash/snapshot={input_snapshot_id(spark, inp)}"
+    orphan_v, orphan_r = out / scope / "batch=deadbeef", reports / scope / "batch=deadbeef"
+    write_violations(spark.createDataFrame(
+        [("bogus-clip", "bogus", "/bogus")], "clip_id string, constraint string, path string"),
+        str(orphan_v))
+    orphan_r.mkdir(parents=True)
+    (orphan_r / "part-00000.json").write_text(
+        json.dumps({"clip_id": "bogus-clip", "result": "error", "errors": []}) + "\n")
+
+    rc, stats = _cli_in_process(monkeypatch, capsys, [
+        "validate", "--input", inp, "--output", str(out), "--json-reports", str(reports),
+        "--checkpoint-dir", str(tmp_path / "ckpt"), "--run-id", "crash",
+        "--shards", "4", "--shard-batches", "2"])
+    assert rc == 1 and stats["rows"] == n and stats["rows_this_run"] == n
+    assert not orphan_v.exists() and not orphan_r.exists()
+    exp = set(map(tuple, expected_violations(n).values.tolist()))
+    assert _violation_set(spark, str(out)) == exp
+    assert spark.read.json(str(reports)).count() == n
+
+
+def test_cli_violations_independent_of_shard_batches(spark, tmp_path, monkeypatch, capsys):
+    """One batch or three: the same violation rows, each written once."""
+    from jesse_spark.sources.fixtures import clips_df, expected_violations
+
+    n = 60
+    inp = str(tmp_path / "clips")
+    clips_df(spark, n).write.parquet(inp)
+    got = {}
+    for k in (1, 3):
+        out = str(tmp_path / f"violations-{k}")
+        rc, stats = _cli_in_process(monkeypatch, capsys, [
+            "validate", "--input", inp, "--output", out,
+            "--checkpoint-dir", str(tmp_path / f"ckpt-{k}"), "--shards", "8",
+            "--shard-batches", str(k)])
+        assert rc == 1 and stats["rows"] == n
+        rows = spark.read.parquet(out).select("clip_id", "constraint", "path").collect()
+        assert len(rows) == len(set(rows)), f"--shard-batches {k} wrote duplicates"
+        got[k] = set(map(tuple, rows))
+    assert got[1] == got[3] == set(map(tuple, expected_violations(n).values.tolist()))
+
+
+def test_cli_leaves_session_partition_overwrite_mode(spark, tmp_path, monkeypatch, capsys):
+    """A checkpointed run must not change the caller's session conf."""
+    from jesse_spark.sources.fixtures import clips_df
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")   # Spark's default, set explicitly
+    inp = str(tmp_path / "clips")
+    clips_df(spark, 20).write.parquet(inp)
+    _cli_in_process(monkeypatch, capsys, [
+        "validate", "--input", inp, "--output", str(tmp_path / "violations"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"), "--shards", "4",
+        "--shard-batches", "2", "--no-audio"])
+    assert spark.conf.get(key) == "STATIC"
+
+
+def _corrupt_store(tmp_path):
     from jesse_spark.plans.checkpoint import CheckpointManager
 
-    class Unreadable:
-        @property
-        def read(self):
-            raise OSError("manifest store is gone")
+    cm = CheckpointManager(None, str(tmp_path / "ckpt"))
+    (tmp_path / "ckpt" / "part-0.parquet").write_bytes(b"not a parquet file")
+    return cm
 
-    cm = CheckpointManager(Unreadable(), str(tmp_path / "ckpt"))
-    assert cm.completed_shards("r", "s") == []
-    (tmp_path / "ckpt" / "part-0.parquet").write_bytes(b"")
-    with pytest.warns(RuntimeWarning, match="OSError: manifest store is gone"):
+
+def test_completed_shards_empty_store_and_unreadable_store(tmp_path):
+    """An empty manifest store answers [] without touching Spark; a
+    corrupt part file still falls back to [] (re-process everything)
+    but warns with the error's type instead of swallowing it."""
+    from jesse_spark.plans.checkpoint import CheckpointManager
+
+    assert CheckpointManager(None, str(tmp_path / "ckpt")).completed_shards("r", "s") == []
+    cm = _corrupt_store(tmp_path)
+    with pytest.warns(RuntimeWarning, match="ArrowInvalid"):
         assert cm.completed_shards("r", "s") == []
+
+
+def test_run_totals_raises_on_unreadable_store(tmp_path):
+    """The run verdict feeds the exit code, so a corrupt manifest store
+    raises instead of reading as zero invalid rows; the sweep, which
+    deletes output the store does not name, raises too."""
+    import pyarrow as pa
+
+    from jesse_spark.plans.checkpoint import CheckpointManager
+
+    assert CheckpointManager(None, str(tmp_path / "ckpt")).run_totals("r", "s") == (0, 0)
+    cm = _corrupt_store(tmp_path)
+    with pytest.raises(pa.ArrowInvalid):
+        cm.run_totals("r", "s")
+    with pytest.raises(pa.ArrowInvalid):
+        cm.sweep("r", "s", str(tmp_path / "out"))
+
+
+def test_manifest_without_batch_column_still_counts(spark, tmp_path):
+    """Manifests written before the ``batch`` column existed (by Spark,
+    with eight columns) still mark their shards completed and count in
+    the run totals, next to the files written now."""
+    from jesse_spark.plans.checkpoint import CheckpointManager
+
+    d = str(tmp_path / "ckpt")
+    spark.createDataFrame(
+        [("r", "s", 0, 10, 1, False, 1.0, 1.0), ("r", "s", 3, 5, 0, True, 1.0, 1.0),
+         ("r", "other", 2, 7, 7, False, 1.0, 1.0)],
+        "run_id string, snapshot_id string, shard int, rows long, invalid_rows long, "
+        "passed boolean, wall_sec double, finished_at double").write.parquet(d)
+    cm = CheckpointManager(spark, d)
+    cm.record("r", "s", [(1, 4, 2, False)], wall_sec=0.1, batch="b1")
+    assert cm.completed_shards("r", "s") == [0, 1, 3]
+    assert cm.run_totals("r", "s") == (19, 3)
 
 
 def test_streaming_validation(spark, tmp_path):

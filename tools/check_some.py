@@ -5,10 +5,11 @@ and sf0.1 (the driver's correctness SFs).  Exit 0 iff all match."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entrymod  # noqa: E402
 from tools.check_oracles import canon  # noqa: E402
 
