@@ -256,17 +256,26 @@ def q_window_agg(spark, sf_dir):
     )
 
 
-def q_drift_psi(spark, sf_dir):
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_PSI_SQL)
+def _drift(spark, sf_dir):
+    """numeric_drift of events.value between its even and odd event_id
+    halves, over fixed histogram edges."""
+    from jesse_spark.operators.drift import numeric_drift
 
+    ev = _t(spark, sf_dir, "events")
+    return numeric_drift(ev.filter(F.col("event_id") % 2 == 0),
+                         ev.filter(F.col("event_id") % 2 == 1),
+                         "value", [10, 25, 50, 100, 200])
+
+
+def q_drift_psi(spark, sf_dir):
+    return _drift(spark, sf_dir).select(F.round("psi", 4).alias("psi"))
 
 
 def q_drift_ks(spark, sf_dir):
-    """Two-sample KS statistic over fixed histogram edges (events value
-    split by parity) — max |CDF_a - CDF_b|, all SQL-expressible."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_KS_SQL)
+    """Two-sample KS statistic (max |CDF_a - CDF_b|) over the same
+    histogram, in millionths."""
+    return _drift(spark, sf_dir).select(
+        F.floor(F.col("ks") * 1000000 + 0.5).cast("bigint").alias("ks_x1e6"))
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -335,6 +344,7 @@ def q_quality_counts(spark, sf_dir):
     # projection).  punct = length - |alnum+ws chars| over the ASCII
     # lists, exactly the [^A-Za-z0-9\s] complement.  Counts proven
     # equal (r6: 0 mismatches over sf1.0; oracle ×3 SFs).
+    # counts "_", unlike quality_features' [^\w\s]: each matches its own oracle
     ascii_alpha = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
     alpha = F.length(F.col("text")) - F.length(
         F.translate(F.col("text"), ascii_alpha, ""))
@@ -396,8 +406,7 @@ def q_simhash_near_dups(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # pigeonhole banding is exact for hamming ≤ 3; md5 token hashing is
     # bit-for-bit reproducible in the DuckDB oracle
-    return simhash_candidates(d, "text", "doc_id", max_hamming=3,
-                              hash_fn="md5").select(
+    return simhash_candidates(d, "text", "doc_id", max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
 
 
@@ -498,12 +507,11 @@ def q_quality_scores(spark, sf_dir):
 
 
 def q_streaks(spark, sf_dir):
-    """Batch analog of the stateful streaming streak operator
-    (streaming/stateful.py violation_streaks): per-user sticky
-    quarantine verdicts over ts-ordered events, valid = "not an error
-    event".  Gaps-and-islands windows + aggregations — the same
-    verdicts the applyInPandasWithState op emits after draining the
-    table as a stream."""
+    """Per-user sticky quarantine verdicts over ts-ordered events
+    (streaming/stateful.py violation_streaks_batch), valid = "not an
+    error event".  Windows + one aggregation; the tests diff it against
+    an applyInPandasWithState streak operator draining the same table
+    as a stream."""
     from jesse_spark.streaming.stateful import violation_streaks_batch
 
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -621,7 +629,7 @@ WITH d AS (
 SELECT id_a, id_b, round(j, 4) AS jaccard FROM pairs WHERE j >= 0.5
 """
 
-# bit-for-bit simhash64(hash_fn='md5') recomputation + all-pairs hamming
+# bit-for-bit md5 SimHash recomputation + all-pairs hamming
 _SIMHASH_SQL = r"""
 WITH d AS (
   SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm

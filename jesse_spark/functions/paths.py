@@ -1,55 +1,19 @@
-"""JSON-pointer path access + KVC collection aggregates.
+"""KVC collection aggregates and dot-path evaluation.
 
-Parity targets:
-
-- JSON Pointer addressing of nested values (jesse_json_path.erl:38-42,
-  301-327 incl. ~0/~1/%XX unescaping) → :func:`pointer_get` builds the
-  equivalent nested Column access against a static schema.
-- The KVC mini aggregate vocabulary ``@max @min @sum @count @avg
-  @distinctUnionOfArrays @distinctUnionOfObjects @unionOfArrays
-  @unionOfObjects`` (jesse_json_path.erl:173-209) → per-row array
-  aggregates (:func:`kvc_agg`) and, at table level, the same names map
-  onto groupBy aggregates (see __spark_entry__.q_kvc_aggregates).
+Parity target: the KVC mini aggregate vocabulary ``@max @min @sum
+@count @avg @distinctUnionOfArrays @distinctUnionOfObjects
+@unionOfArrays @unionOfObjects`` (jesse_json_path.erl:173-209) →
+per-row array aggregates (:func:`kvc_agg`) and, at table level, the
+same names map onto groupBy aggregates (see
+__spark_entry__.q_kvc_aggregates).  JSON Pointer resolution inside
+schema documents is :func:`jesse_spark.schema.parser.resolve_pointer`.
 """
 
 from __future__ import annotations
 
-import urllib.parse
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def unescape_token(tok: str) -> str:
-    """RFC 6901 + %XX unescaping (jesse_json_path.erl:38-42)."""
-    tok = urllib.parse.unquote(tok)
-    return tok.replace("~1", "/").replace("~0", "~")
-
-
-def pointer_tokens(pointer: str) -> list[str]:
-    if pointer.startswith("#"):
-        pointer = pointer[1:]
-    return [unescape_token(t) for t in pointer.split("/") if t != ""]
-
-
-def pointer_get(col: Column, dtype: T.DataType, pointer: str) -> tuple[Column, T.DataType]:
-    """Walk a JSON pointer through struct/array/map Columns; returns the
-    value Column and its static type.  Array indices are 0-based like
-    jesse's path stack (jesse_state.erl:76-81)."""
-    cur, t = col, dtype
-    for tok in pointer_tokens(pointer):
-        if isinstance(t, T.StructType):
-            if tok not in t.fieldNames():
-                raise KeyError(f"{tok!r} not in struct {t.simpleString()}")
-            cur, t = cur.getField(tok), t[tok].dataType
-        elif isinstance(t, T.ArrayType):
-            cur, t = F.get(cur, int(tok)), t.elementType
-        elif isinstance(t, T.MapType):
-            cur, t = F.element_at(cur, F.lit(tok)), t.valueType
-        else:
-            raise KeyError(f"cannot descend into {t.simpleString()} with {tok!r}")
-    return cur, t
 
 
 # ---------------------------------------------------------------------------

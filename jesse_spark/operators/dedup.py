@@ -2,9 +2,9 @@
 
 No jesse analog (its uniqueItems is per-array); these are the
 table-scale dedup family a 100 TB corpus needs.  All of them are pure
-DataFrame plans built from JVM-side expressions — the MinHash/SimHash
-signatures are higher-order-function expressions over shingle arrays,
-never Python loops.
+DataFrame plans built from JVM-side expressions — the MinHash
+signature is a higher-order-function expression over shingle arrays,
+the SimHash one an explode + codegen aggregate, never Python loops.
 
 Scale notes:
 - exact dedup shuffles one (hash, id) pair per row with map-side
@@ -313,79 +313,23 @@ def jaccard_verify(
 # ---------------------------------------------------------------------------
 # 3. SimHash (64-bit) + hamming candidates
 # ---------------------------------------------------------------------------
-def simhash64(text: Column, *, hash_fn: str = "md5") -> Column:
-    """64-bit SimHash of the token set: per bit, sum +1/-1 token votes;
-    bit set when the sum is positive.  Built as one aggregate over the
-    token array (JVM).
-
-    ``hash_fn``:
-    - ``"md5"`` (default): bit b of a token's 64-bit hash is bit
-      ``b % 4`` of hex digit ``b // 4`` of ``md5(token)``.  md5 is
-      available in every engine, so the whole simhash — and therefore
-      the near-dup pair set — is reproducible in ANSI SQL (the DuckDB
-      oracle recomputes it bit-for-bit).
-    - ``"xxhash64"``: one xxhash64 per token (cheapest; Spark-only).
-    """
-    toks = F.array_distinct(F.split(F.trim(normalized(text)), " "))
-    if hash_fn == "xxhash64":
-        tok_bits = F.transform(
-            toks,
-            lambda t: F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.call_function(
-                    "shiftright", F.xxhash64(t), b.cast("int")
-                ).bitwiseAND(F.lit(1)).cast("int"),
-            ),
-        )
-    else:
-        # 16 hex digits → 4 bits each (literal shifts keep this in
-        # whole-stage codegen; one md5 per token, evaluated once)
-        tok_bits = F.transform(
-            toks,
-            lambda t: F.flatten(
-                F.transform(
-                    F.transform(
-                        F.slice(F.split(F.md5(t), ""), 1, 16),
-                        lambda c: F.conv(c, 16, 10).cast("int"),
-                    ),
-                    lambda d: F.array(*[
-                        F.shiftright(d, s).bitwiseAND(F.lit(1)) for s in range(4)
-                    ]),
-                )
-            ),
-        )
-    # per-token bit vector → per-bit ±1 vote vector, summed via aggregate
-    votes = F.aggregate(
-        tok_bits,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, bits: F.zip_with(
-            acc, bits, lambda x, y: x + 2 * y.cast("long") - 1
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda v, b: F.when(
-                v > 0,
-                F.call_function("shiftleft", F.lit(1).cast("long"), b.cast("int")),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def _simhash_md5_exploded(df: DataFrame, text_col: str,
                           id_col: str) -> DataFrame:
-    """(id, sim) via explode + 64 scalar conditional sums — bit-for-bit
-    :func:`simhash64` with ``hash_fn="md5"`` (pinned by test), ~30%
-    faster: per token the column expression built two 64-element bit
-    arrays plus a fold allocation, while this path computes 4 chunk
-    ints from the md5 hex and lets a codegen HashAggregate keep the 64
-    vote counters (bit b = bit ``4*(3-(b//4)%4)+b%4`` of chunk
-    ``b//16``, i.e. bit b%4 of hex digit b//4 — the documented md5 bit
-    mapping).  explode_outer dodges InferFiltersFromGenerate cloning
+    """(id, sim): the 64-bit SimHash of each text's distinct token set.
+    Per bit, each token votes +1/-1 and the bit is set when the sum is
+    positive.  Bit b of a token's hash is bit ``b % 4`` of hex digit
+    ``b // 4`` of ``md5(token)``; md5 exists in every engine, so the
+    signature — and the near-dup pair set — is reproducible in ANSI SQL
+    (the DuckDB oracle recomputes it bit-for-bit).
+
+    Computed via explode + 64 scalar conditional sums, ~30% faster than
+    the equivalent column expression over the token array (the tests
+    keep that one as this function's oracle): per token it built two
+    64-element bit arrays plus a fold allocation, while this path
+    computes 4 chunk ints from the md5 hex and lets a codegen
+    HashAggregate keep the 64 vote counters (bit b = bit
+    ``4*(3-(b//4)%4)+b%4`` of chunk ``b//16``, i.e. bit b%4 of hex
+    digit b//4).  explode_outer dodges InferFiltersFromGenerate cloning
     the token expression into a pre-repartition single-task filter;
     null texts are dropped up front (their null signature could never
     produce a pair: null chunks match nothing downstream)."""
@@ -414,8 +358,7 @@ def _simhash_md5_exploded(df: DataFrame, text_col: str,
 
 
 def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
-                       *, max_hamming: int = 3, max_bucket: int = 1000,
-                       hash_fn: str = "md5") -> DataFrame:
+                       *, max_hamming: int = 3, max_bucket: int = 1000) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64 bits into 4 × 16-bit
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one chunk identical),
     bucket on (chunk_idx, chunk), pair within capped buckets, verify
@@ -428,11 +371,7 @@ def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
     from jesse_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # 64-bit vote aggregate is CPU-heavy
-    if hash_fn == "md5":
-        sh = _simhash_md5_exploded(df, text_col, id_col)
-    else:
-        sh = df.select(F.col(id_col).alias("id"),
-                       simhash64(F.col(text_col), hash_fn=hash_fn).alias("sim"))
+    sh = _simhash_md5_exploded(df, text_col, id_col)
     # carry sim (8 bytes) through the bucket rows: the signature is the
     # expensive expression — computing it once and shuffling it beats
     # joining the full table back twice for verification

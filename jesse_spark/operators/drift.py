@@ -2,84 +2,85 @@
 analog — SURVEY.md §2.5).
 
 Numeric columns: two-sample Kolmogorov-Smirnov statistic + Population
-Stability Index computed from ``approxQuantile`` histograms — each side
-is ONE sketch pass; the statistic itself is driver-side math over ≤ a
-few hundred bin edges (tiny, never a distributed op).
+Stability Index over a histogram with given bin edges — ONE aggregate
+over both sides, tagged by side, then column arithmetic on its single
+row.
 
 Categorical columns: PSI over the two frequency tables (one groupBy
-each, joined on category).
+over both sides, tagged by side).
+
+Both return a one-row DataFrame and collect nothing.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _EPS = 1e-6
 
 
-def _hist(df: DataFrame, col: str, edges: list[float]) -> list[float]:
-    """Bucket counts via ONE aggregate of width_bucket-style CASE —
-    no shuffle beyond the single-row agg."""
+def _tagged(a: DataFrame, b: DataFrame, value: Column) -> DataFrame:
+    """``(_v, _a)`` rows of both sides; ``_a`` is true on side A."""
+    return (a.select(value.alias("_v"), F.lit(True).alias("_a"))
+            .unionByName(b.select(value.alias("_v"), F.lit(False).alias("_a"))))
+
+
+def _total(n: Column) -> Column:
+    """Sum of a count array, at least 1 (an empty side divides by 1)."""
+    s = F.aggregate(n, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return F.greatest(s, F.lit(1).cast("long"))
+
+
+def _psi(na: Column, nb: Column) -> Column:
+    """PSI over two aligned per-bin count arrays:
+    Σ (pa - pb) · ln((pa + ε) / (pb + ε)) with p = n / total."""
+    ta, tb = _total(na), _total(nb)
+    terms = F.zip_with(na, nb, lambda x, y: (x / ta - y / tb)
+                       * F.ln((x / ta + _EPS) / (y / tb + _EPS)))
+    return F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
+
+
+def _cdf(n: Column) -> Column:
+    """Cumulative share per bin, from integer running counts."""
+    t = _total(n)
+    return F.transform(n, lambda _, i: F.aggregate(
+        F.slice(n, 1, i + 1), F.lit(0).cast("long"), lambda acc, x: acc + x) / t)
+
+
+def numeric_drift(a: DataFrame, b: DataFrame, col: str,
+                  edges: list[float]) -> DataFrame:
+    """One row ``(ks, psi, bins)`` comparing ``col`` of side A (the
+    baseline) with side B over the histogram cut at ``edges``.
+
+    Bins are left-closed: a value's bin is the number of edges ≤ value,
+    so ``len(edges) + 1`` bins in all.  NULL values are dropped.  KS is
+    max |CDF_a − CDF_b| over the bin grid."""
+    if not edges or any(x >= y for x, y in zip(edges, edges[1:])):
+        raise ValueError(f"edges must be non-empty and strictly increasing: {edges!r}")
+    v = F.col("_v")
     bucket = F.lit(0)
-    for i, e in enumerate(edges):
-        bucket = bucket + (F.col(col) > F.lit(e)).cast("int")
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    out = [0.0] * (len(edges) + 1)
-    for r in counts:
-        out[min(int(r["bucket"]), len(edges))] = float(r["n"])
-    return out
+    for e in edges:
+        bucket = bucket + (v >= F.lit(e)).cast("int")
+    bins = range(len(edges) + 1)
+    h = (_tagged(a, b, F.col(col)).filter(v.isNotNull())
+         .select(bucket.alias("_b"), "_a")
+         .agg(F.array(*[F.count_if((F.col("_b") == i) & F.col("_a"))
+                        for i in bins]).alias("na"),
+              F.array(*[F.count_if((F.col("_b") == i) & ~F.col("_a"))
+                        for i in bins]).alias("nb")))
+    ks = F.array_max(F.zip_with(_cdf(F.col("na")), _cdf(F.col("nb")),
+                                lambda x, y: F.abs(x - y)))
+    return h.select(ks.alias("ks"), _psi(F.col("na"), F.col("nb")).alias("psi"),
+                    F.lit(len(bins)).alias("bins"))
 
 
-def numeric_drift(
-    a: DataFrame,
-    b: DataFrame,
-    col: str,
-    *,
-    bins: int = 20,
-    rel_err: float = 0.001,
-) -> dict:
-    """Returns {'ks': float, 'psi': float, 'bins': int}.
-
-    Bin edges come from the pooled approxQuantile sketch of side A (the
-    baseline snapshot), so both sides are bucketed identically."""
-    probs = [i / bins for i in range(1, bins)]
-    edges = a.stat.approxQuantile(col, probs, rel_err)
-    edges = sorted(set(edges))
-    ha = _hist(a, col, edges)
-    hb = _hist(b, col, edges)
-    ta, tb = sum(ha) or 1.0, sum(hb) or 1.0
-    pa = [x / ta for x in ha]
-    pb = [x / tb for x in hb]
-    # KS = max |CDF_a - CDF_b| over the shared bin grid
-    ks, ca, cb = 0.0, 0.0, 0.0
-    for x, y in zip(pa, pb):
-        ca += x
-        cb += y
-        ks = max(ks, abs(ca - cb))
-    psi = sum(
-        (x - y) * math.log((x + _EPS) / (y + _EPS)) for x, y in zip(pa, pb)
-    )
-    return {"ks": ks, "psi": psi, "bins": len(edges) + 1}
-
-
-def categorical_psi(a: DataFrame, b: DataFrame, col: str) -> float:
-    """PSI over category frequency tables (one groupBy per side; the
-    join is over #categories rows — broadcast)."""
-    fa = a.groupBy(F.col(col).alias("cat")).agg(F.count(F.lit(1)).alias("na"))
-    fb = b.groupBy(F.col(col).alias("cat")).agg(F.count(F.lit(1)).alias("nb"))
-    rows = fa.join(fb, on="cat", how="full_outer").fillna(0).collect()
-    ta = sum(r["na"] for r in rows) or 1.0
-    tb = sum(r["nb"] for r in rows) or 1.0
-    return sum(
-        (r["na"] / ta - r["nb"] / tb)
-        * math.log((r["na"] / ta + _EPS) / (r["nb"] / tb + _EPS))
-        for r in rows
-    )
+def categorical_psi(a: DataFrame, b: DataFrame, col: str) -> DataFrame:
+    """One row ``(psi)`` over the category frequency tables of both
+    sides (NULL is one category)."""
+    freq = (_tagged(a, b, F.col(col)).groupBy("_v")
+            .agg(F.count_if(F.col("_a")).alias("na"),
+                 F.count_if(~F.col("_a")).alias("nb")))
+    h = freq.agg(F.collect_list(F.struct("na", "nb")).alias("h"))
+    return h.select(_psi(F.transform("h", lambda r: r["na"]),
+                         F.transform("h", lambda r: r["nb"])).alias("psi"))

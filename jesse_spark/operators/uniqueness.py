@@ -13,7 +13,8 @@ same two-phase shape:
    Partial (map-side) aggregation means each executor emits at most one
    row per distinct key per partition, so the shuffle carries ~distinct
    keys, not ~rows.  Skewed hot keys are split by AQE; for adversarial
-   skew (one key = half the table) the two-level salted variant
+   skew (one key = half the table) the salted variant runs
+   :func:`~jesse_spark.operators.skew.salted_group_agg`, which
    aggregates ``(key, salt)`` first, then ``key``.
 """
 
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jesse_spark.operators.skew import salted_group_agg
 
 
 def approx_unique_stats(df: DataFrame, key: str, *, rsd: float = 0.02) -> DataFrame:
@@ -41,22 +44,15 @@ def find_duplicates(df: DataFrame, key: str, *, salted: bool = False,
 
     salted=True pre-aggregates on (key, salt) to split a pathological
     hot key across salt_buckets reducers before the final combine
-    (SURVEY.md §4 custom item 2)."""
+    (SURVEY.md §4 custom item 2).  Both count rows, a NULL key's too."""
     if not salted:
-        return (
-            df.groupBy(F.col(key))
-            .agg(F.count(F.lit(1)).alias("dup_count"))
-            .filter(F.col("dup_count") > 1)
-        )
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    return (
-        df.withColumn("_salt", salt)
-        .groupBy(F.col(key), F.col("_salt"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(F.col(key))
-        .agg(F.sum("c").alias("dup_count"))
-        .filter(F.col("dup_count") > 1)
-    )
+        counts = df.groupBy(F.col(key)).agg(F.count(F.lit(1)).alias("dup_count"))
+    else:
+        # salted_group_agg counts column values: count a non-null literal
+        counts = salted_group_agg(
+            df.select(F.col(key), F.lit(1).alias("_row")), key, {"_row": "count"},
+            salt_buckets=salt_buckets).withColumnRenamed("_row_count", "dup_count")
+    return counts.filter(F.col("dup_count") > 1)
 
 
 def uniqueness_violations(df: DataFrame, key: str, **kw) -> DataFrame:

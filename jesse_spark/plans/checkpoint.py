@@ -132,15 +132,12 @@ class CheckpointManager:
     def record(self, run_id: str, snapshot_id: str, shard_verdicts, wall_sec: float,
                batch: str | None = None) -> None:
         """Commit one manifest file: a row per ``(shard, rows, invalid_rows,
-        passed)`` of ``shard_verdicts`` (tuples or a DataFrame), tagged with
-        the ``batch`` whose output directory it commits.  Written under a
-        temporary name and renamed: a crash never leaves half a part."""
+        passed)`` tuple of ``shard_verdicts``, tagged with the ``batch``
+        whose output directory it commits.  Written under a temporary name
+        and renamed: a crash never leaves half a part."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if isinstance(shard_verdicts, DataFrame):
-            shard_verdicts = shard_verdicts.select(
-                "shard", "rows", "invalid_rows", "passed").collect()
         now = time.time()
         rows = [{"run_id": run_id, "snapshot_id": snapshot_id, "shard": s, "rows": n,
                  "invalid_rows": i, "passed": p, "wall_sec": float(wall_sec),

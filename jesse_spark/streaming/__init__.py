@@ -1,11 +1,3 @@
-from jesse_spark.streaming.stateful import (
-    violation_streaks,
-    violation_streaks_batch,
-)
-from jesse_spark.streaming.validate_stream import (
-    streaming_verdicts,
-    validate_stream,
-)
+from jesse_spark.streaming.stateful import violation_streaks_batch
 
-__all__ = ["validate_stream", "streaming_verdicts", "violation_streaks",
-           "violation_streaks_batch"]
+__all__ = ["violation_streaks_batch"]

@@ -1,105 +1,23 @@
-"""Custom stateful streaming operator: per-key violation streaks.
+"""Per-key violation streaks over a validated table.
 
-The reference has no streaming at all; this is north-star surface — the
-``applyInPandasWithState`` slot for operators the built-in windowed
-aggregates cannot express.  A *consecutive-invalid streak* is the
-canonical example: whether a key is quarantined depends on the ORDER of
-its rows across micro-batches, which no groupBy aggregate carries.
+A *consecutive-invalid streak* is the canonical order-dependent check:
+whether a key is quarantined depends on the ORDER of its rows, which no
+plain groupBy aggregate carries.  :func:`violation_streaks_batch`
+computes it with windows and one aggregation.  The engine runs no
+streaming queries (SURVEY.md §2.5: resumability comes from snapshot
+pinning and per-partition checkpoint manifests); the tests keep an
+``applyInPandasWithState`` formulation of the same state machine as
+this operator's stream-vs-batch oracle.
 
 State per key: (rows, invalid_rows, streak, quarantined).  A key whose
 streak of invalid rows reaches ``quarantine_after`` is flagged
 quarantined and stays flagged (sticky) — the upstream feed for that
 key needs human attention even if later rows recover.
-
-Rows are ordered by ``ts_col`` INSIDE each micro-batch — the whole
-group is materialized and sorted once (a key's rows can span several
-Arrow chunks whose relative order is arbitrary shuffle order, so
-per-chunk sorting would be wrong); cross-batch order is the stream's
-trigger order, as with any stateful streaming operator.  Memory note:
-this buffers one key's per-trigger rows (3 narrow columns) — bound the
-trigger interval, not the key cardinality, if a single key can exceed
-executor memory in one trigger.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-OUT_SCHEMA = T.StructType([
-    T.StructField("key", T.StringType()),
-    T.StructField("rows", T.LongType()),
-    T.StructField("invalid_rows", T.LongType()),
-    T.StructField("streak", T.LongType()),
-    T.StructField("quarantined", T.BooleanType()),
-])
-
-STATE_SCHEMA = T.StructType([
-    T.StructField("rows", T.LongType()),
-    T.StructField("invalid_rows", T.LongType()),
-    T.StructField("streak", T.LongType()),
-    T.StructField("quarantined", T.BooleanType()),
-])
-
-
-def violation_streaks(
-    validated: DataFrame,
-    *,
-    key_col: str,
-    ts_col: str,
-    valid_col: str = "valid",
-    quarantine_after: int = 3,
-) -> DataFrame:
-    """``validated`` (streaming, post-:func:`validate_stream`) →
-    one update row per key per trigger with the running streak state."""
-
-    def track(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rows, invalid, streak, quarantined = state.get
-        else:
-            rows, invalid, streak, quarantined = 0, 0, 0, False
-        # A key's rows within one micro-batch can span multiple Arrow
-        # chunks (default ~10k rows each) and chunk-to-chunk order is
-        # arbitrary shuffle order — sorting each chunk independently
-        # would compute the streak in wrong row order for keys with
-        # >1 chunk per trigger.  Materialize the whole group, sort once.
-        chunks = list(pdfs)
-        group = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        if len(group):
-            group = group.sort_values(ts_col)
-            # NULL valid ≡ NOT valid — same coalesce-to-False semantic
-            # as violation_streaks_batch (None arrives as object-dtype
-            # None or float NaN depending on the Arrow path; both must
-            # read invalid, and bare NaN is truthy, so normalize)
-            for ok in group[valid_col].to_numpy():
-                rows += 1
-                if ok is not None and ok == ok and bool(ok):
-                    streak = 0
-                else:
-                    invalid += 1
-                    streak += 1
-                    if streak >= quarantine_after:
-                        quarantined = True
-        state.update((int(rows), int(invalid), int(streak), bool(quarantined)))
-        yield pd.DataFrame([{
-            "key": key[0], "rows": rows, "invalid_rows": invalid,
-            "streak": streak, "quarantined": quarantined,
-        }])
-
-    return (
-        validated.select(key_col, ts_col, valid_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            track,
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
 
 
 def violation_streaks_batch(
@@ -111,17 +29,17 @@ def violation_streaks_batch(
     tiebreak_cols: tuple[str, ...] = (),
     quarantine_after: int = 3,
 ) -> DataFrame:
-    """Deterministic batch analog of :func:`violation_streaks` — the
-    same sticky-quarantine verdicts computed over a complete, static
-    table, as plain windows + one aggregation (no Python in the plan).
+    """Sticky-quarantine streak verdicts per key over a complete,
+    static table, as plain windows + one aggregation (no Python in the
+    plan).
 
     Per-row streak via running sums (no islands sub-grouping): with
     ``s`` = cumulative invalid count in ts order and ``m`` = running
     max of ``s`` AT valid rows, the consecutive-invalid streak ending
     at an invalid row is ``s - coalesce(m, 0)`` (the invalid rows since
     the last valid one), and 0 at a valid row.  Then one groupBy(key):
-    ``quarantined`` iff max(streak) >= quarantine_after (the streaming
-    op's sticky flag) and ``streak`` = the LAST row's value (max_by ts).
+    ``quarantined`` iff max(streak) >= quarantine_after (the sticky
+    flag) and ``streak`` = the LAST row's value (max_by ts).
 
     Scale: the window's hash partitioning on the key satisfies the
     final aggregation's distribution, so the whole plan runs in ONE
@@ -133,8 +51,8 @@ def violation_streaks_batch(
     from pyspark.sql import functions as F
 
     # NULL valid ≡ NOT valid (a row whose verdict is unknown continues
-    # the streak) — coalesced here AND in the streaming op so both
-    # paths share one semantic instead of the sum/when split a raw
+    # the streak) — coalesced here AND in the tests' streaming oracle
+    # so both share one semantic instead of the sum/when split a raw
     # NULL would produce (counted by neither branch).
     valid = F.coalesce(F.col(valid_col), F.lit(False))
     invalid_l = (~valid).cast("long")

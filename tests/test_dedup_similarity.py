@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from jesse_spark.operators.dedup import (
@@ -10,6 +11,7 @@ from jesse_spark.operators.dedup import (
     drop_exact_duplicates,
     jaccard_verify,
     minhash_lsh_candidates,
+    normalized,
     simhash_candidates,
 )
 from jesse_spark.operators.similarity import (
@@ -297,30 +299,76 @@ def test_simhash_bucket_cap_bounded(spark):
     assert max(ids) < 64
 
 
+# ---------------------------------------------------------------------------
+# reference SimHash: one column expression over the token array — the
+# formulation _simhash_md5_exploded replaced, kept as its oracle
+# ---------------------------------------------------------------------------
+def simhash64(text: Column) -> Column:
+    """64-bit SimHash of the token set: per bit, sum +1/-1 token votes;
+    bit set when the sum is positive.  Built as one aggregate over the
+    token array (JVM).  Bit b of a token's 64-bit hash is bit ``b % 4``
+    of hex digit ``b // 4`` of ``md5(token)``."""
+    toks = F.array_distinct(F.split(F.trim(normalized(text)), " "))
+    # 16 hex digits → 4 bits each (literal shifts keep this in
+    # whole-stage codegen; one md5 per token, evaluated once)
+    tok_bits = F.transform(
+        toks,
+        lambda t: F.flatten(
+            F.transform(
+                F.transform(
+                    F.slice(F.split(F.md5(t), ""), 1, 16),
+                    lambda c: F.conv(c, 16, 10).cast("int"),
+                ),
+                lambda d: F.array(*[
+                    F.shiftright(d, s).bitwiseAND(F.lit(1)) for s in range(4)
+                ]),
+            )
+        ),
+    )
+    # per-token bit vector → per-bit ±1 vote vector, summed via aggregate
+    votes = F.aggregate(
+        tok_bits,
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, bits: F.zip_with(
+            acc, bits, lambda x, y: x + 2 * y.cast("long") - 1
+        ),
+    )
+    return F.aggregate(
+        F.zip_with(
+            votes,
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda v, b: F.when(
+                v > 0,
+                F.call_function("shiftleft", F.lit(1).cast("long"), b.cast("int")),
+            ).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc.bitwiseOR(x),
+    )
+
+
 def test_simhash_exploded_sig_matches_column_expression(spark):
     """r6 pins: the explode + conditional-sum md5 signature is
-    bit-for-bit simhash64(hash_fn='md5'), including empty strings and
-    unicode tokens."""
-    from jesse_spark.operators.dedup import (_simhash_md5_exploded,
-                                             simhash64)
+    bit-for-bit simhash64, including empty strings and unicode
+    tokens."""
+    from jesse_spark.operators.dedup import _simhash_md5_exploded
 
     rows = [(0, "the quick brown fox"), (1, ""), (2, "  spaced   out  "),
             (3, "тест слово при über naïve"), (4, "one"),
             (5, "a a a repeated a tokens a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     want = {r["doc_id"]: r["sim"] for r in df.select(
-        "doc_id", simhash64(F.col("text"), hash_fn="md5").alias("sim")).collect()}
+        "doc_id", simhash64(F.col("text")).alias("sim")).collect()}
     got = {r["id"]: r["sim"]
            for r in _simhash_md5_exploded(df, "text", "doc_id").collect()}
     assert want == got
 
 
-def test_simhash_hash_fns_agree_on_clear_dups(docs):
-    for fn in ("md5", "xxhash64"):
-        pairs = {(r["id_a"], r["id_b"])
-                 for r in simhash_candidates(docs, "text", "doc_id",
-                                             max_hamming=6, hash_fn=fn).collect()}
-        assert (0, 1) in pairs
+def test_simhash_finds_clear_dups(docs):
+    pairs = {(r["id_a"], r["id_b"])
+             for r in simhash_candidates(docs, "text", "doc_id",
+                                         max_hamming=6).collect()}
+    assert (0, 1) in pairs
 
 
 def test_embedding_near_dups_multi_table_recall(spark):

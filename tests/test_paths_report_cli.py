@@ -1,4 +1,6 @@
-"""JSON-pointer access, KVC aggregates, report sink, CLI, streaming."""
+"""KVC aggregates, report sink, CLI, checkpoints, and streak verdicts
+(the batch operator, and the tests' streaming oracle run on file
+streams)."""
 
 import json
 import subprocess
@@ -9,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jesse_spark.functions.paths import kvc_agg, pointer_get, pointer_tokens
+from jesse_spark.functions.paths import kvc_agg
 from jesse_spark.plans.report import per_row_reports
 
 # the checkout these tests live in: CLI subprocesses run its code
@@ -18,23 +20,13 @@ ROOT = Path(__file__).resolve().parents[1]
 
 def test_pointer_tokens_unescaping():
     # jesse_json_path.erl:38-42: %XX then ~1 then ~0
-    assert pointer_tokens("/a~1b/c~0d/e%20f") == ["a/b", "c~d", "e f"]
-    assert pointer_tokens("#/x/0") == ["x", "0"]
+    from jesse_spark.schema.parser import resolve_pointer
 
-
-def test_pointer_get(spark):
-    df = spark.createDataFrame(
-        [({"a": {"b": [10, 20, 30]}, "m": {"k": "v"}},)],
-        T.StructType([T.StructField("value", T.StructType([
-            T.StructField("a", T.StructType([
-                T.StructField("b", T.ArrayType(T.LongType()))])),
-            T.StructField("m", T.MapType(T.StringType(), T.StringType())),
-        ]))]))
-    col, t = pointer_get(F.col("value"), df.schema["value"].dataType, "/a/b/1")
-    assert df.select(col.alias("x")).head()["x"] == 20
-    assert isinstance(t, T.LongType)
-    col, _ = pointer_get(F.col("value"), df.schema["value"].dataType, "/m/k")
-    assert df.select(col.alias("x")).head()["x"] == "v"
+    doc = {"a/b": {"c~d": {"e f": 1}}, "x": [5, 6], "~1": 7}
+    assert resolve_pointer(doc, "/a~1b/c~0d/e%20f")[0] == 1
+    assert resolve_pointer(doc, "#/x/0")[0] == 5
+    # ~01 is "~1" (~1 is unescaped before ~0), not "~" + "/"
+    assert resolve_pointer(doc, "/~01")[0] == 7
 
 
 def test_kvc_aggregates(spark):
@@ -297,9 +289,8 @@ def test_cli_resume_skips_completed_shards(spark, tmp_path):
               .groupBy("_shard").count().collect()}
     pre_done = [0, 2]
     cm = CheckpointManager(spark, ckpt)
-    cm.record("t2", snap, spark.createDataFrame(
-        [(s, counts.get(s, 0), 0, True) for s in pre_done],
-        "shard int, rows long, invalid_rows long, passed boolean"), wall_sec=0.0)
+    cm.record("t2", snap, [(s, counts.get(s, 0), 0, True) for s in pre_done],
+              wall_sec=0.0)
 
     out = str(tmp_path / "violations")
     cmd = [sys.executable, "-m", "jesse_spark.cli", "validate",
@@ -454,32 +445,6 @@ def test_manifest_without_batch_column_still_counts(spark, tmp_path):
     assert cm.run_totals("r", "s") == (19, 3)
 
 
-def test_streaming_validation(spark, tmp_path):
-    """readStream → compiled checks → windowed verdicts (availableNow)."""
-    from jesse_spark.streaming import streaming_verdicts, validate_stream
-
-    src = str(tmp_path / "stream_src")
-    df = spark.range(100).select(
-        F.col("id"),
-        F.when(F.col("id") % 10 == 0, None).otherwise(F.concat(F.lit("n"), F.col("id"))).alias("name"),
-        (F.lit("2024-01-01 00:00:00").cast("timestamp")
-         + F.make_interval(mins=(F.col("id") % 3).cast("int"))).alias("ingest_ts"),
-    )
-    df.write.parquet(src)
-    schema = {"type": "object", "required": ["name"],
-              "properties": {"name": {"type": "string", "pattern": "^n"}}}
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    validated = validate_stream(stream, schema)
-    verdicts = streaming_verdicts(validated, ts_col="ingest_ts", window="1 minute")
-    q = (verdicts.writeStream.format("memory").queryName("verd")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("select * from verd order by window_start").collect()
-    assert sum(r["rows"] for r in rows) == 100
-    assert sum(r["invalid_rows"] for r in rows) == 10
-    assert len(rows) == 3 and not any(r["passed"] for r in rows)
-
-
 def test_iceberg_gated_source():
     """iceberg:<table>[@snapshot] parsing → format('iceberg') +
     snapshot-id option (gate mocked: no Iceberg jar in this sandbox)."""
@@ -567,7 +532,9 @@ def test_stateful_streaks_span_multiple_arrow_chunks(spark, tmp_path):
     top out at streak 2 and never quarantine."""
     from pyspark.sql import functions as F
 
-    from jesse_spark.streaming import validate_stream, violation_streaks
+    from jesse_spark.compiler import compile_checks
+    from jesse_spark.plans.validate import with_violations
+    from tests.test_streak_equivalence import violation_streaks
 
     src = str(tmp_path / "stream_src3")
     df = spark.range(24).select(
@@ -587,7 +554,8 @@ def test_stateful_streaks_span_multiple_arrow_chunks(spark, tmp_path):
         schema = {"type": "object", "required": ["name"],
                   "properties": {"name": {"type": "string"}}}
         stream = spark.readStream.schema(df.schema).parquet(src)
-        validated = validate_stream(stream, schema)
+        validated = with_violations(
+            stream, compile_checks(schema, stream.schema, null_is_absent=True))
         streaks = violation_streaks(validated, key_col="source",
                                     ts_col="ingest_ts", quarantine_after=3)
         q = (streaks.writeStream.format("memory").queryName("streaks_chunks")
@@ -608,7 +576,9 @@ def test_stateful_violation_streaks(spark, tmp_path):
     built-in aggregate can express."""
     from pyspark.sql import functions as F
 
-    from jesse_spark.streaming import validate_stream, violation_streaks
+    from jesse_spark.compiler import compile_checks
+    from jesse_spark.plans.validate import with_violations
+    from tests.test_streak_equivalence import violation_streaks
 
     src = str(tmp_path / "stream_src2")
     # key A: 3 consecutive invalid (ids 3,4,5) → quarantined, then recovers
@@ -627,7 +597,8 @@ def test_stateful_violation_streaks(spark, tmp_path):
     schema = {"type": "object", "required": ["name"],
               "properties": {"name": {"type": "string"}}}
     stream = spark.readStream.schema(df.schema).parquet(src)
-    validated = validate_stream(stream, schema)
+    validated = with_violations(
+        stream, compile_checks(schema, stream.schema, null_is_absent=True))
     streaks = violation_streaks(validated, key_col="source", ts_col="ingest_ts",
                                 quarantine_after=3)
     q = (streaks.writeStream.format("memory").queryName("streaks")

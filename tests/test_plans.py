@@ -118,6 +118,18 @@ def test_simhash_near_dups_no_cartesian_capped_buckets(spark, queries):
     assert p.count("Exchange") <= 7
 
 
+@pytest.mark.parametrize("name", ["minhash_near_dups", "embedding_near_dups",
+                                  "simhash_near_dups"])
+def test_near_dups_pairing_reuses_exchange(spark, queries, name):
+    # the printed plans above carry the shared bucket subtree once per
+    # self-join side; after execution AQE must reuse its exchange, or
+    # that subtree is shuffled twice
+    df = queries[name](spark, SF)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in final
+
+
 # ---------------------------------------------------------------------------
 # top-k: TakeOrdered, never a global sort
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ as a multi-trigger file stream with adversarial intra-batch order, and
 the final per-key state is diffed — field for field — against the
 DuckDB-oracled batch analog ``violation_streaks_batch`` on the same
 input.  The r3 chunk-ordering bug lived exactly on this seam
-(stateful.py materialize-then-sort); small in-test corpora can miss
+(the streaming operator's materialize-then-sort); small in-test corpora can miss
 chunk-boundary bugs that only appear when a key's rows straddle many
 chunks in one trigger.
 
@@ -15,18 +15,104 @@ Stream contract honored by the harness: WITHIN a trigger rows may
 arrive in any order (the operator sorts); ACROSS triggers time must
 move forward (trigger order is stream order) — so files are split on
 contiguous ts ranges but shuffled internally.
+
+The streaming operator lives here, not in the product: the engine runs
+no streaming queries, and this ``applyInPandasWithState`` formulation
+of the streak state machine is the oracle the batch operator is diffed
+against.
 """
 
 from __future__ import annotations
 
 import time
+from typing import Iterator
 
-from pyspark.sql import Window
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("invalid_rows", T.LongType()),
+    T.StructField("streak", T.LongType()),
+    T.StructField("quarantined", T.BooleanType()),
+])
+
+STATE_SCHEMA = T.StructType([
+    T.StructField("rows", T.LongType()),
+    T.StructField("invalid_rows", T.LongType()),
+    T.StructField("streak", T.LongType()),
+    T.StructField("quarantined", T.BooleanType()),
+])
+
+
+def violation_streaks(
+    validated: DataFrame,
+    *,
+    key_col: str,
+    ts_col: str,
+    valid_col: str = "valid",
+    quarantine_after: int = 3,
+) -> DataFrame:
+    """``validated`` (a streaming DataFrame with ``valid_col``) → one
+    update row per key per trigger with the running streak state.
+
+    Rows are ordered by ``ts_col`` INSIDE each micro-batch — the whole
+    group is materialized and sorted once (a key's rows can span several
+    Arrow chunks whose relative order is arbitrary shuffle order, so
+    per-chunk sorting would be wrong); cross-batch order is the stream's
+    trigger order, as with any stateful streaming operator."""
+
+    def track(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            rows, invalid, streak, quarantined = state.get
+        else:
+            rows, invalid, streak, quarantined = 0, 0, 0, False
+        # A key's rows within one micro-batch can span multiple Arrow
+        # chunks (default ~10k rows each) and chunk-to-chunk order is
+        # arbitrary shuffle order — sorting each chunk independently
+        # would compute the streak in wrong row order for keys with
+        # >1 chunk per trigger.  Materialize the whole group, sort once.
+        chunks = list(pdfs)
+        group = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
+        if len(group):
+            group = group.sort_values(ts_col)
+            # NULL valid ≡ NOT valid — same coalesce-to-False semantic
+            # as violation_streaks_batch (None arrives as object-dtype
+            # None or float NaN depending on the Arrow path; both must
+            # read invalid, and bare NaN is truthy, so normalize)
+            for ok in group[valid_col].to_numpy():
+                rows += 1
+                if ok is not None and ok == ok and bool(ok):
+                    streak = 0
+                else:
+                    invalid += 1
+                    streak += 1
+                    if streak >= quarantine_after:
+                        quarantined = True
+        state.update((int(rows), int(invalid), int(streak), bool(quarantined)))
+        yield pd.DataFrame([{
+            "key": key[0], "rows": rows, "invalid_rows": invalid,
+            "streak": streak, "quarantined": quarantined,
+        }])
+
+    return (
+        validated.select(key_col, ts_col, valid_col)
+        .groupBy(key_col)
+        .applyInPandasWithState(
+            track,
+            outputStructType=OUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf="NoTimeout",
+        )
+    )
+
 
 
 def test_streaks_stream_equals_batch_10k(spark, tmp_path):
-    from jesse_spark.streaming import violation_streaks
     from jesse_spark.streaming.stateful import violation_streaks_batch
 
     ev = (

@@ -47,6 +47,19 @@ def test_uniqueness_two_phase(spark, lineitem):
     assert find_duplicates(orders, "o_orderkey").count() == 0
 
 
+def test_find_duplicates_salted_equals_plain(spark):
+    """The salted path counts rows exactly like the plain one: a hot
+    key, ordinary duplicates, and a NULL key repeated 3 times."""
+    rows = ([("hot", i) for i in range(500)] + [("k1", 1), ("k1", 2)]
+            + [("u1", 1), ("u2", 1)] + [(None, i) for i in range(3)])
+    df = spark.createDataFrame(rows, "k string, v long")
+    plain = sorted(find_duplicates(df, "k").collect(), key=str)
+    salted = sorted(find_duplicates(df, "k", salted=True, salt_buckets=8).collect(),
+                    key=str)
+    assert plain == salted
+    assert {r["k"]: r["dup_count"] for r in salted} == {"hot": 500, "k1": 2, None: 3}
+
+
 def test_ri_joins(spark):
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     customer = spark.read.parquet(f"{SF}/customer.parquet")
@@ -58,19 +71,66 @@ def test_ri_joins(spark):
     assert "Broadcast" in plan  # dim side must broadcast
 
 
+def sketch_edges(df, col, bins=20):
+    """Bin edges at the baseline's approximate quantiles."""
+    probs = [i / bins for i in range(1, bins)]
+    return sorted(set(df.stat.approxQuantile(col, probs, 0.001)))
+
+
 def test_drift_identical_vs_shifted(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     a = ev.filter(F.col("event_id") % 2 == 0)
     b = ev.filter(F.col("event_id") % 2 == 1)
-    same = numeric_drift(a, b, "value")
+    edges = sketch_edges(a, "value")
+    same = numeric_drift(a, b, "value", edges).head()
     # even/odd halves of ~3k rows each: sampling noise keeps PSI small
     assert same["psi"] < 0.1 and same["ks"] < 0.1
+    assert same["bins"] == len(edges) + 1
     shifted = b.withColumn("value", F.col("value") * 3 + 100)
-    diff = numeric_drift(a, shifted, "value")
+    diff = numeric_drift(a, shifted, "value", edges).head()
     assert diff["psi"] > 0.5 and diff["ks"] > 0.3
-    assert categorical_psi(a, b, "event_type") < 0.05
+    assert categorical_psi(a, b, "event_type").head()["psi"] < 0.05
     assert categorical_psi(
-        a, b.withColumn("event_type", F.lit("zzz")), "event_type") > 1.0
+        a, b.withColumn("event_type", F.lit("zzz")), "event_type").head()["psi"] > 1.0
+
+
+def test_drift_value_on_edge_lands_in_upper_bin(spark):
+    """Bins are left-closed like the oracle's ``CASE WHEN value < e``:
+    a value equal to an edge counts in the bin above it.  KS and PSI
+    equal the oracle SQL's on the same rows, run in DuckDB."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    # side A (even event_id) sits exactly on every edge, side B just
+    # above; a right-closed histogram would put A one bin lower
+    side_a = [10.0, 10.0, 25.0, 50.0, 100.0, 200.0, 5.0, 300.0, 7.0]
+    side_b = [10.5, 12.0, 30.0, 60.0, 150.0, 250.0, 5.0, 1.0, 2.0, 3.0]
+    rows = ([(2 * i, v) for i, v in enumerate(side_a)]
+            + [(2 * i + 1, v) for i, v in enumerate(side_b)])
+    ev = spark.createDataFrame(rows, "event_id long, value double")
+    got = numeric_drift(ev.filter(F.col("event_id") % 2 == 0),
+                        ev.filter(F.col("event_id") % 2 == 1),
+                        "value", [10, 25, 50, 100, 200]).head()
+    con = duckdb.connect()
+    con.register("events", ev.toPandas())
+    (want_psi,), = con.execute(E._PSI_SQL).fetchall()
+    (want_ks,), = con.execute(E._KS_SQL).fetchall()
+    assert got["bins"] == 6
+    assert int(got["ks"] * 1_000_000 + 0.5) == want_ks
+    assert round(got["psi"], 4) == pytest.approx(want_psi, abs=1e-9)
+    # the edge rows alone: identical bins on both sides → no drift
+    on_edge = spark.createDataFrame([(v,) for v in (10.0, 25.0, 200.0)], "value double")
+    above = spark.createDataFrame([(v,) for v in (24.9, 49.9, 300.0)], "value double")
+    assert numeric_drift(on_edge, above, "value", [10, 25, 50, 100, 200]).head()["ks"] == 0.0
+
+
+def test_numeric_drift_rejects_unsorted_edges(spark):
+    df = spark.createDataFrame([(1.0,)], "value double")
+    with pytest.raises(ValueError):
+        numeric_drift(df, df, "value", [25, 10])
+    with pytest.raises(ValueError):
+        numeric_drift(df, df, "value", [])
 
 
 def test_checkpoint_resume(spark, tmp_path, lineitem):
@@ -82,7 +142,7 @@ def test_checkpoint_resume(spark, tmp_path, lineitem):
     # complete shards 0-3
     done = shard_verdicts(df.filter(F.col("_shard") < 4)
                           .withColumn("valid", F.lit(True)))
-    cm.record("run1", snap, done, wall_sec=1.0)
+    cm.record("run1", snap, done.collect(), wall_sec=1.0)
     pending = cm.pending(df, "run1", snap)
     assert pending.count() == df.filter(F.col("_shard") >= 4).count()
     assert set(cm.completed_shards("run1", snap)) == {0, 1, 2, 3}
