@@ -30,7 +30,7 @@ Design rules (scale-first):
 from __future__ import annotations
 
 import re as _pyre
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -78,7 +78,7 @@ def _warn_ref_unroll(depth: int) -> None:
         "deeper than the unroll fail CLOSED with violation code "
         "'ref_unroll_exceeded'.  Pass ref_unroll_max to "
         "compile_checks/validate to raise the unroll depth.",
-        stacklevel=3)
+        stacklevel=4)
 
 
 # Constructs whose support or semantics differ across the regex
@@ -306,16 +306,16 @@ class Check:
     pred: Builder
     observed: Builder
 
-    def prefixed(self, prefix: str, wrap: Callable[[Builder], Builder]) -> "Check":
-        return Check(self.constraint, prefix + self.path, wrap(self.pred), wrap(self.observed))
+
+# compile one subschema in the caller's mode (typed: at a fixed dtype)
+CompileSub = Callable[[Any, "Ctx"], "list[Check]"]
 
 
-@dataclass
+@dataclass(frozen=True)
 class Ctx:
     draft: int
     registry: SchemaRegistry | None = None
     root: Any = None
-    extra_formats: dict[str, Builder] = field(default_factory=dict)
     # current base-URI scope ($id/id combined on every descent —
     # jesse_state.erl:176-196 set_current_schema → combine_id)
     scope: str | None = None
@@ -323,8 +323,9 @@ class Ctx:
     anyof_detail_max: int | None = None
     # ids of $ref targets on the current descent stack (cycle detection)
     ref_seen: tuple = ()
-    # total $ref inlinings this compile (SHARED across the whole tree —
-    # replace()-copied contexts alias the same list on purpose)
+    # total $ref inlinings this compile (the one mutable field: SHARED
+    # across the whole tree — replace()-derived contexts alias the same
+    # list on purpose)
     ref_expansions: list = field(default_factory=lambda: [0])
     # recursive-$ref unroll budget (compile option; None → module default)
     ref_unroll_max: int | None = None
@@ -642,51 +643,13 @@ def compile_checks(
         checks.append(Check(constraint, _path + path, pred,
                             observed or (lambda c: _as_str(c))))
 
-    # ---- $ref (compile-time inlining; jesse_state.erl:206-259) ----------
-    if "$ref" in schema:
-        if (ctx.registry is None and ctx.scope is None
-                and not str(schema["$ref"]).startswith("#")):
-            raise SchemaError(E.SCHEMA_NOT_FOUND, schema["$ref"])
-        reg = ctx.registry or SchemaRegistry()
-        target, new_root, new_scope = reg.resolve_ref(
-            schema["$ref"], ctx.root, scope=ctx.scope)
-        # Recursive refs (jesse resolves lazily, jesse_state.erl:206-259;
-        # plan inlining can't) are UNROLLED: each revisit of the same
-        # target node spends one unit of the unroll budget; at the
-        # budget a single fail-closed check replaces the subtree, so an
-        # instance nested deeper than the unroll is flagged (code
-        # ref_unroll_exceeded) rather than silently accepted.  The pred
-        # sits under the ancestors' presence guards, so only instances
-        # that actually REACH the cutoff depth fire it.
-        # ref_seen holds the resolved TARGET NODES themselves (not
-        # id()s): the tuple's strong references guarantee no node on
-        # the stack is collected, so identity comparison can't be
-        # fooled by CPython id reuse, regardless of whether the
-        # registry keeps documents alive.
-        if sum(1 for t in ctx.ref_seen if t is target) >= ctx.unroll_max:
-            _warn_ref_unroll(ctx.unroll_max)
-            return [Check(E.REF_UNROLL_EXCEEDED, _path,
-                          lambda v: F.lit(False), _as_str)]
-        if len({id(t) for t in ctx.ref_seen}) >= MAX_REF_DEPTH:
-            raise SchemaError("schema_unsupported",
-                              f"$ref chain deeper than {MAX_REF_DEPTH}")
-        ctx.ref_expansions[0] += 1
-        if ctx.ref_expansions[0] > _REF_EXPANSION_BUDGET:
-            raise SchemaError(
-                "schema_unsupported",
-                f"$ref expansion exceeds {_REF_EXPANSION_BUDGET} nodes "
-                "(a schema with many refs per level grows ~k^unroll); "
-                "lower ref_unroll_max to bound the inlined plan")
-        # a remote document re-dispatches its own $schema dialect
-        # (jesse_state.erl:233-241; CHANGELOG.md:61-63)
-        new_draft = (ctx.draft if new_root is ctx.root
-                     else detect_draft(new_root, default=ctx.draft))
-        from dataclasses import replace
+    def compile_sub(s: Any, c: Ctx) -> list[Check]:
+        return compile_checks(s, dtype, null_is_absent=null_is_absent,
+                              _ctx=c, _path=_path)
 
-        sub = replace(ctx, draft=new_draft, root=new_root,
-                      scope=new_scope, ref_seen=ctx.ref_seen + (target,))
-        return [c.prefixed("", lambda p: p) for c in compile_checks(
-            target, dtype, null_is_absent=null_is_absent, _ctx=sub, _path=_path)]
+    inlined = _ref_checks(schema, ctx, _path, compile_sub, _as_str)
+    if inlined is not None:
+        return inlined
 
     st = json_types_of(dtype)
     is_str = "string" in st
@@ -771,7 +734,7 @@ def compile_checks(
             add(E.NO_MATCH, lambda c, p=p: _null_skip(c, c.rlike(p)))
         if "format" in schema and ctx.draft != DRAFT3:
             # draft3 format check is a no-op (jesse_validator_draft3.erl:851-852)
-            add(E.WRONG_FORMAT, _format_pred(schema["format"], ctx))
+            add(E.WRONG_FORMAT, _format_pred(schema["format"]))
 
     # ---- examples (draft6) ---------------------------------------------
     # jesse QUIRK, reproduced faithfully: an `examples`-bearing draft6
@@ -790,16 +753,59 @@ def compile_checks(
         checks.extend(_array_checks(schema, dtype, ctx, _path))
 
     # ---- combinators (boolean algebra over combined sub-preds) -------------
-    checks.extend(_combinator_checks(schema, dtype, ctx, _path, null_is_absent))
+    checks.extend(_combinator_checks(schema, ctx, _path, compile_sub, _as_str))
 
     return checks
 
 
-def _format_pred(fmt: str, ctx: Ctx) -> Builder:
+def _ref_checks(schema: dict, ctx: Ctx, path: str, compile_sub: CompileSub,
+                observed: Builder) -> list[Check] | None:
+    """Compile-time ``$ref`` inlining for both compilers
+    (jesse_state.erl:206-259): resolve the ref, then recurse into the
+    target through the caller's ``compile_sub``.  None when the schema
+    has no ``$ref``.
+
+    Recursive refs (jesse resolves lazily; plan inlining can't) are
+    UNROLLED: each revisit of the same target node spends one unit of
+    the unroll budget; at the budget a single fail-closed check replaces
+    the subtree, so an instance nested deeper than the unroll is flagged
+    (code ref_unroll_exceeded) rather than silently accepted.  The pred
+    sits under the ancestors' presence guards, so only instances that
+    actually REACH the cutoff depth fire it.  ref_seen holds the resolved
+    TARGET NODES themselves (not id()s): the tuple's strong references
+    guarantee no node on the stack is collected, so identity comparison
+    can't be fooled by CPython id reuse."""
+    if "$ref" not in schema:
+        return None
+    reg = ctx.registry or SchemaRegistry()
+    target, new_root, new_scope = reg.resolve_ref(
+        schema["$ref"], ctx.root, scope=ctx.scope)
+    if sum(1 for t in ctx.ref_seen if t is target) >= ctx.unroll_max:
+        _warn_ref_unroll(ctx.unroll_max)
+        return [Check(E.REF_UNROLL_EXCEEDED, path,
+                      lambda v: F.lit(False), observed)]
+    if len({id(t) for t in ctx.ref_seen}) >= MAX_REF_DEPTH:
+        raise SchemaError("schema_unsupported",
+                          f"$ref chain deeper than {MAX_REF_DEPTH}")
+    ctx.ref_expansions[0] += 1
+    if ctx.ref_expansions[0] > _REF_EXPANSION_BUDGET:
+        raise SchemaError(
+            "schema_unsupported",
+            f"$ref expansion exceeds {_REF_EXPANSION_BUDGET} nodes "
+            "(a schema with many refs per level grows ~k^unroll); "
+            "lower ref_unroll_max to bound the inlined plan")
+    # a remote document re-dispatches its own $schema dialect
+    # (jesse_state.erl:233-241; CHANGELOG.md:61-63)
+    new_draft = (ctx.draft if new_root is ctx.root
+                 else detect_draft(new_root, default=ctx.draft))
+    return compile_sub(target, replace(
+        ctx, draft=new_draft, root=new_root, scope=new_scope,
+        ref_seen=ctx.ref_seen + (target,)))
+
+
+def _format_pred(fmt: str) -> Builder:
     """jesse_validator_draft4.erl:975-1004 (+1340-1354 date-time);
     unknown formats and hostname/uri pass unvalidated."""
-    if fmt in ctx.extra_formats:
-        return ctx.extra_formats[fmt]
     if fmt == "date-time":
         return lambda c: _null_skip(c, c.rlike(_RFC3339_RE) & F.try_to_timestamp(
             F.regexp_replace(F.regexp_replace(c, "[Tt]", " "), "[Zz]$", "+00:00")
@@ -868,7 +874,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             getter = lambda c, n=name: _map_get(c, n)
         else:
             continue
-        for sc in compile_checks(sub, ft, null_is_absent=True, _ctx=_child(ctx),
+        for sc in compile_checks(sub, ft, null_is_absent=True, _ctx=ctx,
                                  _path=""):
             checks.append(Check(
                 sc.constraint, path + "/" + name + sc.path,
@@ -886,7 +892,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                     ft = dtype[name].dataType
                     getter = lambda c, n=name: _struct_get(c, n)
                     for sc in compile_checks(sub, ft, null_is_absent=True,
-                                             _ctx=_child(ctx), _path=""):
+                                             _ctx=ctx, _path=""):
                         checks.append(Check(
                             sc.constraint, path + "/" + name + sc.path,
                             sub_wrap(name, getter)(sc.pred),
@@ -897,7 +903,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             # key paths can't be static, so the path is the wildcard)
             for sc in compile_checks(sub, dtype.valueType,
                                      null_is_absent=True,
-                                     _ctx=_child(ctx), _path=""):
+                                     _ctx=ctx, _path=""):
                 checks.append(Check(
                     sc.constraint, path + "/*" + sc.path,
                     lambda c, p=pat, sp=sc.pred: _null_skip(c, F.forall(
@@ -922,7 +928,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                     ft = dtype[name].dataType
                     getter = lambda c, n=name: _struct_get(c, n)
                     for sc in compile_checks(addl, ft, null_is_absent=True,
-                                             _ctx=_child(ctx), _path=""):
+                                             _ctx=ctx, _path=""):
                         checks.append(Check(
                             sc.constraint, path + "/" + name + sc.path,
                             sub_wrap(name, getter)(sc.pred),
@@ -948,7 +954,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                 # same inner-code preservation as patternProperties
                 for sc in compile_checks(addl, dtype.valueType,
                                          null_is_absent=True,
-                                         _ctx=_child(ctx), _path=""):
+                                         _ctx=ctx, _path=""):
                     checks.append(Check(
                         sc.constraint, path + "/*" + sc.path,
                         lambda c, sp=sc.pred: _null_skip(c, F.forall(
@@ -964,7 +970,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
         sub = schema["propertyNames"]
         name_checks = compile_checks(sub, T.StringType(),
                                      null_is_absent=False,
-                                     _ctx=_child(ctx), _path="")
+                                     _ctx=ctx, _path="")
         if is_struct:
             # static field names → constant-folded per-field presence check
             for name in dtype.fieldNames():
@@ -1018,7 +1024,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                 # check_value here (jesse_validator_draft4.erl:653-661),
                 # so failures carry the inner keyword's code
                 for sc in compile_checks(dep, dtype, null_is_absent=False,
-                                         _ctx=_child(ctx), _path=""):
+                                         _ctx=ctx, _path=""):
                     checks.append(Check(
                         sc.constraint, path + sc.path,
                         lambda c, n=name, sp=sc.pred: _null_skip(
@@ -1069,7 +1075,7 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
             # tuple form (D4:565-603)
             for i, sub in enumerate(items):
                 for sc in compile_checks(sub, elem, null_is_absent=False,
-                                         _ctx=_child(ctx), _path=""):
+                                         _ctx=ctx, _path=""):
                     checks.append(Check(
                         sc.constraint, f"{path}/{i}{sc.path}",
                         lambda c, i=i, p=sc.pred: F.when(
@@ -1084,7 +1090,7 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
                     lambda c, n=n: _null_skip(c, F.size(c) <= n),
                     lambda c: _as_str(F.size(c))))
             elif isinstance(addl, (dict, bool)) and addl is not True:
-                ap = compile_pred(addl, elem, ctx=_child(ctx))
+                ap = compile_pred(addl, elem, ctx=ctx)
                 n = len(items)
                 checks.append(Check(
                     E.NOT_SCHEMA_VALID, path,
@@ -1097,7 +1103,7 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
             # element path wildcard (posexplode rebuilds exact indices in
             # plans.validate.explain-mode)
             for sc in compile_checks(items, elem, null_is_absent=False,
-                                     _ctx=_child(ctx), _path=""):
+                                     _ctx=ctx, _path=""):
                 checks.append(Check(
                     sc.constraint, f"{path}/*{sc.path}",
                     lambda c, p=sc.pred: _null_skip(c, F.forall(c, lambda x: p(x))),
@@ -1105,7 +1111,7 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
 
     if ctx.draft >= DRAFT6 and "contains" in schema:
         # ≥1 element matches; empty array fails (jesse_validator_draft6.erl:569-587)
-        cp = compile_pred(schema["contains"], elem, ctx=_child(ctx))
+        cp = compile_pred(schema["contains"], elem, ctx=ctx)
         checks.append(Check(
             E.VALIDATION_ALWAYS_FAILS, path,
             lambda c, cp=cp: _null_skip(c, F.exists(c, lambda x: cp(x))),
@@ -1117,12 +1123,16 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
 # ---------------------------------------------------------------------------
 # combinators
 # ---------------------------------------------------------------------------
-def _combinator_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str,
-                       null_is_absent: bool) -> list[Check]:
+def _combinator_checks(schema: dict, ctx: Ctx, path: str,
+                       compile_sub: CompileSub, observed: Builder) -> list[Check]:
+    """allOf / anyOf / oneOf / not (draft4+) and extends (draft3) for
+    both compilers.  A sub-schema's predicate is the AND of
+    ``compile_sub(s, ctx)``; anyOf detail checks keep the paths
+    ``compile_sub`` gave them."""
     checks: list[Check] = []
 
     def combined(sub: Any) -> Builder:
-        return compile_pred(sub, dtype, ctx=_child(ctx), null_is_absent=null_is_absent)
+        return _conj(compile_sub(sub, ctx))
 
     if ctx.draft >= DRAFT4:
         if "allOf" in schema:
@@ -1133,25 +1143,17 @@ def _combinator_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str,
             checks.append(Check(
                 E.ALL_SCHEMAS_NOT_VALID, path,
                 lambda c, ps=preds: _reduce_and([p(c) for p in ps]),
-                _as_str))
+                observed))
         if "anyOf" in schema:
             subs = schema["anyOf"]
             if not isinstance(subs, list) or not subs:
                 raise SchemaError("wrong_any_of_schema_array", subs)
-            branch_checks = [
-                compile_checks(s, dtype, null_is_absent=null_is_absent,
-                               _ctx=_child(ctx), _path="")
-                for s in subs
-            ]
-            preds = [
-                (lambda bc: (lambda c: _reduce_and([ch.pred(c) for ch in bc])
-                             if bc else F.lit(True)))(bc)
-                for bc in branch_checks
-            ]
+            branch_checks = [compile_sub(s, ctx) for s in subs]
+            preds = [_conj(bc) for bc in branch_checks]
             checks.append(Check(
                 E.ANY_SCHEMAS_NOT_VALID, path,
                 lambda c, ps=preds: _reduce_or([p(c) for p in ps]),
-                _as_str))
+                observed))
             # shortest-error-branch detail: when every branch fails,
             # additionally surface the violations of the branch with the
             # FEWEST failed checks — first such branch on ties
@@ -1186,7 +1188,7 @@ def _combinator_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str,
                 for i, bc in enumerate(branch_checks):
                     for sc in bc:
                         checks.append(Check(
-                            sc.constraint, path + sc.path,
+                            sc.constraint, sc.path,
                             (lambda i=i, p=sc.pred: lambda c:
                              any_ok(c) | (_best_idx(c) != i)
                              | F.coalesce(p(c), F.lit(False)))(),
@@ -1204,15 +1206,15 @@ def _combinator_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str,
                 return cnt
             checks.append(Check(
                 E.NOT_ONE_SCHEMA_VALID, path,
-                lambda c: one_count(c) >= 1, _as_str))
+                lambda c: one_count(c) >= 1, observed))
             checks.append(Check(
                 E.MORE_THAN_ONE_SCHEMA_VALID, path,
-                lambda c: one_count(c) <= 1, _as_str))
+                lambda c: one_count(c) <= 1, observed))
         if "not" in schema:
             p = combined(schema["not"])
             checks.append(Check(
                 E.NOT_SCHEMA_VALID, path,
-                lambda c, p=p: ~F.coalesce(p(c), F.lit(False)), _as_str))
+                lambda c, p=p: ~F.coalesce(p(c), F.lit(False)), observed))
 
     if ctx.draft == DRAFT3 and "extends" in schema:
         subs = schema["extends"]
@@ -1221,9 +1223,14 @@ def _combinator_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str,
         checks.append(Check(
             E.ALL_SCHEMAS_NOT_VALID, path,
             lambda c, ps=preds: _reduce_and([p(c) for p in ps]),
-            _as_str))
+            observed))
 
     return checks
+
+
+def _conj(cs: list[Check]) -> Builder:
+    """AND of the checks' predicates; ``lit(True)`` for no checks."""
+    return lambda c: _reduce_and([ch.pred(c) for ch in cs]) if cs else F.lit(True)
 
 
 def _reduce_and(cols: list[Column]) -> Column:
@@ -1240,12 +1247,6 @@ def _reduce_or(cols: list[Column]) -> Column:
     return out
 
 
-def _child(ctx: Ctx) -> Ctx:
-    from dataclasses import replace
-
-    return replace(ctx)
-
-
 def _scoped(ctx: Ctx, schema: Any) -> Ctx:
     """Combine a subschema's ``$id`` (draft6) / ``id`` (draft3/4) into
     the current base-URI scope — the per-descent scope update of
@@ -1258,15 +1259,13 @@ def _scoped(ctx: Ctx, schema: Any) -> Ctx:
     # itself skip-lists those suite cases (jesse_tests_draft4_SUITE.erl:49-55)
     if not isinstance(sid, str) or sid == "" or sid.startswith("#"):
         return ctx
-    from dataclasses import replace
-
     from jesse_spark.schema.parser import combine_id
 
     return replace(ctx, scope=combine_id(ctx.scope, sid))
 
 
 # ---------------------------------------------------------------------------
-# combined predicate (for lambdas / combinators / fail-fast mode)
+# combined predicate (for lambdas / fail-fast mode)
 # ---------------------------------------------------------------------------
 def compile_pred(
     schema: Any,
@@ -1279,12 +1278,12 @@ def compile_pred(
 ) -> Builder:
     """AND of all keyword checks — a single boolean Column builder.
 
-    Used inside higher-order-function lambdas (forall/exists/map_filter)
-    and by the combinators; Spark short-circuits the conjunction in
+    Used inside higher-order-function lambdas (forall/exists/map_filter);
+    Spark short-circuits the conjunction in
     codegen, matching jesse's fail-fast default
     (allowed_errors = 0, jesse_state.erl:126-129)."""
     if ctx is None:
         ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
                   registry=registry, root=schema)
-    cs = compile_checks(schema, dtype, null_is_absent=null_is_absent, _ctx=ctx)
-    return lambda c: _reduce_and([chk.pred(c) for chk in cs]) if cs else F.lit(True)
+    return _conj(compile_checks(schema, dtype, null_is_absent=null_is_absent,
+                                _ctx=ctx))

@@ -1,14 +1,12 @@
-"""Dynamic-typing compiler: JSON-Schema keywords over VariantType.
+"""Dynamic-typing compiler: the leaf JSON-Schema keywords over VariantType.
 
-The typed compiler (jesse_spark.compiler) resolves type guards at
-compile time against a static Spark schema.  The reference, however, is
-schema-on-read — type is discovered per value at validation time
+The reference is schema-on-read — type is discovered per value
 (jesse_lib.erl:92-110) — and the JSON-Schema-Test-Suite exercises
-heterogeneous instances (mixed-type arrays, schemas applied to
-anything).  This module compiles the SAME keyword semantics against a
-``VariantType`` column, with **runtime** type dispatch via
-``schema_of_variant`` — the engine's faithful rendering of jesse's
-dynamic dispatch, still 100% JVM-side expressions.
+heterogeneous instances.  This module compiles the leaf keywords against
+a ``VariantType`` column with **runtime** type dispatch via
+``schema_of_variant``, still 100% JVM-side expressions; ``$ref``
+inlining and the combinators come from jesse_spark.compiler, shared
+with the typed mode.
 
 Semantics notes (mirroring the reference):
 - a keyword type-guarded in jesse (e.g. ``minimum`` only
@@ -28,8 +26,6 @@ Semantics notes (mirroring the reference):
 
 from __future__ import annotations
 
-import json as _json
-import re as _pyre
 from typing import Any
 
 from pyspark.sql import Column
@@ -37,19 +33,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jesse_spark.compiler import (
-    _num_bound,
-    _scoped,
-    _validate_pattern,
-    _warn_anyof_detail_dropped,
-    _warn_ref_unroll,
-    _REF_EXPANSION_BUDGET,
     Builder,
     Check,
     Ctx,
-    MAX_REF_DEPTH,
+    _combinator_checks,
+    _conj,
     _format_pred,
-    _reduce_and,
+    _num_bound,
+    _ref_checks,
     _reduce_or,
+    _scoped,
+    _validate_pattern,
 )
 from jesse_spark.errors import ErrorCodes as E
 from jesse_spark.errors import SchemaError
@@ -129,8 +123,6 @@ def as_num(v: Column) -> Column:
     return F.try_variant_get(v, "$", "double")
 
 
-
-
 def as_str(v: Column) -> Column:
     return F.try_variant_get(v, "$", "string")
 
@@ -156,7 +148,7 @@ def _type_name_pred(v: Column, name: Any, ctx: Ctx) -> Column:
     if isinstance(name, dict):
         if ctx.draft != DRAFT3:
             raise SchemaError(E.WRONG_TYPE_SPECIFICATION, name)
-        return compile_variant_pred(name, ctx=_child(ctx))(v)
+        return compile_variant_pred(name, ctx=ctx)(v)
     if name == "string":
         return is_string(v)
     if name == "number":
@@ -265,12 +257,6 @@ def _elem_canonical(e: Column, depth: int = _CANON_DEPTH) -> Column:
             .otherwise(F.to_json(e)))
 
 
-def _child(ctx: Ctx) -> Ctx:
-    from dataclasses import replace
-
-    return replace(ctx)
-
-
 def _guard(cond: Column, body: Column) -> Column:
     """Type-guarded keyword: inapplicable type → valid (jesse no-op)."""
     return F.when(cond, body).otherwise(F.lit(True))
@@ -284,7 +270,6 @@ def compile_variant_checks(
     *,
     registry: SchemaRegistry | None = None,
     draft: int | None = None,
-    null_is_absent: bool = False,
     anyof_detail_max: int | None = None,
     ref_unroll_max: int | None = None,
     pattern_lint: bool = True,
@@ -309,40 +294,15 @@ def compile_variant_checks(
         checks.append(Check(constraint, _path + path, pred,
                             observed or (lambda v: F.to_json(v))))
 
-    def sub_pred(sub: Any) -> Builder:
-        return compile_variant_pred(sub, ctx=_child(ctx))
+    def compile_sub(s: Any, c: Ctx) -> list[Check]:
+        return compile_variant_checks(s, _ctx=c, _path=_path)
 
-    # ---- $ref -----------------------------------------------------------
-    if "$ref" in schema:
-        reg = ctx.registry or SchemaRegistry()
-        target, new_root, new_scope = reg.resolve_ref(
-            schema["$ref"], ctx.root, scope=ctx.scope)
-        # recursive refs: bounded unroll with a fail-closed check at the
-        # budget — same policy and rationale as compiler.py's $ref
-        # branch (ref_seen holds the node objects themselves so CPython
-        # id reuse can't fool the revisit count)
-        if sum(1 for t in ctx.ref_seen if t is target) >= ctx.unroll_max:
-            _warn_ref_unroll(ctx.unroll_max)
-            return [Check(E.REF_UNROLL_EXCEEDED, _path,
-                          lambda v: F.lit(False), lambda v: F.to_json(v))]
-        if len({id(t) for t in ctx.ref_seen}) >= MAX_REF_DEPTH:
-            raise SchemaError("schema_unsupported",
-                              f"$ref chain deeper than {MAX_REF_DEPTH}")
-        ctx.ref_expansions[0] += 1
-        if ctx.ref_expansions[0] > _REF_EXPANSION_BUDGET:
-            raise SchemaError(
-                "schema_unsupported",
-                f"$ref expansion exceeds {_REF_EXPANSION_BUDGET} nodes "
-                "(a schema with many refs per level grows ~k^unroll); "
-                "lower ref_unroll_max to bound the inlined plan")
-        new_draft = (ctx.draft if new_root is ctx.root
-                     else detect_draft(new_root, default=ctx.draft))
-        from dataclasses import replace
+    def sub_pred(s: Any) -> Builder:
+        return _conj(compile_sub(s, ctx))
 
-        sub = replace(ctx, draft=new_draft, root=new_root,
-                      scope=new_scope, ref_seen=ctx.ref_seen + (target,))
-        return compile_variant_checks(target, null_is_absent=null_is_absent,
-                                      _ctx=sub, _path=_path)
+    inlined = _ref_checks(schema, ctx, _path, compile_sub, F.to_json)
+    if inlined is not None:
+        return inlined
 
     # ---- type / disallow --------------------------------------------------
     if "type" in schema:
@@ -414,7 +374,7 @@ def compile_variant_checks(
         _validate_pattern(p, ctx)
         add(E.NO_MATCH, lambda v, p=p: _guard(is_string(v), as_str(v).rlike(p)))
     if "format" in schema and ctx.draft != DRAFT3:
-        fp = _format_pred(schema["format"], ctx)
+        fp = _format_pred(schema["format"])
         add(E.WRONG_FORMAT, lambda v, fp=fp: _guard(is_string(v), fp(as_str(v))))
 
     # ---- examples (draft6) -------------------------------------------------
@@ -449,7 +409,7 @@ def compile_variant_checks(
     # the typed compiler and jesse's error reports do
     # (jesse_validator_draft4.erl check_value recursion)
     for name, sub in props.items():
-        for sc in compile_variant_checks(sub, _ctx=_child(ctx)):
+        for sc in compile_variant_checks(sub, _ctx=ctx):
             add(sc.constraint,
                 (lambda n, p: lambda v: _guard(
                     is_object(v) & _present(as_map(v), n),
@@ -463,7 +423,7 @@ def compile_variant_checks(
     # one forall per inner keyword check over the matching entries
     for pat, sub in pattern_props.items():
         _validate_pattern(pat, ctx)
-        for sc in compile_variant_checks(sub, _ctx=_child(ctx)):
+        for sc in compile_variant_checks(sub, _ctx=ctx):
             add(sc.constraint,
                 (lambda p, sp: lambda v: _guard(is_object(v), F.forall(
                     F.filter(F.map_entries(as_map(v)),
@@ -490,7 +450,7 @@ def compile_variant_checks(
                 observed=lambda v: F.to_json(extra_keys(v)))
         else:
             # schema form: inner keyword codes survive over the extras
-            for sc in compile_variant_checks(addl, _ctx=_child(ctx)):
+            for sc in compile_variant_checks(addl, _ctx=ctx):
                 add(sc.constraint,
                     (lambda sp: lambda v: _guard(is_object(v), F.forall(
                         extra_keys(v),
@@ -503,7 +463,7 @@ def compile_variant_checks(
         from jesse_spark.compiler import compile_checks as _typed_checks
 
         for sc in _typed_checks(schema["propertyNames"], T.StringType(),
-                                null_is_absent=False, _ctx=_child(ctx),
+                                null_is_absent=False, _ctx=ctx,
                                 _path=""):
             add(sc.constraint,
                 (lambda sp: lambda v: _guard(
@@ -540,7 +500,7 @@ def compile_variant_checks(
             else:
                 # schema form: inner codes propagate, like the typed
                 # compiler (jesse_validator_draft4.erl:653-661)
-                for sc in compile_variant_checks(dep, _ctx=_child(ctx)):
+                for sc in compile_variant_checks(dep, _ctx=ctx):
                     add(sc.constraint,
                         (lambda n, sp: lambda v: _guard(
                             is_object(v) & _present(as_map(v), n),
@@ -554,7 +514,7 @@ def compile_variant_checks(
             # tuple form: inner keyword codes survive at /<i>, like the
             # typed compiler's recursion (compiler.py items tuple form)
             for i, sub in enumerate(items):
-                for sc in compile_variant_checks(sub, _ctx=_child(ctx)):
+                for sc in compile_variant_checks(sub, _ctx=ctx):
                     add(sc.constraint,
                         (lambda i, p: lambda v: _guard(
                             is_array(v) & (F.size(as_arr(v)) > i),
@@ -578,7 +538,7 @@ def compile_variant_checks(
         else:
             # single-schema form: one forall per inner keyword check so
             # the element's own violation code surfaces at /*
-            for sc in compile_variant_checks(items, _ctx=_child(ctx)):
+            for sc in compile_variant_checks(items, _ctx=ctx):
                 add(sc.constraint,
                     (lambda p: lambda v: _guard(
                         is_array(v),
@@ -602,80 +562,7 @@ def compile_variant_checks(
         add(E.VALIDATION_ALWAYS_FAILS, lambda v, cp=cp: _guard(
             is_array(v), F.exists(as_arr(v), lambda x: cp(x))))
 
-    # ---- combinators ------------------------------------------------------------
-    if ctx.draft >= DRAFT4:
-        if "allOf" in schema:
-            subs = schema["allOf"]
-            if not isinstance(subs, list) or not subs:
-                raise SchemaError("wrong_all_of_schema_array", subs)
-            ps = [sub_pred(s) for s in subs]
-            add(E.ALL_SCHEMAS_NOT_VALID,
-                lambda v, ps=ps: _reduce_and([p(v) for p in ps]))
-        if "anyOf" in schema:
-            subs = schema["anyOf"]
-            if not isinstance(subs, list) or not subs:
-                raise SchemaError("wrong_any_of_schema_array", subs)
-            branch_checks = [
-                compile_variant_checks(s, _ctx=_child(ctx)) for s in subs
-            ]
-            ps = [
-                (lambda bc: (lambda v: _reduce_and([c.pred(v) for c in bc])
-                             if bc else F.lit(True)))(bc)
-                for bc in branch_checks
-            ]
-            add(E.ANY_SCHEMAS_NOT_VALID,
-                lambda v, ps=ps: _reduce_or([p(v) for p in ps]))
-            # shortest-error-branch detail (jesse_validator_draft4.erl:
-            # 1156-1179 + shortest/2 :1365-1373): when every branch
-            # fails, surface the first fewest-failures branch's codes.
-            # Capped like the typed compiler: O((B·C)²) expression cost;
-            # the drop is warned, not silent
-            n_branch_checks = sum(len(bc) for bc in branch_checks)
-            if any(branch_checks) and n_branch_checks > ctx.detail_max:
-                _warn_anyof_detail_dropped(n_branch_checks, ctx.detail_max)
-            if any(branch_checks) and n_branch_checks <= ctx.detail_max:
-
-                def _best_idx(v: Column) -> Column:
-                    per_branch = []
-                    for bc in branch_checks:
-                        cnt = F.lit(0)
-                        for c in bc:
-                            cnt = cnt + (~F.coalesce(c.pred(v), F.lit(False))).cast("int")
-                        per_branch.append(cnt)
-                    fc = F.array(*per_branch)
-                    return F.array_position(fc, F.array_min(fc)) - 1
-
-                any_ok = lambda v, ps=ps: _reduce_or([p(v) for p in ps])  # noqa: E731
-                for i, bc in enumerate(branch_checks):
-                    for sc in bc:
-                        add(sc.constraint,
-                            (lambda i=i, p=sc.pred: lambda v:
-                             any_ok(v) | (_best_idx(v) != i)
-                             | F.coalesce(p(v), F.lit(False)))(),
-                            path=sc.path,
-                            observed=sc.observed)
-        if "oneOf" in schema:
-            subs = schema["oneOf"]
-            if not isinstance(subs, list) or not subs:
-                raise SchemaError("wrong_one_of_schema_array", subs)
-            ps = [sub_pred(s) for s in subs]
-
-            def cnt(v: Column, ps=ps) -> Column:
-                c = F.lit(0)
-                for p in ps:
-                    c = c + F.coalesce(p(v), F.lit(False)).cast("int")
-                return c
-            add(E.NOT_ONE_SCHEMA_VALID, lambda v: cnt(v) >= 1)
-            add(E.MORE_THAN_ONE_SCHEMA_VALID, lambda v: cnt(v) <= 1)
-        if "not" in schema:
-            p = sub_pred(schema["not"])
-            add(E.NOT_SCHEMA_VALID, lambda v, p=p: ~F.coalesce(p(v), F.lit(False)))
-    if ctx.draft == DRAFT3 and "extends" in schema:
-        subs = schema["extends"]
-        subs = subs if isinstance(subs, list) else [subs]
-        ps = [sub_pred(s) for s in subs]
-        add(E.ALL_SCHEMAS_NOT_VALID,
-            lambda v, ps=ps: _reduce_and([p(v) for p in ps]))
+    checks.extend(_combinator_checks(schema, ctx, _path, compile_sub, F.to_json))
 
     # ---- null/absent wrapper ----------------------------------------------------
     # a SQL-null variant is an ABSENT value: every check passes (absent
@@ -697,7 +584,4 @@ def compile_variant_pred(
     if ctx is None:
         ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
                   registry=registry, root=schema)
-    cs = compile_variant_checks(schema, _ctx=ctx)
-    if not cs:
-        return lambda v: F.lit(True)
-    return lambda v: _reduce_and([c.pred(v) for c in cs])
+    return _conj(compile_variant_checks(schema, _ctx=ctx))

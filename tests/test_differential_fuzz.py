@@ -1,9 +1,10 @@
 """Differential fuzzing: typed compiler vs variant compiler.
 
-The engine carries two independent implementations of jesse's keyword
-semantics — compile-time type dispatch against a static Spark schema
-(jesse_spark.compiler) and runtime dispatch over VariantType
-(jesse_spark.variant_compiler).  Random (schema, instance-batch) pairs
+The engine carries two independent implementations of jesse's leaf
+keyword semantics — compile-time type dispatch against a static Spark
+schema (jesse_spark.compiler) and runtime dispatch over VariantType
+(jesse_spark.variant_compiler); both share one ``$ref`` inliner and one
+combinator block.  Random (schema, instance-batch) pairs
 drawn from the implemented keyword vocabulary must produce the SAME
 verdict and violation-code set through both.  Two implementations
 disagreeing is the cheapest oracle that does not share the
@@ -202,7 +203,11 @@ def _codes_select(df, col, checks):
         ])).alias("codes")).collect()]
 
 
-def _typed_codes(spark, arch, schema, instances):
+def _compile_error(e, by_code: bool) -> str:
+    return f"COMPILE_ERROR:{e.code if by_code else (e.args[0] if e.args else '')}"
+
+
+def _typed_codes(spark, arch, schema, instances, by_code=False):
     from jesse_spark.errors import SchemaError
 
     dtype, _ = ARCHETYPES[arch]
@@ -212,12 +217,12 @@ def _typed_codes(spark, arch, schema, instances):
     try:
         checks = compile_checks(schema, dtype, null_is_absent=False)
     except SchemaError as e:
-        # a schema both compilers must reject: compare the error CODE
-        return f"COMPILE_ERROR:{e.args[0] if e.args else ''}"
+        # a schema both compilers must reject: compare the error
+        return _compile_error(e, by_code)
     return _codes_select(df, F.col("value"), checks)
 
 
-def _variant_codes(spark, arch, schema, instances):
+def _variant_codes(spark, arch, schema, instances, by_code=False):
     from jesse_spark.errors import SchemaError
 
     js = [json.dumps(_to_json_value(arch, v)) for v in instances]
@@ -225,7 +230,7 @@ def _variant_codes(spark, arch, schema, instances):
     try:
         checks = compile_variant_checks(schema)
     except SchemaError as e:
-        return f"COMPILE_ERROR:{e.args[0] if e.args else ''}"
+        return _compile_error(e, by_code)
     return _codes_select(df, F.parse_json(F.col("j")), checks)
 
 
@@ -250,3 +255,31 @@ def test_typed_and_variant_compilers_agree(spark, case):
         + "\n".join(f"  inst={json.dumps(_to_json_value(arch, v))} "
                     f"typed={t} variant={w}"
                     for v, t, w in zip(instances, typed, var) if t != w))
+
+
+def _ref_wrapped(schema: dict) -> dict:
+    """The drawn body under ``definitions``, reached through a local
+    ``$ref``; ``$schema`` stays at the root."""
+    body = {k: v for k, v in schema.items() if k != "$schema"}
+    return {"$schema": schema["$schema"], "definitions": {"s": body},
+            "$ref": "#/definitions/s"}
+
+
+@settings(max_examples=30, deadline=None, derandomize=True)
+@given(cases())
+def test_ref_wrapped_schema_matches_body(spark, case):
+    """The same draws behind a local ``$ref``: the two compilers agree
+    on the wrapped schema, and in each mode it gives the same verdicts
+    and codes as the unwrapped body.  Compile errors compare by code."""
+    arch, schema, instances = case
+    wrapped = _ref_wrapped(schema)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        got = {(mode, form): fn(spark, arch, s, instances, by_code=True)
+               for mode, fn in (("typed", _typed_codes),
+                                ("variant", _variant_codes))
+               for form, s in (("body", schema), ("ref", wrapped))}
+    where = f"arch={arch}\nschema={json.dumps(wrapped)}\n{got}"
+    assert got[("typed", "ref")] == got[("variant", "ref")], where
+    for mode in ("typed", "variant"):
+        assert got[(mode, "ref")] == got[(mode, "body")], f"{mode}: {where}"

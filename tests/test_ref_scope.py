@@ -310,3 +310,43 @@ def test_pointer_into_embedded_id_document():
     target, new_root, new_scope = reg.resolve_ref(
         "http://h/sub#/definitions/d", host, scope="http://h/host.json")
     assert target == {"type": "integer"}
+
+
+# ---------------------------------------------------------------------------
+# registry-less refs: one rule in both modes (the shared $ref inliner)
+# ---------------------------------------------------------------------------
+def _ref_codes(spark, mode, schema, values):
+    if mode == "typed":
+        checks = compile_checks(schema, T.LongType())
+        df = spark.createDataFrame([(v,) for v in values], "value long")
+        col = F.col("value")
+    else:
+        checks = compile_variant_checks(schema)
+        df = spark.createDataFrame([(json.dumps(v),) for v in values],
+                                   "j string")
+        col = F.parse_json(F.col("j"))
+    return [sorted(r["codes"]) for r in df.select(F.array_compact(F.array(*[
+        F.when(~F.coalesce(c.pred(col), F.lit(False)), F.lit(c.constraint))
+        for c in checks])).alias("codes")).collect()]
+
+
+@pytest.mark.parametrize("mode", ["typed", "variant"])
+def test_registry_less_file_ref_loads(spark, tmp_path, mode):
+    """With no registry and no scope, a ``file://`` ref goes through the
+    default loader in both modes (typed mode used to raise
+    schema_not_found before trying it)."""
+    (tmp_path / "pos.json").write_text(json.dumps(
+        {**D6, "type": "integer", "minimum": 0, "multipleOf": 2}))
+    schema = {**D6, "$ref": f"file://{tmp_path}/pos.json"}
+    assert _ref_codes(spark, mode, schema, [-3, 0, 4, 5]) == [
+        ["not_in_range", "not_multiple_of"], [], [], ["not_multiple_of"]]
+
+
+@pytest.mark.parametrize("mode", ["typed", "variant"])
+@pytest.mark.parametrize("ref", ["http://example.com/pos.json", "pos.json"])
+def test_registry_less_unloadable_ref_raises(spark, mode, ref):
+    """The default loader reads ``file://`` only: an ``http://`` ref and
+    a relative ref with no scope stay schema_not_found in both modes."""
+    with pytest.raises(SchemaError) as err:
+        _ref_codes(spark, mode, {**D6, "$ref": ref}, [1])
+    assert err.value.code == "schema_not_found"
