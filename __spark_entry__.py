@@ -383,18 +383,17 @@ def q_embed_topk(spark, sf_dir):
 
 # ---- approximate / LSH operators, oracled against exact all-pairs SQL -----
 #
-# Every LSH family below is tuned so its recall on the (fixed,
-# deterministic) test tables is exactly 1 — r=1 minhash bands, 16
-# hyperplane tables, pigeonholed simhash chunks — so the verified
-# output EQUALS the exact all-pairs answer and DuckDB can oracle it.
-# The LSH pruning itself stays real (bucketed, capped, sub-quadratic).
+# The LSH pruning is real (bucketed, capped, sub-quadratic), so recall
+# is below 1 in general.  On the sf0.01 test tables every verified
+# output equals the exact all-pairs answer, so DuckDB oracles it there;
+# at sf0.1 minhash_near_dups finds 253 of the oracle's 256 pairs (one
+# min-hash, see minhash_candidates) and simhash_near_dups 156,006 of
+# 166,267 (a chunk bucket outgrows the 1,000-id cap).
 def q_minhash_near_dups(spark, sf_dir):
-    from jesse_spark.operators.dedup import jaccard_verify, minhash_lsh_candidates
+    from jesse_spark.operators.dedup import jaccard_verify, minhash_candidates
 
     d = _t(spark, sf_dir, "documents")
-    # r=1 bands: a pair at jaccard j is missed w.p. (1-j)^32 ≤ 2.4e-10
-    cand = minhash_lsh_candidates(d, "text", "doc_id", num_perm=32, bands=32,
-                                  shingle_mode="token")
+    cand = minhash_candidates(d, "text", "doc_id", shingle_mode="token")
     return jaccard_verify(cand, d, "text", "doc_id", threshold=0.5,
                           shingle_mode="token").select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
@@ -404,8 +403,9 @@ def q_simhash_near_dups(spark, sf_dir):
     from jesse_spark.operators.dedup import simhash_candidates
 
     d = _t(spark, sf_dir, "documents")
-    # pigeonhole banding is exact for hamming ≤ 3; md5 token hashing is
-    # bit-for-bit reproducible in the DuckDB oracle
+    # pigeonhole banding finds every hamming ≤ 3 pair that survives the
+    # bucket cap; md5 token hashing is bit-for-bit reproducible in the
+    # DuckDB oracle
     return simhash_candidates(d, "text", "doc_id", max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
 

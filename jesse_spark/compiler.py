@@ -375,26 +375,32 @@ def _single_type_pred(tname: str, dtype: T.DataType, col: Column, ctx: Ctx) -> C
     return F.lit(tname in st)
 
 
-def _type_pred(decl: Any, dtype: T.DataType, col: Column, ctx: Ctx,
-               null_is_absent: bool) -> Column:
+def _type_pred(decl: Any, dtype: T.DataType, ctx: Ctx,
+               null_is_absent: bool) -> Builder:
+    """``type``/``disallow`` membership.  Draft3 schema-valued members
+    (jesse_validator_draft3.erl:304-328) compile here, once: a bad
+    member fails the compile, and every render reuses the builders."""
     names = decl if isinstance(decl, list) else [decl]
-    present_ok = F.lit(False)
+    members: list[str | Builder] = []
     for n in names:
         if isinstance(n, dict):
-            # draft3 union members may be schemas (jesse_validator_draft3.erl:304-328)
             if ctx.draft != DRAFT3:
                 raise SchemaError(E.WRONG_TYPE_SPECIFICATION, decl)
-            present_ok = present_ok | compile_pred(n, dtype, ctx=ctx)(col)
+            members.append(compile_pred(n, dtype, ctx=ctx))
         elif isinstance(n, str):
-            present_ok = present_ok | _single_type_pred(n, dtype, col, ctx)
+            members.append(n)
         else:
             raise SchemaError(E.WRONG_TYPE_SPECIFICATION, decl)
-    null_ok = F.lit(
-        null_is_absent
-        or "null" in [n for n in names if isinstance(n, str)]
-        or "any" in names
-    )
-    return F.when(col.isNull(), null_ok).otherwise(present_ok)
+    null_ok = null_is_absent or "null" in names or "any" in names
+
+    def pred(col: Column) -> Column:
+        present_ok = F.lit(False)
+        for m in members:
+            present_ok = present_ok | (
+                _single_type_pred(m, dtype, col, ctx) if isinstance(m, str)
+                else m(col))
+        return F.when(col.isNull(), F.lit(null_ok)).otherwise(present_ok)
+    return pred
 
 
 # ---------------------------------------------------------------------------
@@ -619,7 +625,6 @@ def compile_checks(
     ref_unroll_max: int | None = None,
     pattern_lint: bool = True,
     _ctx: Ctx | None = None,
-    _path: str = "",
 ) -> list[Check]:
     """Compile a schema against a static Spark type into a flat list of
     per-keyword :class:`Check` objects (granular, with JSON-pointer
@@ -638,16 +643,13 @@ def compile_checks(
 
     checks: list[Check] = []
 
-    def add(constraint: str, pred: Builder, observed: Builder | None = None,
-            path: str = "") -> None:
-        checks.append(Check(constraint, _path + path, pred,
-                            observed or (lambda c: _as_str(c))))
+    def add(constraint: str, pred: Builder, observed: Builder | None = None) -> None:
+        checks.append(Check(constraint, "", pred, observed or (lambda c: _as_str(c))))
 
     def compile_sub(s: Any, c: Ctx) -> list[Check]:
-        return compile_checks(s, dtype, null_is_absent=null_is_absent,
-                              _ctx=c, _path=_path)
+        return compile_checks(s, dtype, null_is_absent=null_is_absent, _ctx=c)
 
-    inlined = _ref_checks(schema, ctx, _path, compile_sub, _as_str)
+    inlined = _ref_checks(schema, ctx, compile_sub, _as_str)
     if inlined is not None:
         return inlined
 
@@ -660,13 +662,10 @@ def compile_checks(
 
     # ---- type / disallow ------------------------------------------------
     if "type" in schema:
-        decl = schema["type"]
-        add(E.WRONG_TYPE,
-            lambda c, d=decl: _type_pred(d, dtype, c, ctx, null_is_absent))
+        add(E.WRONG_TYPE, _type_pred(schema["type"], dtype, ctx, null_is_absent))
     if ctx.draft == DRAFT3 and "disallow" in schema:
-        decl = schema["disallow"]
-        add(E.NOT_ALLOWED,
-            lambda c, d=decl: _null_skip(c, ~_type_pred(d, dtype, c, ctx, True)))
+        tp = _type_pred(schema["disallow"], dtype, ctx, True)
+        add(E.NOT_ALLOWED, lambda c, tp=tp: _null_skip(c, ~tp(c)))
 
     # ---- enum / const ----------------------------------------------------
     if "enum" in schema:
@@ -746,19 +745,19 @@ def compile_checks(
 
     # ---- object keywords ---------------------------------------------------
     if is_obj:
-        checks.extend(_object_checks(schema, dtype, ctx, _path))
+        checks.extend(_object_checks(schema, dtype, ctx))
 
     # ---- array keywords ------------------------------------------------------
     if is_arr:
-        checks.extend(_array_checks(schema, dtype, ctx, _path))
+        checks.extend(_array_checks(schema, dtype, ctx))
 
     # ---- combinators (boolean algebra over combined sub-preds) -------------
-    checks.extend(_combinator_checks(schema, ctx, _path, compile_sub, _as_str))
+    checks.extend(_combinator_checks(schema, ctx, compile_sub, _as_str))
 
     return checks
 
 
-def _ref_checks(schema: dict, ctx: Ctx, path: str, compile_sub: CompileSub,
+def _ref_checks(schema: dict, ctx: Ctx, compile_sub: CompileSub,
                 observed: Builder) -> list[Check] | None:
     """Compile-time ``$ref`` inlining for both compilers
     (jesse_state.erl:206-259): resolve the ref, then recurse into the
@@ -782,8 +781,7 @@ def _ref_checks(schema: dict, ctx: Ctx, path: str, compile_sub: CompileSub,
         schema["$ref"], ctx.root, scope=ctx.scope)
     if sum(1 for t in ctx.ref_seen if t is target) >= ctx.unroll_max:
         _warn_ref_unroll(ctx.unroll_max)
-        return [Check(E.REF_UNROLL_EXCEEDED, path,
-                      lambda v: F.lit(False), observed)]
+        return [Check(E.REF_UNROLL_EXCEEDED, "", lambda v: F.lit(False), observed)]
     if len({id(t) for t in ctx.ref_seen}) >= MAX_REF_DEPTH:
         raise SchemaError("schema_unsupported",
                           f"$ref chain deeper than {MAX_REF_DEPTH}")
@@ -824,7 +822,7 @@ def _format_pred(fmt: str) -> Builder:
 # ---------------------------------------------------------------------------
 # objects
 # ---------------------------------------------------------------------------
-def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list[Check]:
+def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
     checks: list[Check] = []
     props: dict = schema.get("properties", {}) or {}
     pattern_props: dict = schema.get("patternProperties", {}) or {}
@@ -858,7 +856,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                if isinstance(s, dict) and s.get("required") is True]
     for name in req:
         checks.append(Check(
-            E.MISSING_REQUIRED_PROPERTY, path,
+            E.MISSING_REQUIRED_PROPERTY, "",
             lambda c, n=name: _null_skip(c, _present(c, dtype, n)),
             lambda c, n=name: F.lit(n)))
 
@@ -874,10 +872,9 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             getter = lambda c, n=name: _map_get(c, n)
         else:
             continue
-        for sc in compile_checks(sub, ft, null_is_absent=True, _ctx=ctx,
-                                 _path=""):
+        for sc in compile_checks(sub, ft, null_is_absent=True, _ctx=ctx):
             checks.append(Check(
-                sc.constraint, path + "/" + name + sc.path,
+                sc.constraint, f"/{name}{sc.path}",
                 sub_wrap(name, getter)(sc.pred),
                 sub_obs(name, getter)(sc.observed)))
 
@@ -892,9 +889,9 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                     ft = dtype[name].dataType
                     getter = lambda c, n=name: _struct_get(c, n)
                     for sc in compile_checks(sub, ft, null_is_absent=True,
-                                             _ctx=ctx, _path=""):
+                                             _ctx=ctx):
                         checks.append(Check(
-                            sc.constraint, path + "/" + name + sc.path,
+                            sc.constraint, f"/{name}{sc.path}",
                             sub_wrap(name, getter)(sc.pred),
                             sub_obs(name, getter)(sc.observed)))
         elif isinstance(dtype, T.MapType):
@@ -903,9 +900,9 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             # key paths can't be static, so the path is the wildcard)
             for sc in compile_checks(sub, dtype.valueType,
                                      null_is_absent=True,
-                                     _ctx=ctx, _path=""):
+                                     _ctx=ctx):
                 checks.append(Check(
-                    sc.constraint, path + "/*" + sc.path,
+                    sc.constraint, f"/*{sc.path}",
                     lambda c, p=pat, sp=sc.pred: _null_skip(c, F.forall(
                         F.filter(F.map_entries(c),
                                  lambda e: e.getField("key").rlike(p)),
@@ -921,16 +918,16 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             for name in extras:
                 if addl is False:
                     checks.append(Check(
-                        E.NO_EXTRA_PROPERTIES_ALLOWED, path + "/" + name,
+                        E.NO_EXTRA_PROPERTIES_ALLOWED, f"/{name}",
                         lambda c, n=name: _null_skip(c, ~_present(c, dtype, n)),
                         lambda c, n=name: F.lit(n)))
                 else:
                     ft = dtype[name].dataType
                     getter = lambda c, n=name: _struct_get(c, n)
                     for sc in compile_checks(addl, ft, null_is_absent=True,
-                                             _ctx=ctx, _path=""):
+                                             _ctx=ctx):
                         checks.append(Check(
-                            sc.constraint, path + "/" + name + sc.path,
+                            sc.constraint, f"/{name}{sc.path}",
                             sub_wrap(name, getter)(sc.pred),
                             sub_obs(name, getter)(sc.observed)))
         elif isinstance(dtype, T.MapType):
@@ -947,16 +944,16 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
 
             if addl is False:
                 checks.append(Check(
-                    E.NO_EXTRA_PROPERTIES_ALLOWED, path,
+                    E.NO_EXTRA_PROPERTIES_ALLOWED, "",
                     lambda c: _null_skip(c, F.size(extra_keys(c)) == 0),
                     lambda c: _as_str(extra_keys(c))))
             else:
                 # same inner-code preservation as patternProperties
                 for sc in compile_checks(addl, dtype.valueType,
                                          null_is_absent=True,
-                                         _ctx=ctx, _path=""):
+                                         _ctx=ctx):
                     checks.append(Check(
-                        sc.constraint, path + "/*" + sc.path,
+                        sc.constraint, f"/*{sc.path}",
                         lambda c, sp=sc.pred: _null_skip(c, F.forall(
                             extra_keys(c),
                             lambda k: sp(F.element_at(c, k)))),
@@ -970,20 +967,20 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
         sub = schema["propertyNames"]
         name_checks = compile_checks(sub, T.StringType(),
                                      null_is_absent=False,
-                                     _ctx=ctx, _path="")
+                                     _ctx=ctx)
         if is_struct:
             # static field names → constant-folded per-field presence check
             for name in dtype.fieldNames():
                 for sc in name_checks:
                     checks.append(Check(
-                        sc.constraint, path + "/" + name + sc.path,
+                        sc.constraint, f"/{name}{sc.path}",
                         lambda c, n=name, sp=sc.pred: _null_skip(
                             c, ~_present(c, dtype, n) | sp(F.lit(n))),
                         lambda c, n=name: F.lit(n)))
         else:
             for sc in name_checks:
                 checks.append(Check(
-                    sc.constraint, path + "/*" + sc.path,
+                    sc.constraint, f"/*{sc.path}",
                     lambda c, sp=sc.pred: _null_skip(
                         c, F.forall(F.map_keys(c), lambda k: sp(k))),
                     lambda c: _as_str(F.map_keys(c))))
@@ -996,7 +993,7 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             if not isinstance(n, int) or isinstance(n, bool) or n < 0:
                 raise SchemaError("wrong_" + ("max" if cmp == "le" else "min") + "_properties", n)
             checks.append(Check(
-                code, path,
+                code, "",
                 lambda c, n=n, cmp=cmp: _null_skip(
                     c, (_prop_count(c, dtype) <= n) if cmp == "le" else (_prop_count(c, dtype) >= n)),
                 lambda c: _as_str(_prop_count(c, dtype))))
@@ -1008,13 +1005,13 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
             if isinstance(dep, list):
                 for d in dep:  # array form: co-presence
                     checks.append(Check(
-                        E.MISSING_DEPENDENCY, path,
+                        E.MISSING_DEPENDENCY, "",
                         lambda c, n=name, d=d: _null_skip(
                             c, ~_present(c, dtype, n) | _present(c, dtype, d)),
                         lambda c, d=d: F.lit(d)))
             elif isinstance(dep, str) and ctx.draft == DRAFT3:
                 checks.append(Check(
-                    E.MISSING_DEPENDENCY, path,
+                    E.MISSING_DEPENDENCY, "",
                     lambda c, n=name, d=dep: _null_skip(
                         c, ~_present(c, dtype, n) | _present(c, dtype, d)),
                     lambda c, d=dep: F.lit(d)))
@@ -1024,9 +1021,9 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
                 # check_value here (jesse_validator_draft4.erl:653-661),
                 # so failures carry the inner keyword's code
                 for sc in compile_checks(dep, dtype, null_is_absent=False,
-                                         _ctx=ctx, _path=""):
+                                         _ctx=ctx):
                     checks.append(Check(
-                        sc.constraint, path + sc.path,
+                        sc.constraint, sc.path,
                         lambda c, n=name, sp=sc.pred: _null_skip(
                             c, ~_present(c, dtype, n) | sp(c)),
                         sc.observed))
@@ -1037,18 +1034,18 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx, path: str) -> list
 # ---------------------------------------------------------------------------
 # arrays
 # ---------------------------------------------------------------------------
-def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list[Check]:
+def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx) -> list[Check]:
     checks: list[Check] = []
     elem = dtype.elementType
 
     if "minItems" in schema:
         n = schema["minItems"]
-        checks.append(Check(E.WRONG_SIZE, path,
+        checks.append(Check(E.WRONG_SIZE, "",
                             lambda c, n=n: _null_skip(c, F.size(c) >= n),
                             lambda c: _as_str(F.size(c))))
     if "maxItems" in schema:
         n = schema["maxItems"]
-        checks.append(Check(E.WRONG_SIZE, path,
+        checks.append(Check(E.WRONG_SIZE, "",
                             lambda c, n=n: _null_skip(c, F.size(c) <= n),
                             lambda c: _as_str(F.size(c))))
 
@@ -1060,12 +1057,12 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
         # (key-sorted entries — order-insensitive like jesse_lib:147-197)
         if _contains_map(elem):
             checks.append(Check(
-                E.NOT_UNIQUE, path,
+                E.NOT_UNIQUE, "",
                 lambda c: _null_skip(c, F.size(F.array_distinct(
                     F.transform(c, lambda e: _typed_canonical(e, elem)))) == F.size(c)),
                 lambda c: _as_str(c)))
         else:
-            checks.append(Check(E.NOT_UNIQUE, path,
+            checks.append(Check(E.NOT_UNIQUE, "",
                                 lambda c: _null_skip(c, F.size(F.array_distinct(c)) == F.size(c)),
                                 lambda c: _as_str(c)))
 
@@ -1075,9 +1072,9 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
             # tuple form (D4:565-603)
             for i, sub in enumerate(items):
                 for sc in compile_checks(sub, elem, null_is_absent=False,
-                                         _ctx=ctx, _path=""):
+                                         _ctx=ctx):
                     checks.append(Check(
-                        sc.constraint, f"{path}/{i}{sc.path}",
+                        sc.constraint, f"/{i}{sc.path}",
                         lambda c, i=i, p=sc.pred: F.when(
                             c.isNull() | (F.size(c) <= i), F.lit(True)
                         ).otherwise(p(F.get(c, i))),
@@ -1086,14 +1083,14 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
             if addl is False:
                 n = len(items)
                 checks.append(Check(
-                    E.NO_EXTRA_ITEMS_ALLOWED, path,
+                    E.NO_EXTRA_ITEMS_ALLOWED, "",
                     lambda c, n=n: _null_skip(c, F.size(c) <= n),
                     lambda c: _as_str(F.size(c))))
             elif isinstance(addl, (dict, bool)) and addl is not True:
                 ap = compile_pred(addl, elem, ctx=ctx)
                 n = len(items)
                 checks.append(Check(
-                    E.NOT_SCHEMA_VALID, path,
+                    E.NOT_SCHEMA_VALID, "",
                     lambda c, n=n, ap=ap: _null_skip(c, F.forall(
                         F.slice(c, n + 1, F.greatest(F.size(c) - n, F.lit(0))), lambda x: ap(x))),
                     lambda c: _as_str(c)))
@@ -1103,9 +1100,9 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
             # element path wildcard (posexplode rebuilds exact indices in
             # plans.validate.explain-mode)
             for sc in compile_checks(items, elem, null_is_absent=False,
-                                     _ctx=ctx, _path=""):
+                                     _ctx=ctx):
                 checks.append(Check(
-                    sc.constraint, f"{path}/*{sc.path}",
+                    sc.constraint, f"/*{sc.path}",
                     lambda c, p=sc.pred: _null_skip(c, F.forall(c, lambda x: p(x))),
                     lambda c: _as_str(c)))
 
@@ -1113,7 +1110,7 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
         # ≥1 element matches; empty array fails (jesse_validator_draft6.erl:569-587)
         cp = compile_pred(schema["contains"], elem, ctx=ctx)
         checks.append(Check(
-            E.VALIDATION_ALWAYS_FAILS, path,
+            E.VALIDATION_ALWAYS_FAILS, "",
             lambda c, cp=cp: _null_skip(c, F.exists(c, lambda x: cp(x))),
             lambda c: _as_str(c)))
 
@@ -1123,8 +1120,8 @@ def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx, path: str) -> list
 # ---------------------------------------------------------------------------
 # combinators
 # ---------------------------------------------------------------------------
-def _combinator_checks(schema: dict, ctx: Ctx, path: str,
-                       compile_sub: CompileSub, observed: Builder) -> list[Check]:
+def _combinator_checks(schema: dict, ctx: Ctx, compile_sub: CompileSub,
+                       observed: Builder) -> list[Check]:
     """allOf / anyOf / oneOf / not (draft4+) and extends (draft3) for
     both compilers.  A sub-schema's predicate is the AND of
     ``compile_sub(s, ctx)``; anyOf detail checks keep the paths
@@ -1141,7 +1138,7 @@ def _combinator_checks(schema: dict, ctx: Ctx, path: str,
                 raise SchemaError("wrong_all_of_schema_array", subs)
             preds = [combined(s) for s in subs]
             checks.append(Check(
-                E.ALL_SCHEMAS_NOT_VALID, path,
+                E.ALL_SCHEMAS_NOT_VALID, "",
                 lambda c, ps=preds: _reduce_and([p(c) for p in ps]),
                 observed))
         if "anyOf" in schema:
@@ -1151,7 +1148,7 @@ def _combinator_checks(schema: dict, ctx: Ctx, path: str,
             branch_checks = [compile_sub(s, ctx) for s in subs]
             preds = [_conj(bc) for bc in branch_checks]
             checks.append(Check(
-                E.ANY_SCHEMAS_NOT_VALID, path,
+                E.ANY_SCHEMAS_NOT_VALID, "",
                 lambda c, ps=preds: _reduce_or([p(c) for p in ps]),
                 observed))
             # shortest-error-branch detail: when every branch fails,
@@ -1205,15 +1202,15 @@ def _combinator_checks(schema: dict, ctx: Ctx, path: str,
                     cnt = cnt + F.coalesce(p(c), F.lit(False)).cast("int")
                 return cnt
             checks.append(Check(
-                E.NOT_ONE_SCHEMA_VALID, path,
+                E.NOT_ONE_SCHEMA_VALID, "",
                 lambda c: one_count(c) >= 1, observed))
             checks.append(Check(
-                E.MORE_THAN_ONE_SCHEMA_VALID, path,
+                E.MORE_THAN_ONE_SCHEMA_VALID, "",
                 lambda c: one_count(c) <= 1, observed))
         if "not" in schema:
             p = combined(schema["not"])
             checks.append(Check(
-                E.NOT_SCHEMA_VALID, path,
+                E.NOT_SCHEMA_VALID, "",
                 lambda c, p=p: ~F.coalesce(p(c), F.lit(False)), observed))
 
     if ctx.draft == DRAFT3 and "extends" in schema:
@@ -1221,7 +1218,7 @@ def _combinator_checks(schema: dict, ctx: Ctx, path: str,
         subs = subs if isinstance(subs, list) else [subs]
         preds = [combined(s) for s in subs]
         checks.append(Check(
-            E.ALL_SCHEMAS_NOT_VALID, path,
+            E.ALL_SCHEMAS_NOT_VALID, "",
             lambda c, ps=preds: _reduce_and([p(c) for p in ps]),
             observed))
 

@@ -9,9 +9,9 @@ the SimHash one an explode + codegen aggregate, never Python loops.
 Scale notes:
 - exact dedup shuffles one (hash, id) pair per row with map-side
   combine; the full text never shuffles.
-- MinHash-LSH shuffles one (band, band_hash, id) triple per row per
-  band (b × n rows of a few bytes), then joins only within buckets —
-  the classic sub-quadratic near-dup plan.
+- MinHash, SimHash and hyperplane LSH bucket each row under a few
+  small keys and pair only within capped buckets, all through
+  :func:`capped_bucket_pairs` — the sub-quadratic near-dup plan.
 - candidate verification (exact Jaccard) touches only candidate pairs.
 """
 
@@ -80,7 +80,7 @@ def hashed_shingles(df: DataFrame, text_col: str, *, k: int = 5,
     slice ↔ string is 1-1 (tokens contain no separator; char elements
     are single chars), so set sizes and intersections match unless two
     distinct shingles collide in 64 bits (~1e-16 per pair).  NOT for
-    minhash_signatures, whose ``hash(string, i)`` values are pinned
+    minhash_candidates, whose ``hash(string, i)`` values are pinned
     bit-for-bit."""
     return _shingle_sets(df, text_col, k=k, mode=mode, out=out,
                          shingle=F.xxhash64)
@@ -137,7 +137,10 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFram
 def capped_bucket_pairs(tagged: DataFrame, key_cols: list[str], *,
                         max_bucket: int) -> DataFrame:
     """Ordered (id_a < id_b) pairs of ids sharing a bucket key, capped
-    at ``max_bucket`` members per bucket.
+    at ``max_bucket`` members per bucket.  Every other column of
+    ``tagged`` rides to both sides as ``<col>_a``/``<col>_b`` (after
+    id_a, id_b), so a caller can verify pairs on a carried value
+    without joining the table back.
 
     Preconditions (not checked — checking costs a job): every key
     column is non-null, since a null key never matches in the join; and
@@ -147,118 +150,64 @@ def capped_bucket_pairs(tagged: DataFrame, key_cols: list[str], *,
     Membership is capped BEFORE pairing: a row_number window over the
     bucket key, ordered by id, keeps the deterministic min-id survivors
     (the window sort spills; an uncapped collect_list buffer on a hot
-    bucket is a single-reducer OOM).  Pairs come from a within-bucket
-    self-join with ``id_a < id_b`` instead of collect_list + nested
-    transform/explode: the pair loop runs in whole-stage codegen rather
-    than interpreted HOF lambdas, and the collect_list aggregation
-    buffer disappears.  SHUFFLE_MERGE hint: spillable, never broadcast
-    (bucket membership scales with the corpus).  Pair-set equality with
-    the collect_list + explode formulation, kept as the oracle in
-    tests/test_dedup_similarity.py, is pinned there and was verified at
-    735k (minhash, sf1.0) and 14.3M (hyperplane, 10x-duplicated corpus)
-    pair volumes — at the 14.3M volume this is ~2.4x faster; the
-    ~400M-pair regime where AQE-coalesced SMJ pairing degenerated (see
-    minhash_lsh_candidates) only arises with a true multi-permutation
-    signature, which no caller ships."""
+    bucket is a single-reducer OOM).  Members beyond the cap are
+    dropped, so a bucket larger than ``max_bucket`` loses pairs.  Pairs
+    come from a within-bucket self-join with ``id_a < id_b`` instead of
+    collect_list + nested transform/explode: the pair loop runs in
+    whole-stage codegen rather than interpreted HOF lambdas, and the
+    collect_list aggregation buffer disappears.  SHUFFLE_MERGE hint:
+    spillable, never broadcast (bucket membership scales with the
+    corpus); both sides share one exchange subtree, which AQE reuses at
+    runtime.  Pair-set equality with the collect_list + explode
+    formulation, kept as the oracle in tests/test_dedup_similarity.py,
+    is pinned there and was verified at 735k (minhash, sf1.0) and 14.3M
+    (hyperplane, 10x-duplicated corpus) pair volumes — at the 14.3M
+    volume this is ~2.4x faster."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy("id")
     capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= max_bucket).drop("_rn")
-    x = capped.select(*key_cols, F.col("id").alias("id_a"))
-    y = capped.select(*key_cols, F.col("id").alias("id_b"))
+    carried = [c for c in tagged.columns if c != "id" and c not in key_cols]
+
+    def side(s: str) -> DataFrame:
+        return capped.select(*key_cols, *[
+            F.col(c).alias(f"{c}_{s}") for c in ["id", *carried]])
+
     return (
-        x.hint("SHUFFLE_MERGE").join(y, key_cols)
+        side("a").hint("SHUFFLE_MERGE").join(side("b"), key_cols)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        .select("id_a", "id_b", *[f"{c}_{s}" for c in carried for s in "ab"])
     )
 
 
 # ---------------------------------------------------------------------------
-# 2. MinHash + LSH banding
+# 2. MinHash bucketing
 # ---------------------------------------------------------------------------
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       *, num_perm: int = 64, k: int = 5,
-                       shingle_mode: str = "char") -> DataFrame:
-    """(id, sig: array<int>) — the signature every round since r1 has
-    shipped, computed once instead of num_perm times.
+def minhash_candidates(df: DataFrame, text_col: str, id_col: str, *,
+                       k: int = 5, shingle_mode: str = "char") -> DataFrame:
+    """Candidate near-duplicate pairs (id_a < id_b): docs with equal
+    ``mh = min over the distinct shingles s_i of hash(s_i, i)``, paired
+    within buckets capped at 1,000 ids.
 
-    HISTORICAL SEMANTICS, KEPT BIT-FOR-BIT (r6 finding): the original
-    implementation passed a TWO-argument lambda
-    (``lambda s, j=j: F.hash(s, F.lit(j))``) to ``F.transform``, so the
-    second parameter was bound to the ELEMENT INDEX, shadowing the
-    intended permutation id — every "permutation" evaluated the same
-    ``min over shingles of hash(shingle, position)``, i.e. the
-    signature is one positional min-hash repeated ``num_perm`` times.
-    Every downstream surface (banding, capped buckets, verified pair
-    sets, the DuckDB oracles, BENCH history) pins the pair sets this
-    signature produces, and a true multi-permutation MinHash changes
-    the candidate volume by ~two orders of magnitude at sf1.0 (every
-    r=1 band of a duplicate cluster collides → ~400M raw pairs vs ~19M)
-    — a recall/cost redesign that belongs to a build round, not an
-    optimization round.  r6 therefore computes the single min ONCE
-    (2-arg transform, explicit) and array_repeats it, which is
-    expression-for-expression what the old code evaluated after CSE.
-    """
+    One hash, not a k-permutation MinHash, so recall is below 1:
+    q_minhash_near_dups (jaccard ≥ 0.5 via :func:`jaccard_verify`)
+    equals its all-pairs oracle at sf0.01 and finds 253 of the oracle's
+    256 pairs at sf0.1.  A true k-permutation MinHash (Broder 1997)
+    raises the candidate volume ~20x (~400M raw pairs at sf1.0 against
+    ~19M) and spent >120 s in sort-and-spill when measured.  ``mh`` is
+    the value the historical 32-lambda signature held in every slot (its
+    two-argument lambda bound the permutation id to the element index);
+    tests pin it against that expression."""
     from jesse_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # hash-heavy per-row stage: use all cores
     sh = with_shingles(df.select(F.col(id_col).alias("id"), F.col(text_col)),
-                       text_col, k=k, mode=shingle_mode).select("id", "sh")
-    m = F.array_min(F.transform(F.col("sh"), lambda s, i: F.hash(s, i)))
-    return sh.select("id", F.array_repeat(m, num_perm).alias("sig"))
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_perm: int = 64,
-    bands: int = 16,
-    k: int = 5,
-    shingle_mode: str = "char",
-) -> DataFrame:
-    """Candidate near-duplicate pairs (id_a < id_b, band votes).
-
-    rows_per_band = num_perm // bands; two docs collide when one full
-    band of their signatures matches (with the historical repeated
-    signature — see minhash_signatures — all bands carry the same
-    value, so collision ⇔ equal positional min-hash).  Plan: project
-    shingles → signature → explode bands → groupBy (band, band_hash) →
-    self-pair inside capped buckets via :func:`capped_bucket_pairs`
-    (codegen self-join).  CAUTION for a future true multi-permutation
-    signature: at that candidate volume (~400M raw pairs at sf1.0) AQE
-    coalesces the small bucket shuffle before the join explodes it and
-    the vote aggregation falls back to sort-and-spill (measured >120 s
-    in r6) — re-tune banding or disable coalescing for that regime
-    before reusing this pairing."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_perm=num_perm, k=k,
-                              shingle_mode=shingle_mode)
-    # Because the signature is one value repeated (see
-    # minhash_signatures), every band's hash is identical, every band's
-    # capped bucket holds the same member set in the same order, and a
-    # pair therefore survives in ALL bands or NONE.  One bucket pass
-    # over band 0 with band_votes = bands is bit-identical to exploding
-    # all ``bands`` copies (r6: cuts the banding window from
-    # bands×n rows to n and the HOF pair stream by the same factor;
-    # equality with the exploded formulation is pinned by
-    # tests/test_dedup_similarity.py).
-    banded = sigs.select(
-        "id",
-        F.xxhash64(F.concat_ws(",", *[
-            F.element_at(F.col("sig"), i + 1).cast("string")
-            for i in range(r)
-        ])).alias("band_hash"),
-    )
+                       text_col, k=k, mode=shingle_mode)
+    mh = F.array_min(F.transform(F.col("sh"), lambda s, i: F.hash(s, i)))
     # cap pathological buckets (all-identical spam): 1k ids → 500k pairs
-    return (
-        capped_bucket_pairs(banded, ["band_hash"], max_bucket=1000)
-        .groupBy("id_a", "id_b")
-        .agg((F.count(F.lit(1)) * bands).alias("band_votes"))
-    )
+    return capped_bucket_pairs(sh.select("id", mh.alias("mh")), ["mh"],
+                               max_bucket=1000)
 
 
 def jaccard_verify(
@@ -361,13 +310,17 @@ def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
                        *, max_hamming: int = 3, max_bucket: int = 1000) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64 bits into 4 × 16-bit
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one chunk identical),
-    bucket on (chunk_idx, chunk), pair within capped buckets, verify
-    exact hamming ≤ k via bit_count(xor).
+    bucket on (chunk_idx, chunk), pair within capped buckets through
+    :func:`capped_bucket_pairs`, verify exact hamming ≤ k via
+    bit_count(xor) in the codegen'd pair loop.
 
-    Buckets are capped at ``max_bucket`` ids (same discipline as the
-    MinHash path): a degenerate corpus where thousands of near-empty
-    texts collapse onto one chunk value stays bounded instead of going
-    quadratic."""
+    Buckets keep at most ``max_bucket`` ids, the min ids; members beyond
+    the cap are dropped and so are their pairs.  The cap bounds a
+    degenerate corpus (thousands of near-empty texts on one chunk value)
+    instead of going quadratic, but it does not grow with the corpus:
+    one sf0.1 chunk bucket holds 1,639 ids, so q_simhash_near_dups
+    equals its all-pairs oracle at sf0.01 but finds 156,006 of its
+    166,267 pairs at sf0.1."""
     from jesse_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # 64-bit vote aggregate is CPU-heavy
@@ -382,34 +335,12 @@ def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
             for i in range(4)
         ])).alias("chunk_idx", "chunk"),
     )
-    # cap membership pre-aggregation (spillable window, bounded buffer —
-    # the survivor set stays the deterministic min ids; Spark's
-    # WindowGroupLimit pushes the row_number cap below the exchange)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("chunk_idx", "chunk").orderBy("id")
-    capped = (chunks.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") <= max_bucket).drop("_rn"))
-    # pair generation: a within-bucket SELF-JOIN instead of
-    # collect_list + nested-transform explode.  The join's pair loop
-    # runs in whole-stage codegen with the hamming filter inlined
-    # (~2.3x at sf1.0: 6.5 s -> 2.9 s over 24M candidate pairs),
-    # whereas higher-order-function lambdas are interpreted per pair
-    # and materialize every candidate struct.  SHUFFLE_MERGE keeps the
-    # pair loop spillable and off the broadcast path at 100 TB (the
-    # capped bucket table scales with the corpus; both sides share one
-    # exchange subtree, which AQE reuses at runtime).
-    xor = F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-    a = capped.select("chunk_idx", "chunk", F.col("id").alias("id_a"),
-                      F.col("sim").alias("sim_a"))
-    b = capped.select("chunk_idx", "chunk", F.col("id").alias("id_b"),
-                      F.col("sim").alias("sim_b"))
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
-        a.hint("SHUFFLE_MERGE").join(b.hint("SHUFFLE_MERGE"),
-                                     ["chunk_idx", "chunk"])
-        .filter((F.col("id_a") < F.col("id_b"))
-                & (F.bit_count(xor) <= max_hamming))
-        .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
+        capped_bucket_pairs(chunks, ["chunk_idx", "chunk"],
+                            max_bucket=max_bucket)
+        .filter(hamming <= max_hamming)
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()
     )
 

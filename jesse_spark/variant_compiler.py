@@ -144,11 +144,22 @@ def _present(m: Column, name: str) -> Column:
     return F.map_contains_key(m, F.lit(name))
 
 
+def _type_members(decl: Any, ctx: Ctx) -> list:
+    """``type``/``disallow`` members for :func:`_type_name_pred`; draft3
+    schema-valued ones compile here, once, as in compiler._type_pred."""
+    members = []
+    for name in decl if isinstance(decl, list) else [decl]:
+        if isinstance(name, dict):
+            if ctx.draft != DRAFT3:
+                raise SchemaError(E.WRONG_TYPE_SPECIFICATION, name)
+            name = compile_variant_pred(name, ctx=ctx)
+        members.append(name)
+    return members
+
+
 def _type_name_pred(v: Column, name: Any, ctx: Ctx) -> Column:
-    if isinstance(name, dict):
-        if ctx.draft != DRAFT3:
-            raise SchemaError(E.WRONG_TYPE_SPECIFICATION, name)
-        return compile_variant_pred(name, ctx=ctx)(v)
+    if callable(name):
+        return name(v)
     if name == "string":
         return is_string(v)
     if name == "number":
@@ -274,7 +285,6 @@ def compile_variant_checks(
     ref_unroll_max: int | None = None,
     pattern_lint: bool = True,
     _ctx: Ctx | None = None,
-    _path: str = "",
 ) -> list[Check]:
     if _ctx is None:
         _ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
@@ -291,30 +301,28 @@ def compile_variant_checks(
 
     def add(constraint: str, pred: Builder, path: str = "",
             observed: Builder | None = None) -> None:
-        checks.append(Check(constraint, _path + path, pred,
+        checks.append(Check(constraint, path, pred,
                             observed or (lambda v: F.to_json(v))))
 
     def compile_sub(s: Any, c: Ctx) -> list[Check]:
-        return compile_variant_checks(s, _ctx=c, _path=_path)
+        return compile_variant_checks(s, _ctx=c)
 
     def sub_pred(s: Any) -> Builder:
         return _conj(compile_sub(s, ctx))
 
-    inlined = _ref_checks(schema, ctx, _path, compile_sub, F.to_json)
+    inlined = _ref_checks(schema, ctx, compile_sub, F.to_json)
     if inlined is not None:
         return inlined
 
     # ---- type / disallow --------------------------------------------------
     if "type" in schema:
-        decl = schema["type"]
-        names = decl if isinstance(decl, list) else [decl]
+        ns = _type_members(schema["type"], ctx)
         add(E.WRONG_TYPE,
-            lambda v, ns=names: _reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
+            lambda v, ns=ns: _reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
     if ctx.draft == DRAFT3 and "disallow" in schema:
-        decl = schema["disallow"]
-        names = decl if isinstance(decl, list) else [decl]
+        ns = _type_members(schema["disallow"], ctx)
         add(E.NOT_ALLOWED,
-            lambda v, ns=names: ~_reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
+            lambda v, ns=ns: ~_reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
 
     # ---- enum / const -------------------------------------------------------
     if "enum" in schema:
@@ -463,8 +471,7 @@ def compile_variant_checks(
         from jesse_spark.compiler import compile_checks as _typed_checks
 
         for sc in _typed_checks(schema["propertyNames"], T.StringType(),
-                                null_is_absent=False, _ctx=ctx,
-                                _path=""):
+                                null_is_absent=False, _ctx=ctx):
             add(sc.constraint,
                 (lambda sp: lambda v: _guard(
                     is_object(v),
@@ -562,7 +569,7 @@ def compile_variant_checks(
         add(E.VALIDATION_ALWAYS_FAILS, lambda v, cp=cp: _guard(
             is_array(v), F.exists(as_arr(v), lambda x: cp(x))))
 
-    checks.extend(_combinator_checks(schema, ctx, _path, compile_sub, F.to_json))
+    checks.extend(_combinator_checks(schema, ctx, compile_sub, F.to_json))
 
     # ---- null/absent wrapper ----------------------------------------------------
     # a SQL-null variant is an ABSENT value: every check passes (absent

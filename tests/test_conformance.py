@@ -516,3 +516,38 @@ def test_ref_expansion_budget_fails_fast():
     with pytest.raises(SchemaError, match="expansion exceeds"):
         with pytest.warns(UserWarning):
             compile_checks(branchy, T.LongType(), anyof_detail_max=0)
+
+
+@pytest.mark.parametrize("mode", ["typed", "variant"])
+def test_draft3_type_members_compile_once(spark, monkeypatch, mode):
+    """Draft3 schema-valued ``type`` members compile with their parent:
+    a bad member fails the compile, as the same keyword at top level
+    does, and rendering the wrong_type pred compiles nothing."""
+    from functools import partial
+
+    import jesse_spark.compiler as tc
+    import jesse_spark.variant_compiler as vc
+    from jesse_spark.errors import SchemaError
+
+    if mode == "typed":
+        mod, name = tc, "compile_checks"
+        compile_ = partial(tc.compile_checks, dtype=T.StringType())
+    else:
+        mod, name = vc, "compile_variant_checks"
+        compile_ = vc.compile_variant_checks
+    bad = {"type": "string", "pattern": "("}
+    with pytest.raises(SchemaError) as top:
+        compile_({**D3, **bad})
+    with pytest.raises(SchemaError) as member:
+        compile_({**D3, "type": ["integer", bad]})
+    assert member.value.code == top.value.code == "schema_invalid"
+
+    checks = compile_({**D3, "type": ["integer", {"type": "string",
+                                                  "minLength": 2}]})
+    (wt,) = [c for c in checks if c.constraint == "wrong_type"]
+    calls = []
+    real = getattr(mod, name)
+    monkeypatch.setattr(
+        mod, name, lambda *a, **k: calls.append(a) or real(*a, **k))
+    assert str(wt.pred(F.col("x"))) == str(wt.pred(F.col("x")))
+    assert calls == []

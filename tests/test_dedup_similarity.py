@@ -10,7 +10,7 @@ from jesse_spark.operators.dedup import (
     exact_duplicates,
     drop_exact_duplicates,
     jaccard_verify,
-    minhash_lsh_candidates,
+    minhash_candidates,
     normalized,
     simhash_candidates,
 )
@@ -35,7 +35,7 @@ def bucket_pairs(buckets, ids_col: str = "ids"):
     """Explode a bucketed id-list column into ordered (id_a < id_b)
     pairs.  The caller is expected to have capped the list (slice) so a
     pathological hot bucket cannot go quadratic — this is the one shape
-    shared by every LSH family (MinHash bands, SimHash chunks,
+    shared by every LSH family (MinHash buckets, SimHash chunks,
     hyperplane buckets)."""
     ids = F.col(ids_col)
     return buckets.select(
@@ -119,13 +119,12 @@ def test_exact_dedup_hot_group_bounded(spark):
 
 
 def test_minhash_hot_bucket_bounded(spark):
-    """10k identical short texts: every band bucket collapses; the
+    """10k identical short texts: every min-hash bucket collapses; the
     pre-aggregation cap keeps candidate pairs ≤ C(cap, 2) with min-id
     survivors instead of C(10k, 2)."""
     rows = [(i, "buy cheap pills now fast") for i in range(10_000)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    cand = minhash_lsh_candidates(df, "text", "doc_id", num_perm=16, bands=4,
-                                  shingle_mode="token")
+    cand = minhash_candidates(df, "text", "doc_id", shingle_mode="token")
     # monkeypatch-free check: default cap is 1000 → ≤ C(1000,2) pairs
     pairs = cand.select("id_a", "id_b").collect()
     assert 0 < len(pairs) <= 1000 * 999 // 2
@@ -167,7 +166,8 @@ def test_capped_bucket_pairs_equals_exploded_formulation(spark):
     """r6 pins: the codegen self-join pairing (capped_bucket_pairs)
     emits exactly the pair set of the historical collect_list +
     nested-transform explode, on multi-column bucket keys and with the
-    cap binding (min-id survivors)."""
+    cap binding (min-id survivors); a non-key column rides to both
+    sides as <col>_a/<col>_b, each the value of its own id."""
     import random
 
     from jesse_spark.operators.dedup import capped_bucket_pairs
@@ -175,38 +175,39 @@ def test_capped_bucket_pairs_equals_exploded_formulation(spark):
     rng = random.Random(7)
     # 6 buckets across 2 key columns; one hot bucket of 40 ids (cap 10
     # binds), singleton buckets (emit nothing), ids inserted unsorted
-    rows = [(t, b, i) for t in range(2) for b in range(3)
+    rows = [(t, b, i, 3 * i + 1) for t in range(2) for b in range(3)
             for i in rng.sample(range(1000), {0: 40, 1: 7, 2: 1}[b])]
     rng.shuffle(rows)
     tagged = spark.createDataFrame(
-        rows, "table_idx int, bucket int, id long")
+        rows, "table_idx int, bucket int, id long, val long")
     want = sorted(map(tuple, bucket_pairs(_capped_id_buckets(
         tagged, ["table_idx", "bucket"], max_bucket=10))
         .select("id_a", "id_b").collect()))
-    have = sorted(map(tuple, capped_bucket_pairs(
-        tagged, ["table_idx", "bucket"], max_bucket=10)
-        .select("id_a", "id_b").collect()))
+    out = capped_bucket_pairs(tagged, ["table_idx", "bucket"], max_bucket=10)
+    assert out.columns == ["id_a", "id_b", "val_a", "val_b"]
+    got = out.collect()
+    have = sorted((r["id_a"], r["id_b"]) for r in got)
     assert want == have and len(have) == 2 * (10 * 9 // 2 + 7 * 6 // 2)
     assert all(a < b for a, b in have)
+    assert all(r["val_a"] == 3 * r["id_a"] + 1 and r["val_b"] == 3 * r["id_b"] + 1
+               for r in got)
 
 
 def test_minhash_candidates_match_exploded_band_formulation(spark):
-    """r6 pins: (1) minhash_signatures reproduces the historical
-    repeated positional-min signature bit-for-bit (the pre-r6 2-arg
-    lambda bound the permutation id to the element index), and (2) the
-    single-bucket-pass candidates equal the full bands-exploded
-    formulation, band_votes included."""
+    """minhash_candidates emits exactly the pair set of the historical
+    signature: 32 two-argument lambdas (each bound its "permutation id"
+    to the element index), xxhash64-banded one value per band and
+    paired through the collect_list + explode oracles."""
     from pyspark.sql import functions as F
 
-    from jesse_spark.operators.dedup import minhash_signatures, with_shingles
+    from jesse_spark.operators.dedup import with_shingles
     from jesse_spark.session import ensure_parallelism
 
     rows = [(i, f"some shared text plus token{i % 7} and token{i % 3}")
             for i in range(300)] + [(900, "utterly different content here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    num_perm, bands, r = 32, 32, 1
+    num_perm = 32
 
-    # (1) signature == historical expression (2-arg lambda: index wins)
     sh = with_shingles(
         ensure_parallelism(df).select(F.col("doc_id").alias("id"), "text"),
         "text", k=5, mode="token").select("id", "sh")
@@ -214,33 +215,19 @@ def test_minhash_candidates_match_exploded_band_formulation(spark):
         F.array_min(F.transform(F.col("sh"),
                                 lambda s, j=j: F.hash(s, F.lit(j))))
         for j in range(num_perm)]).alias("sig"))
-    got = minhash_signatures(df, "text", "doc_id", num_perm=num_perm,
-                             shingle_mode="token")
-    assert {r_["id"]: list(r_["sig"]) for r_ in legacy.collect()} == \
-           {r_["id"]: list(r_["sig"]) for r_ in got.collect()}
-
-    # (2) candidates == bands-exploded formulation over the same sigs
-    banded = got.select("id", F.posexplode(F.array(*[
-        F.xxhash64(F.concat_ws(",", *[
-            F.element_at(F.col("sig"), b * r + i + 1).cast("string")
-            for i in range(r)]))
-        for b in range(bands)])).alias("band", "band_hash"))
-    exploded = (bucket_pairs(
+    banded = legacy.select("id", F.posexplode(F.array(*[
+        F.xxhash64(F.element_at(F.col("sig"), b + 1).cast("string"))
+        for b in range(num_perm)])).alias("band", "band_hash"))
+    want = {(r_["id_a"], r_["id_b"]) for r_ in bucket_pairs(
         _capped_id_buckets(banded, ["band", "band_hash"], max_bucket=1000))
-        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("band_votes")))
-    want = {(r_["id_a"], r_["id_b"]): r_["band_votes"]
-            for r_ in exploded.collect()}
-    from jesse_spark.operators.dedup import minhash_lsh_candidates
-
-    have = {(r_["id_a"], r_["id_b"]): r_["band_votes"]
-            for r_ in minhash_lsh_candidates(
-                df, "text", "doc_id", num_perm=num_perm, bands=bands,
-                shingle_mode="token").collect()}
-    assert want == have and len(have) > 0
+        .collect()}
+    have = [(r_["id_a"], r_["id_b"]) for r_ in minhash_candidates(
+        df, "text", "doc_id", shingle_mode="token").collect()]
+    assert want == set(have) and len(have) == len(want) > 0
 
 
 def test_minhash_lsh_finds_near_dup(docs):
-    cand = minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=16)
+    cand = minhash_candidates(docs, "text", "doc_id")
     verified = jaccard_verify(cand, docs, "text", "doc_id", threshold=0.6)
     pairs = {(r["id_a"], r["id_b"]) for r in verified.collect()}
     assert (0, 2) in pairs or (0, 1) in pairs
