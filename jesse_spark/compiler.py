@@ -15,12 +15,15 @@ Design rules (scale-first):
   expressions — no Python UDFs anywhere in this module.  Higher-order
   functions (``forall`` / ``exists`` / ``filter`` / ``map_*``) cover the
   array/object keywords.
-- Static typing: the reference is schema-on-read (type discovered per
-  value, jesse_lib.erl:92-110); a Spark column has one static type, so
-  type-guarded keywords (e.g. ``minimum`` applies only
-  ``if is_number(Value)`` — jesse_validator_draft4.erl:149-158) are
-  resolved at **compile time**: inapplicable keyword -> ``lit(True)``,
-  never a runtime branch.
+- One writer, two type views: the reference is schema-on-read (type
+  discovered per value, jesse_lib.erl:92-110).  Each keyword is written
+  once (:func:`_compile`) against a type view.  A :class:`TypedView`
+  (a Spark column has one static type) resolves type-guarded keywords
+  (e.g. ``minimum`` applies only ``if is_number(Value)`` —
+  jesse_validator_draft4.erl:149-158) at **compile time**: an
+  inapplicable keyword is not emitted, never a runtime branch.  The
+  ``VariantView`` of jesse_spark.variant_compiler answers the same
+  questions per row.
 - Null semantics: a null *property* is "absent" (jesse skips absent
   properties, jesse_validator_draft4.erl:380-400); a null root value or
   array element is JSON ``null`` (its own type).  Controlled by
@@ -284,10 +287,6 @@ def _is_string(dtype: T.DataType) -> bool:
     return "string" in json_types_of(dtype)
 
 
-def _is_numeric(dtype: T.DataType) -> bool:
-    return isinstance(dtype, _NUMERIC)
-
-
 # ---------------------------------------------------------------------------
 # check model
 # ---------------------------------------------------------------------------
@@ -307,7 +306,7 @@ class Check:
     observed: Builder
 
 
-# compile one subschema in the caller's mode (typed: at a fixed dtype)
+# compile one subschema on the caller's type view
 CompileSub = Callable[[Any, "Ctx"], "list[Check]"]
 
 
@@ -349,58 +348,6 @@ def _null_skip(col: Column, body: Column) -> Column:
 
 def _as_str(col: Column) -> Column:
     return col.cast("string")
-
-
-# ---------------------------------------------------------------------------
-# type keyword
-# ---------------------------------------------------------------------------
-def _single_type_pred(tname: str, dtype: T.DataType, col: Column, ctx: Ctx) -> Column:
-    """Predicate for one declared type name against a statically-typed
-    value, for a *present* (non-null) value.
-
-    draft4 ``integer`` means an actual integer (is_integer/1,
-    jesse_validator_draft4.erl:306-312); draft6 additionally accepts
-    floats with zero fractional part (_draft6.erl:341-359)."""
-    st = json_types_of(dtype)
-    if tname == "any":  # draft3 only (jesse_validator_draft3.erl:296)
-        return F.lit(True)
-    if tname == "null":
-        return F.lit(False)  # non-null value can't be type null
-    if tname == "integer" and "number" in st and "integer" not in st:
-        if ctx.draft >= DRAFT6:
-            # 1.0 is an integer in draft6; round(x) == x, not floor
-            # (floor(double) returns LONG and overflows past 2^63)
-            return col == F.round(col)
-        return F.lit(False)
-    return F.lit(tname in st)
-
-
-def _type_pred(decl: Any, dtype: T.DataType, ctx: Ctx,
-               null_is_absent: bool) -> Builder:
-    """``type``/``disallow`` membership.  Draft3 schema-valued members
-    (jesse_validator_draft3.erl:304-328) compile here, once: a bad
-    member fails the compile, and every render reuses the builders."""
-    names = decl if isinstance(decl, list) else [decl]
-    members: list[str | Builder] = []
-    for n in names:
-        if isinstance(n, dict):
-            if ctx.draft != DRAFT3:
-                raise SchemaError(E.WRONG_TYPE_SPECIFICATION, decl)
-            members.append(compile_pred(n, dtype, ctx=ctx))
-        elif isinstance(n, str):
-            members.append(n)
-        else:
-            raise SchemaError(E.WRONG_TYPE_SPECIFICATION, decl)
-    null_ok = null_is_absent or "null" in names or "any" in names
-
-    def pred(col: Column) -> Column:
-        present_ok = F.lit(False)
-        for m in members:
-            present_ok = present_ok | (
-                _single_type_pred(m, dtype, col, ctx) if isinstance(m, str)
-                else m(col))
-        return F.when(col.isNull(), F.lit(null_ok)).otherwise(present_ok)
-    return pred
 
 
 # ---------------------------------------------------------------------------
@@ -469,43 +416,6 @@ def _typed_deep_eq(col: Column, dtype: T.DataType, val: Any) -> Column:
             return body
         return F.lit(False)
     return F.lit(False)
-
-
-def _enum_pred(values: list, dtype: T.DataType, col: Column,
-               null_is_absent: bool) -> Column:
-    st = json_types_of(dtype)
-    has_null = any(v is None for v in values)
-    nonnull = [v for v in values if v is not None]
-
-    def _scalar_compat(v: Any) -> bool:
-        if isinstance(v, bool):
-            return "boolean" in st
-        if isinstance(v, (int, float)):
-            return "number" in st or "integer" in st
-        return isinstance(v, str) and "string" in st
-
-    def _isin_safe(v: Any) -> bool:
-        # ints beyond int64 can't travel as literals (py4j) — they go
-        # through _typed_deep_eq (False on integral cols, double compare
-        # on float cols)
-        return not (isinstance(v, int) and not isinstance(v, bool)
-                    and not -(2 ** 63) <= v < 2 ** 63)
-
-    if nonnull and all(isinstance(v, (bool, int, float, str)) for v in nonnull) \
-            and not isinstance(dtype, (T.ArrayType, T.MapType, T.StructType)):
-        compat = [v for v in nonnull if _scalar_compat(v)]
-        small = [v for v in compat if _isin_safe(v)]
-        # isin coerces to a common type, giving 1 == 1.0 for free
-        body = col.isin(*small) if small else F.lit(False)
-        for v in compat:
-            if not _isin_safe(v):
-                body = body | _typed_deep_eq(col, dtype, v)
-    else:
-        body = F.lit(False)
-        for v in nonnull:
-            body = body | _typed_deep_eq(col, dtype, v)
-    null_ok = F.lit(null_is_absent or has_null)
-    return F.when(col.isNull(), null_ok).otherwise(F.coalesce(body, F.lit(False)))
 
 
 # ---------------------------------------------------------------------------
@@ -600,20 +510,154 @@ def _typed_canonical(col: Column, dtype: T.DataType) -> Column:
     return F.coalesce(col.cast("string"), F.lit("null"))
 
 
-def _prop_count(col: Column, dtype: T.DataType) -> Column:
-    if isinstance(dtype, T.StructType):
+# ---------------------------------------------------------------------------
+# type views: what the two modes differ in, static vs runtime type
+# ---------------------------------------------------------------------------
+_TYPE_NAMES = ("string", "number", "integer", "boolean", "object", "array",
+               "null", "any")
+
+
+class TypedView:
+    """A value of static Spark type ``dtype`` (typed mode).  Every type
+    question is answered at compile time: a keyword block whose type
+    the column can't hold is never emitted, and an applicable keyword
+    only skips SQL null.  A SQL null is an absent value when
+    ``null_is_absent`` (a property), else JSON ``null`` (a root value or
+    an array element).  The variant-mode counterpart is
+    ``jesse_spark.variant_compiler.VariantView``."""
+
+    observed = staticmethod(_as_str)
+
+    def __init__(self, dtype: T.DataType, null_is_absent: bool = False) -> None:
+        self.dtype = dtype
+        self.null_is_absent = null_is_absent
+        self.types = json_types_of(dtype)
+        # the writer's two static shapes: per-field object checks, and
+        # the exact integral multipleOf
+        self.fields = dtype.fieldNames() if isinstance(dtype, T.StructType) else None
+        self.integral = isinstance(dtype, _INTEGRAL)
+
+    def may(self, jtype: str) -> bool:
+        return jtype in self.types
+
+    def has(self, c: Column, jtype: str, draft: int | None = None) -> bool | Column:
+        """Whether the present (non-null) value is of JSON type
+        ``jtype``.  draft4 ``integer`` means an actual integer
+        (is_integer/1, jesse_validator_draft4.erl:306-312); draft6 also
+        accepts floats with zero fractional part (_draft6.erl:341-359)."""
+        if jtype == "any":  # draft3 only (jesse_validator_draft3.erl:296)
+            return True
+        if jtype == "null":
+            return False
+        if jtype == "integer" and "number" in self.types \
+                and "integer" not in self.types:
+            # 1.0 is an integer in draft6; round(x) == x, not floor
+            # (floor(double) returns LONG and overflows past 2^63)
+            return c == F.round(c) if draft >= DRAFT6 else False
+        return jtype in self.types
+
+    @staticmethod
+    def guard(jtype: str, body: Builder) -> Builder:
+        return lambda c: _null_skip(c, body(c))
+
+    @staticmethod
+    def num(c: Column) -> Column:
+        return c
+
+    str = obj = arr = num
+
+    def present(self, c: Column, name: str) -> Column:
+        return _present(c, self.dtype, name)
+
+    def absent(self, c: Column, key: str | int) -> Column:
+        if isinstance(key, int):
+            return c.isNull() | (F.size(c) <= key)
+        return c.isNull() | ~self.present(c, key)
+
+    def get(self, c: Column, key: str | int) -> Column:
+        if isinstance(key, int):
+            return F.get(c, key)
+        return _struct_get(c, key) if self.fields is not None else _map_get(c, key)
+
+    def child(self, name: str | None = None) -> "TypedView":
+        """View of property ``name``, or of any map value."""
+        if self.fields is not None:
+            return TypedView(self.dtype[name].dataType, True)
+        return TypedView(self.dtype.valueType, True)
+
+    def item(self) -> "TypedView":
+        return TypedView(self.dtype.elementType, False)
+
+    def as_value(self) -> "TypedView":
+        """This value again, with null read as JSON null."""
+        return TypedView(self.dtype, False)
+
+    def prop_count(self, c: Column) -> Column:
+        if self.fields is None:
+            return F.size(F.map_keys(c))
         cnt = F.lit(0)
-        for f in dtype.fieldNames():
-            cnt = cnt + _struct_get(col, f).isNotNull().cast("int")
+        for f in self.fields:
+            cnt = cnt + _struct_get(c, f).isNotNull().cast("int")
         return cnt
-    if isinstance(dtype, T.MapType):
-        return F.size(F.map_keys(col))
-    return F.lit(None)
+
+    def equals_any(self, c: Column, values: list) -> Column:
+        """Deep equality with any of ``values`` (None members are the
+        caller's null case): scalar columns take one ``isin``."""
+        st, dtype = self.types, self.dtype
+        nonnull = [v for v in values if v is not None]
+
+        def _scalar_compat(v: Any) -> bool:
+            if isinstance(v, bool):
+                return "boolean" in st
+            if isinstance(v, (int, float)):
+                return "number" in st or "integer" in st
+            return isinstance(v, str) and "string" in st
+
+        def _isin_safe(v: Any) -> bool:
+            # ints beyond int64 can't travel as literals (py4j) — they go
+            # through _typed_deep_eq (False on integral cols, double
+            # compare on float cols)
+            return not (isinstance(v, int) and not isinstance(v, bool)
+                        and not -(2 ** 63) <= v < 2 ** 63)
+
+        if nonnull and all(isinstance(v, (bool, int, float, str)) for v in nonnull) \
+                and not isinstance(dtype, (T.ArrayType, T.MapType, T.StructType)):
+            compat = [v for v in nonnull if _scalar_compat(v)]
+            small = [v for v in compat if _isin_safe(v)]
+            # isin coerces to a common type, giving 1 == 1.0 for free
+            body = c.isin(*small) if small else F.lit(False)
+            for v in compat:
+                if not _isin_safe(v):
+                    body = body | _typed_deep_eq(c, dtype, v)
+            return body
+        body = F.lit(False)
+        for v in nonnull:
+            body = body | _typed_deep_eq(c, dtype, v)
+        return body
+
+    def unique_items(self, c: Column) -> Column:
+        """The elements in a form ``array_distinct`` compares by JSON
+        equality: native, unless they hold maps, which Spark can't
+        compare — then canonical text (key-sorted entries,
+        order-insensitive like jesse_lib:147-197)."""
+        elem = self.dtype.elementType
+        if not _contains_map(elem):
+            return c
+        return F.transform(c, lambda e: _typed_canonical(e, elem))
 
 
 # ---------------------------------------------------------------------------
-# the keyword dispatcher
+# the keyword writer: every keyword once, for both type views
 # ---------------------------------------------------------------------------
+def _root_ctx(schema: Any, ctx: Ctx | None, draft: int | None,
+              registry: SchemaRegistry | None, **opts: Any) -> Ctx:
+    """The compile context of a top-level call (``ctx`` when given)."""
+    if ctx is not None:
+        return ctx
+    return Ctx(draft=detect_draft(schema) if draft is None else draft,
+               registry=registry, root=schema, **opts)
+
+
 def compile_checks(
     schema: Any,
     dtype: T.DataType,
@@ -630,41 +674,37 @@ def compile_checks(
     per-keyword :class:`Check` objects (granular, with JSON-pointer
     paths) — the engine analog of jesse's attr-list fold
     (jesse_validator_draft4.erl:84-260)."""
-    if _ctx is None:
-        _ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
-                   registry=registry, root=schema,
-                   anyof_detail_max=anyof_detail_max,
-                   ref_unroll_max=ref_unroll_max,
-                   pattern_lint=pattern_lint)
-    ctx = _ctx
+    ctx = _root_ctx(schema, _ctx, draft, registry,
+                    anyof_detail_max=anyof_detail_max,
+                    ref_unroll_max=ref_unroll_max, pattern_lint=pattern_lint)
+    return _compile(schema, TypedView(dtype, null_is_absent), ctx)
+
+
+def _compile(schema: Any, view: Any, ctx: Ctx) -> list[Check]:
+    """The checks of ``schema`` on the value ``view`` describes (a
+    :class:`TypedView` or a ``VariantView``).  The one recursion entry
+    of both modes; the view answers every type question."""
     schema = normalize_schema(schema, ctx.draft)
     ctx = _scoped(ctx, schema)
     schema = hoist_ref(schema)
 
-    checks: list[Check] = []
-
-    def add(constraint: str, pred: Builder, observed: Builder | None = None) -> None:
-        checks.append(Check(constraint, "", pred, observed or (lambda c: _as_str(c))))
-
     def compile_sub(s: Any, c: Ctx) -> list[Check]:
-        return compile_checks(s, dtype, null_is_absent=null_is_absent, _ctx=c)
+        return _compile(s, view, c)
 
-    inlined = _ref_checks(schema, ctx, compile_sub, _as_str)
+    inlined = _ref_checks(schema, ctx, compile_sub, view.observed)
     if inlined is not None:
         return inlined
 
-    st = json_types_of(dtype)
-    is_str = "string" in st
-    is_num = _is_numeric(dtype)
-    is_arr = isinstance(dtype, T.ArrayType)
-    is_obj = isinstance(dtype, (T.StructType, T.MapType))
-    elem = dtype.elementType if is_arr else None
+    checks: list[Check] = []
+
+    def add(constraint: str, pred: Builder) -> None:
+        checks.append(Check(constraint, "", pred, view.observed))
 
     # ---- type / disallow ------------------------------------------------
     if "type" in schema:
-        add(E.WRONG_TYPE, _type_pred(schema["type"], dtype, ctx, null_is_absent))
+        add(E.WRONG_TYPE, _type_pred(schema["type"], view, ctx, view.null_is_absent))
     if ctx.draft == DRAFT3 and "disallow" in schema:
-        tp = _type_pred(schema["disallow"], dtype, ctx, True)
+        tp = _type_pred(schema["disallow"], view, ctx, True)
         add(E.NOT_ALLOWED, lambda c, tp=tp: _null_skip(c, ~tp(c)))
 
     # ---- enum / const ----------------------------------------------------
@@ -672,32 +712,34 @@ def compile_checks(
         vals = schema["enum"]
         if not isinstance(vals, list):
             raise SchemaError("schema_invalid", vals)
-        add(E.NOT_IN_ENUM, lambda c, v=vals: _enum_pred(v, dtype, c, null_is_absent))
+        add(E.NOT_IN_ENUM, _enum_pred(vals, view))
     if ctx.draft >= DRAFT6 and "const" in schema:
         # const ≡ 1-element enum (jesse_validator_draft6.erl:249-251)
-        add(E.NOT_IN_ENUM,
-            lambda c, v=[schema["const"]]: _enum_pred(v, dtype, c, null_is_absent))
+        add(E.NOT_IN_ENUM, _enum_pred([schema["const"]], view))
 
     # ---- numeric range ---------------------------------------------------
-    if is_num:
+    # a type-guarded keyword applies only to its type, e.g. minimum
+    # ``if is_number(Value)`` (jesse_validator_draft4.erl:149-158)
+    num = view.num
+    if view.may("number"):
         if "minimum" in schema:
             m = _num_bound(schema["minimum"])
             excl = ctx.draft <= DRAFT4 and schema.get("exclusiveMinimum") is True
-            add(E.NOT_IN_RANGE,
-                lambda c, m=m, e=excl: _null_skip(c, (c > F.lit(m)) if e else (c >= F.lit(m))))
+            add(E.NOT_IN_RANGE, view.guard("number", lambda c, m=m, e=excl: (
+                num(c) > F.lit(m)) if e else (num(c) >= F.lit(m))))
         if "maximum" in schema:
             m = _num_bound(schema["maximum"])
             excl = ctx.draft <= DRAFT4 and schema.get("exclusiveMaximum") is True
-            add(E.NOT_IN_RANGE,
-                lambda c, m=m, e=excl: _null_skip(c, (c < F.lit(m)) if e else (c <= F.lit(m))))
+            add(E.NOT_IN_RANGE, view.guard("number", lambda c, m=m, e=excl: (
+                num(c) < F.lit(m)) if e else (num(c) <= F.lit(m))))
         if ctx.draft >= DRAFT6:
             # numeric-valued exclusive bounds (jesse_validator_draft6.erl:178-209)
             if isinstance(schema.get("exclusiveMinimum"), (int, float)) and not isinstance(schema.get("exclusiveMinimum"), bool):
                 m = _num_bound(schema["exclusiveMinimum"])
-                add(E.NOT_IN_RANGE, lambda c, m=m: _null_skip(c, c > F.lit(m)))
+                add(E.NOT_IN_RANGE, view.guard("number", lambda c, m=m: num(c) > F.lit(m)))
             if isinstance(schema.get("exclusiveMaximum"), (int, float)) and not isinstance(schema.get("exclusiveMaximum"), bool):
                 m = _num_bound(schema["exclusiveMaximum"])
-                add(E.NOT_IN_RANGE, lambda c, m=m: _null_skip(c, c < F.lit(m)))
+                add(E.NOT_IN_RANGE, view.guard("number", lambda c, m=m: num(c) < F.lit(m)))
         kw = "divisibleBy" if ctx.draft == DRAFT3 else "multipleOf"
         if kw in schema:
             k = schema[kw]
@@ -706,34 +748,36 @@ def compile_checks(
                 raise SchemaError(E.NOT_MULTIPLE_OF, k)
             if k == 0 and ctx.draft == DRAFT3:
                 # draft3: data-invalid, not schema-invalid (D3:860-861)
-                add(code, lambda c: _null_skip(c, F.lit(False)))
+                add(code, view.guard("number", lambda c: F.lit(False)))
             elif k <= 0:
                 raise SchemaError("wrong_multiple_of", k)
-            elif isinstance(dtype, _INTEGRAL) and isinstance(k, int):
-                add(code, lambda c, k=k: _null_skip(c, c % F.lit(k) == 0))
+            elif view.integral and isinstance(k, int):
+                add(code, view.guard("number", lambda c, k=k: num(c) % F.lit(k) == 0))
             else:
                 # jesse's float-tolerant formula, literally
                 # (jesse_validator_draft4.erl:1019-1029)
-                add(code, lambda c, k=k: _null_skip(
-                    c, (c / F.lit(k) - F.floor(c / F.lit(k))) * F.lit(k) == F.lit(0.0)))
+                add(code, view.guard("number", lambda c, k=_num_bound(k): (
+                    num(c) / F.lit(k) - F.floor(num(c) / F.lit(k))) * F.lit(k) == F.lit(0.0)))
 
     # ---- string length / pattern / format ---------------------------------
-    if is_str:
+    if view.may("string"):
         # F.length counts code points on strings — matches jesse's
         # unicode-length (jesse_validator_draft4.erl:915-920)
         if "minLength" in schema:
             n = schema["minLength"]
-            add(E.WRONG_LENGTH, lambda c, n=n: _null_skip(c, F.length(c) >= n))
+            add(E.WRONG_LENGTH, view.guard("string", lambda c, n=n: F.length(view.str(c)) >= n))
         if "maxLength" in schema:
             n = schema["maxLength"]
-            add(E.WRONG_LENGTH, lambda c, n=n: _null_skip(c, F.length(c) <= n))
+            add(E.WRONG_LENGTH, view.guard("string", lambda c, n=n: F.length(view.str(c)) <= n))
         if "pattern" in schema:
             p = schema["pattern"]
             _validate_pattern(p, ctx)
-            add(E.NO_MATCH, lambda c, p=p: _null_skip(c, c.rlike(p)))
+            add(E.NO_MATCH, view.guard("string", lambda c, p=p: view.str(c).rlike(p)))
         if "format" in schema and ctx.draft != DRAFT3:
             # draft3 format check is a no-op (jesse_validator_draft3.erl:851-852)
-            add(E.WRONG_FORMAT, _format_pred(schema["format"]))
+            fmt = _format_body(schema["format"])
+            add(E.WRONG_FORMAT, view.guard("string", lambda c: fmt(view.str(c)))
+                if fmt else lambda c: F.lit(True))
 
     # ---- examples (draft6) ---------------------------------------------
     # jesse QUIRK, reproduced faithfully: an `examples`-bearing draft6
@@ -741,20 +785,52 @@ def compile_checks(
     # — jesse_validator_draft6.erl:157-165 checks is_array(Value), not
     # the keyword's own value, although the spec calls it annotation
     if ctx.draft >= DRAFT6 and "examples" in schema:
-        add(E.NOT_ARRAY, lambda c: _null_skip(c, F.lit(is_arr)))
+        add(E.NOT_ARRAY, lambda c: _null_skip(c, F.lit(view.has(c, "array"))))
 
-    # ---- object keywords ---------------------------------------------------
-    if is_obj:
-        checks.extend(_object_checks(schema, dtype, ctx))
-
-    # ---- array keywords ------------------------------------------------------
-    if is_arr:
-        checks.extend(_array_checks(schema, dtype, ctx))
+    if view.may("object"):
+        checks.extend(_object_checks(schema, view, ctx))
+    if view.may("array"):
+        checks.extend(_array_checks(schema, view, ctx))
 
     # ---- combinators (boolean algebra over combined sub-preds) -------------
-    checks.extend(_combinator_checks(schema, ctx, compile_sub, _as_str))
+    checks.extend(_combinator_checks(schema, ctx, compile_sub, view.observed))
 
     return checks
+
+
+def _type_pred(decl: Any, view: Any, ctx: Ctx, null_is_absent: bool) -> Builder:
+    """``type``/``disallow`` membership.  Draft3 schema-valued members
+    (jesse_validator_draft3.erl:304-328) compile here, once: a bad
+    member fails the compile, and every render reuses the builders.  An
+    unknown type name fails the compile too (wrong_type_specification)
+    rather than compiling a check no value can pass."""
+    names = decl if isinstance(decl, list) else [decl]
+    members: list[str | Builder] = []
+    for n in names:
+        if isinstance(n, dict) and ctx.draft == DRAFT3:
+            members.append(_conj(_compile(n, view.as_value(), ctx)))
+        elif isinstance(n, str) and n in _TYPE_NAMES:
+            members.append(n)
+        else:
+            raise SchemaError(E.WRONG_TYPE_SPECIFICATION, decl)
+    null_ok = null_is_absent or "null" in names or "any" in names
+
+    def pred(col: Column) -> Column:
+        present_ok = F.lit(False)
+        for m in members:
+            present_ok = present_ok | (
+                F.lit(view.has(col, m, ctx.draft)) if isinstance(m, str)
+                else m(col))
+        return F.when(col.isNull(), F.lit(null_ok)).otherwise(present_ok)
+    return pred
+
+
+def _enum_pred(values: list, view: Any) -> Builder:
+    """``enum``: deep equality with a member, incl. 1 == 1.0 and
+    order-insensitive objects (jesse_lib.erl:218-261)."""
+    null_ok = view.null_is_absent or any(v is None for v in values)
+    return lambda c: F.when(c.isNull(), F.lit(null_ok)).otherwise(
+        F.coalesce(view.equals_any(c, values), F.lit(False)))
 
 
 def _ref_checks(schema: dict, ctx: Ctx, compile_sub: CompileSub,
@@ -801,45 +877,59 @@ def _ref_checks(schema: dict, ctx: Ctx, compile_sub: CompileSub,
         ref_seen=ctx.ref_seen + (target,)))
 
 
-def _format_pred(fmt: str) -> Builder:
-    """jesse_validator_draft4.erl:975-1004 (+1340-1354 date-time);
-    unknown formats and hostname/uri pass unvalidated."""
+def _format_body(fmt: str) -> Builder | None:
+    """The check of a string against ``format``
+    (jesse_validator_draft4.erl:975-1004, +1340-1354 date-time); None
+    for hostname/uri/uri-reference and unknown formats, which pass
+    unvalidated (jesse_validator_draft4.erl:1000-1004;
+    _draft6.erl:968-979)."""
     if fmt == "date-time":
-        return lambda c: _null_skip(c, c.rlike(_RFC3339_RE) & F.try_to_timestamp(
+        return lambda c: c.rlike(_RFC3339_RE) & F.try_to_timestamp(
             F.regexp_replace(F.regexp_replace(c, "[Tt]", " "), "[Zz]$", "+00:00")
-        ).isNotNull())
+        ).isNotNull()
     if fmt == "email":
-        return lambda c: _null_skip(c, c.rlike(_EMAIL_RE))
+        return lambda c: c.rlike(_EMAIL_RE)
     if fmt == "ipv4":
-        return lambda c: _null_skip(c, c.rlike(_IPV4_RE))
+        return lambda c: c.rlike(_IPV4_RE)
     if fmt == "ipv6":
-        return lambda c: _null_skip(c, c.rlike(_IPV6_RE))
-    # hostname / uri / uri-reference / unknown → accepted
-    # (jesse_validator_draft4.erl:1000-1004; _draft6.erl:968-979)
-    return lambda c: F.lit(True)
+        return lambda c: c.rlike(_IPV6_RE)
+    return None
 
 
 # ---------------------------------------------------------------------------
 # objects
 # ---------------------------------------------------------------------------
-def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
+def _at(view: Any, key: str | int, sub_checks: list[Check]) -> list[Check]:
+    """``sub_checks`` moved to the value at ``key`` (a property name or
+    an array index), each passing where that value is absent
+    (jesse_validator_draft4.erl:380-400)."""
+    return [Check(sc.constraint, f"/{key}{sc.path}",
+                  lambda c, k=key, p=sc.pred: F.when(
+                      view.absent(c, k), F.lit(True)).otherwise(p(view.get(c, k))),
+                  lambda c, k=key, o=sc.observed: o(view.get(c, k)))
+            for sc in sub_checks]
+
+
+def _every(sub_checks: list[Check], pred: Callable[[Builder], Builder],
+           observed: Builder) -> list[Check]:
+    """``sub_checks`` over runtime keys or elements: one check per inner
+    keyword, so each keeps its own code (jesse's error granularity); the
+    path is the wildcard ``/*``."""
+    return [Check(sc.constraint, f"/*{sc.path}", pred(sc.pred), observed)
+            for sc in sub_checks]
+
+
+def _object_checks(schema: dict, view: Any, ctx: Ctx) -> list[Check]:
+    """Object keywords.  A view with static ``fields`` (a struct) gets
+    per-field checks at ``/<name>``; runtime keys (a map, a variant)
+    get ``/*`` checks."""
     checks: list[Check] = []
     props: dict = schema.get("properties", {}) or {}
     pattern_props: dict = schema.get("patternProperties", {}) or {}
-    is_struct = isinstance(dtype, T.StructType)
+    fields = view.fields
 
-    def sub_wrap(name: str, getter: Callable[[Column], Column]) -> Callable[[Builder], Builder]:
-        # absent property → skip (jesse_validator_draft4.erl:380-400)
-        def wrap(b: Builder) -> Builder:
-            return lambda c: F.when(
-                c.isNull() | ~_present(c, dtype, name), F.lit(True)
-            ).otherwise(b(getter(c)))
-        return wrap
-
-    def sub_obs(name: str, getter: Callable[[Column], Column]) -> Callable[[Builder], Builder]:
-        def wrap(b: Builder) -> Builder:
-            return lambda c: b(getter(c))
-        return wrap
+    def keys_of(c: Column) -> Column:
+        return _as_str(F.map_keys(view.obj(c)))
 
     # ---- required ----------------------------------------------------------
     req: list[str] = []
@@ -857,80 +947,47 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
     for name in req:
         checks.append(Check(
             E.MISSING_REQUIRED_PROPERTY, "",
-            lambda c, n=name: _null_skip(c, _present(c, dtype, n)),
+            view.guard("object", lambda c, n=name: view.present(c, n)),
             lambda c, n=name: F.lit(n)))
 
     # ---- properties (recursion) --------------------------------------------
     for name, sub in props.items():
-        if is_struct:
-            if name not in dtype.fieldNames():
-                continue  # statically absent → always skipped
-            ft = dtype[name].dataType
-            getter = lambda c, n=name: _struct_get(c, n)
-        elif isinstance(dtype, T.MapType):
-            ft = dtype.valueType
-            getter = lambda c, n=name: _map_get(c, n)
-        else:
-            continue
-        for sc in compile_checks(sub, ft, null_is_absent=True, _ctx=ctx):
-            checks.append(Check(
-                sc.constraint, f"/{name}{sc.path}",
-                sub_wrap(name, getter)(sc.pred),
-                sub_obs(name, getter)(sc.observed)))
+        if fields is None or name in fields:  # a missing field is always absent
+            checks.extend(_at(view, name, _compile(sub, view.child(name), ctx)))
 
     # ---- patternProperties ---------------------------------------------------
     matched_by_pattern: set[str] = set()
     for pat, sub in pattern_props.items():
         rx = _pyre.compile(_validate_pattern(pat, ctx))
-        if is_struct:
-            for name in dtype.fieldNames():
+        if fields is not None:
+            for name in fields:
                 if rx.search(name):
                     matched_by_pattern.add(name)
-                    ft = dtype[name].dataType
-                    getter = lambda c, n=name: _struct_get(c, n)
-                    for sc in compile_checks(sub, ft, null_is_absent=True,
-                                             _ctx=ctx):
-                        checks.append(Check(
-                            sc.constraint, f"/{name}{sc.path}",
-                            sub_wrap(name, getter)(sc.pred),
-                            sub_obs(name, getter)(sc.observed)))
-        elif isinstance(dtype, T.MapType):
-            # runtime keys: one forall per inner keyword check so the
-            # element's OWN code survives (jesse's error granularity;
-            # key paths can't be static, so the path is the wildcard)
-            for sc in compile_checks(sub, dtype.valueType,
-                                     null_is_absent=True,
-                                     _ctx=ctx):
-                checks.append(Check(
-                    sc.constraint, f"/*{sc.path}",
-                    lambda c, p=pat, sp=sc.pred: _null_skip(c, F.forall(
-                        F.filter(F.map_entries(c),
-                                 lambda e: e.getField("key").rlike(p)),
-                        lambda e: sp(e.getField("value")))),
-                    lambda c: _as_str(F.map_keys(c))))
+                    checks.extend(_at(view, name, _compile(sub, view.child(name), ctx)))
+        else:
+            checks.extend(_every(
+                _compile(sub, view.child(), ctx),
+                lambda sp, p=pat: view.guard("object", lambda c: F.forall(
+                    F.filter(F.map_entries(view.obj(c)),
+                             lambda e: e.getField("key").rlike(p)),
+                    lambda e: sp(e.getField("value")))),
+                keys_of))
 
     # ---- additionalProperties (set algebra, D4:431-507) -----------------------
     addl = schema.get("additionalProperties")
     if addl is not None and addl is not True:
-        if is_struct:
-            extras = [n for n in dtype.fieldNames()
-                      if n not in props and n not in matched_by_pattern]
-            for name in extras:
+        if fields is not None:
+            for name in fields:
+                if name in props or name in matched_by_pattern:
+                    continue
                 if addl is False:
                     checks.append(Check(
                         E.NO_EXTRA_PROPERTIES_ALLOWED, f"/{name}",
-                        lambda c, n=name: _null_skip(c, ~_present(c, dtype, n)),
+                        view.guard("object", lambda c, n=name: ~view.present(c, n)),
                         lambda c, n=name: F.lit(n)))
                 else:
-                    ft = dtype[name].dataType
-                    getter = lambda c, n=name: _struct_get(c, n)
-                    for sc in compile_checks(addl, ft, null_is_absent=True,
-                                             _ctx=ctx):
-                        checks.append(Check(
-                            sc.constraint, f"/{name}{sc.path}",
-                            sub_wrap(name, getter)(sc.pred),
-                            sub_obs(name, getter)(sc.observed)))
-        elif isinstance(dtype, T.MapType):
+                    checks.extend(_at(view, name, _compile(addl, view.child(name), ctx)))
+        else:
             pats = list(pattern_props.keys())
             names = list(props.keys())
 
@@ -940,50 +997,45 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
                     for p in pats:
                         e = e & ~k.rlike(p)
                     return e
-                return F.filter(F.map_keys(c), is_extra)
+                return F.filter(F.map_keys(view.obj(c)), is_extra)
+
+            def extras_of(c: Column) -> Column:
+                return _as_str(extra_keys(c))
 
             if addl is False:
                 checks.append(Check(
                     E.NO_EXTRA_PROPERTIES_ALLOWED, "",
-                    lambda c: _null_skip(c, F.size(extra_keys(c)) == 0),
-                    lambda c: _as_str(extra_keys(c))))
+                    view.guard("object", lambda c: F.size(extra_keys(c)) == 0),
+                    extras_of))
             else:
-                # same inner-code preservation as patternProperties
-                for sc in compile_checks(addl, dtype.valueType,
-                                         null_is_absent=True,
-                                         _ctx=ctx):
-                    checks.append(Check(
-                        sc.constraint, f"/*{sc.path}",
-                        lambda c, sp=sc.pred: _null_skip(c, F.forall(
-                            extra_keys(c),
-                            lambda k: sp(F.element_at(c, k)))),
-                        lambda c: _as_str(extra_keys(c))))
+                checks.extend(_every(
+                    _compile(addl, view.child(), ctx),
+                    lambda sp: view.guard("object", lambda c: F.forall(
+                        extra_keys(c), lambda k: sp(F.element_at(view.obj(c), k)))),
+                    extras_of))
 
     # ---- propertyNames (draft6, jesse_validator_draft6.erl:114-125,424-436) ----
     if ctx.draft >= DRAFT6 and "propertyNames" in schema:
-        # inner codes propagate: jesse re-enters check_value on each
-        # NAME (jesse_validator_draft6.erl:424-436), so a too-long key
-        # reports wrong_length, not a collapsed not_schema_valid
-        sub = schema["propertyNames"]
-        name_checks = compile_checks(sub, T.StringType(),
-                                     null_is_absent=False,
-                                     _ctx=ctx)
-        if is_struct:
+        # names are strings in both modes; inner codes propagate: jesse
+        # re-enters check_value on each NAME (jesse_validator_draft6.erl:
+        # 424-436), so a too-long key reports wrong_length, not a
+        # collapsed not_schema_valid
+        name_checks = _compile(schema["propertyNames"], TypedView(T.StringType()), ctx)
+        if fields is not None:
             # static field names → constant-folded per-field presence check
-            for name in dtype.fieldNames():
+            for name in fields:
                 for sc in name_checks:
                     checks.append(Check(
                         sc.constraint, f"/{name}{sc.path}",
-                        lambda c, n=name, sp=sc.pred: _null_skip(
-                            c, ~_present(c, dtype, n) | sp(F.lit(n))),
+                        view.guard("object", lambda c, n=name, sp=sc.pred:
+                                   ~view.present(c, n) | sp(F.lit(n))),
                         lambda c, n=name: F.lit(n)))
         else:
-            for sc in name_checks:
-                checks.append(Check(
-                    sc.constraint, f"/*{sc.path}",
-                    lambda c, sp=sc.pred: _null_skip(
-                        c, F.forall(F.map_keys(c), lambda k: sp(k))),
-                    lambda c: _as_str(F.map_keys(c))))
+            checks.extend(_every(
+                name_checks,
+                lambda sp: view.guard("object", lambda c: F.forall(
+                    F.map_keys(view.obj(c)), lambda k: sp(k))),
+                keys_of))
 
     # ---- min/maxProperties (D4:1073-1107) ---------------------------------------
     for kw, code, cmp in (("maxProperties", E.TOO_MANY_PROPERTIES, "le"),
@@ -994,38 +1046,32 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
                 raise SchemaError("wrong_" + ("max" if cmp == "le" else "min") + "_properties", n)
             checks.append(Check(
                 code, "",
-                lambda c, n=n, cmp=cmp: _null_skip(
-                    c, (_prop_count(c, dtype) <= n) if cmp == "le" else (_prop_count(c, dtype) >= n)),
-                lambda c: _as_str(_prop_count(c, dtype))))
+                view.guard("object", lambda c, n=n, cmp=cmp: (
+                    view.prop_count(c) <= n) if cmp == "le" else (view.prop_count(c) >= n)),
+                lambda c: _as_str(view.prop_count(c))))
 
     # ---- dependencies (D4:637-694) ------------------------------------------------
     deps = schema.get("dependencies")
     if isinstance(deps, dict):
         for name, dep in deps.items():
-            if isinstance(dep, list):
-                for d in dep:  # array form: co-presence
+            if isinstance(dep, list) or (isinstance(dep, str) and ctx.draft == DRAFT3):
+                # array form (draft3 also a single name): co-presence
+                for d in dep if isinstance(dep, list) else [dep]:
                     checks.append(Check(
                         E.MISSING_DEPENDENCY, "",
-                        lambda c, n=name, d=d: _null_skip(
-                            c, ~_present(c, dtype, n) | _present(c, dtype, d)),
+                        view.guard("object", lambda c, n=name, d=d:
+                                   ~view.present(c, n) | view.present(c, d)),
                         lambda c, d=d: F.lit(d)))
-            elif isinstance(dep, str) and ctx.draft == DRAFT3:
-                checks.append(Check(
-                    E.MISSING_DEPENDENCY, "",
-                    lambda c, n=name, d=dep: _null_skip(
-                        c, ~_present(c, dtype, n) | _present(c, dtype, d)),
-                    lambda c, d=dep: F.lit(d)))
             else:
                 # schema form: whole instance validates against the
                 # sub-schema; inner codes propagate — jesse re-enters
                 # check_value here (jesse_validator_draft4.erl:653-661),
                 # so failures carry the inner keyword's code
-                for sc in compile_checks(dep, dtype, null_is_absent=False,
-                                         _ctx=ctx):
+                for sc in _compile(dep, view.as_value(), ctx):
                     checks.append(Check(
                         sc.constraint, sc.path,
-                        lambda c, n=name, sp=sc.pred: _null_skip(
-                            c, ~_present(c, dtype, n) | sp(c)),
+                        view.guard("object", lambda c, n=name, sp=sc.pred:
+                                   ~view.present(c, n) | sp(c)),
                         sc.observed))
 
     return checks
@@ -1034,85 +1080,71 @@ def _object_checks(schema: dict, dtype: T.DataType, ctx: Ctx) -> list[Check]:
 # ---------------------------------------------------------------------------
 # arrays
 # ---------------------------------------------------------------------------
-def _array_checks(schema: dict, dtype: T.ArrayType, ctx: Ctx) -> list[Check]:
+def _array_checks(schema: dict, view: Any, ctx: Ctx) -> list[Check]:
     checks: list[Check] = []
-    elem = dtype.elementType
+    arr = view.arr
+
+    def size_of(c: Column) -> Column:
+        return _as_str(F.size(arr(c)))
 
     if "minItems" in schema:
         n = schema["minItems"]
         checks.append(Check(E.WRONG_SIZE, "",
-                            lambda c, n=n: _null_skip(c, F.size(c) >= n),
-                            lambda c: _as_str(F.size(c))))
+                            view.guard("array", lambda c, n=n: F.size(arr(c)) >= n),
+                            size_of))
     if "maxItems" in schema:
         n = schema["maxItems"]
         checks.append(Check(E.WRONG_SIZE, "",
-                            lambda c, n=n: _null_skip(c, F.size(c) <= n),
-                            lambda c: _as_str(F.size(c))))
+                            view.guard("array", lambda c, n=n: F.size(arr(c)) <= n),
+                            size_of))
 
     if schema.get("uniqueItems") is True:
-        # in-row fast path: exact distinct-count equality — same check as
-        # jesse's O(n) set-cardinality phase (D4:846-855); numeric 1==1.0
-        # holds because the array has one static element type.  Elements
-        # containing maps can't be compared natively: canonicalize
-        # (key-sorted entries — order-insensitive like jesse_lib:147-197)
-        if _contains_map(elem):
-            checks.append(Check(
-                E.NOT_UNIQUE, "",
-                lambda c: _null_skip(c, F.size(F.array_distinct(
-                    F.transform(c, lambda e: _typed_canonical(e, elem)))) == F.size(c)),
-                lambda c: _as_str(c)))
-        else:
-            checks.append(Check(E.NOT_UNIQUE, "",
-                                lambda c: _null_skip(c, F.size(F.array_distinct(c)) == F.size(c)),
-                                lambda c: _as_str(c)))
+        # in-row: exact distinct-count equality — same check as jesse's
+        # O(n) set-cardinality phase (D4:846-855)
+        checks.append(Check(
+            E.NOT_UNIQUE, "",
+            view.guard("array", lambda c: F.size(F.array_distinct(
+                view.unique_items(c))) == F.size(arr(c))),
+            view.observed))
 
     items = schema.get("items")
     if items is not None:
         if isinstance(items, list):
             # tuple form (D4:565-603)
             for i, sub in enumerate(items):
-                for sc in compile_checks(sub, elem, null_is_absent=False,
-                                         _ctx=ctx):
-                    checks.append(Check(
-                        sc.constraint, f"/{i}{sc.path}",
-                        lambda c, i=i, p=sc.pred: F.when(
-                            c.isNull() | (F.size(c) <= i), F.lit(True)
-                        ).otherwise(p(F.get(c, i))),
-                        lambda c, i=i, o=sc.observed: o(F.get(c, i))))
+                checks.extend(_at(view, i, _compile(sub, view.item(), ctx)))
             addl = schema.get("additionalItems")
+            n = len(items)
             if addl is False:
-                n = len(items)
                 checks.append(Check(
                     E.NO_EXTRA_ITEMS_ALLOWED, "",
-                    lambda c, n=n: _null_skip(c, F.size(c) <= n),
-                    lambda c: _as_str(F.size(c))))
+                    view.guard("array", lambda c, n=n: F.size(arr(c)) <= n),
+                    size_of))
             elif isinstance(addl, (dict, bool)) and addl is not True:
-                ap = compile_pred(addl, elem, ctx=ctx)
-                n = len(items)
+                ap = _conj(_compile(addl, view.item(), ctx))
                 checks.append(Check(
                     E.NOT_SCHEMA_VALID, "",
-                    lambda c, n=n, ap=ap: _null_skip(c, F.forall(
-                        F.slice(c, n + 1, F.greatest(F.size(c) - n, F.lit(0))), lambda x: ap(x))),
-                    lambda c: _as_str(c)))
+                    view.guard("array", lambda c, n=n, ap=ap: F.forall(
+                        F.slice(arr(c), n + 1, F.greatest(F.size(arr(c)) - n, F.lit(0))),
+                        lambda x: ap(x))),
+                    view.observed))
         else:
             # single-schema form: per-keyword granularity preserved —
             # each item keyword becomes its own forall() check with the
             # element path wildcard (posexplode rebuilds exact indices in
             # plans.validate.explain-mode)
-            for sc in compile_checks(items, elem, null_is_absent=False,
-                                     _ctx=ctx):
-                checks.append(Check(
-                    sc.constraint, f"/*{sc.path}",
-                    lambda c, p=sc.pred: _null_skip(c, F.forall(c, lambda x: p(x))),
-                    lambda c: _as_str(c)))
+            checks.extend(_every(
+                _compile(items, view.item(), ctx),
+                lambda p: view.guard("array", lambda c: F.forall(arr(c), lambda x: p(x))),
+                view.observed))
 
     if ctx.draft >= DRAFT6 and "contains" in schema:
         # ≥1 element matches; empty array fails (jesse_validator_draft6.erl:569-587)
-        cp = compile_pred(schema["contains"], elem, ctx=ctx)
+        cp = _conj(_compile(schema["contains"], view.item(), ctx))
         checks.append(Check(
             E.VALIDATION_ALWAYS_FAILS, "",
-            lambda c, cp=cp: _null_skip(c, F.exists(c, lambda x: cp(x))),
-            lambda c: _as_str(c)))
+            view.guard("array", lambda c, cp=cp: F.exists(arr(c), lambda x: cp(x))),
+            view.observed))
 
     return checks
 
@@ -1279,8 +1311,5 @@ def compile_pred(
     Spark short-circuits the conjunction in
     codegen, matching jesse's fail-fast default
     (allowed_errors = 0, jesse_state.erl:126-129)."""
-    if ctx is None:
-        ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
-                  registry=registry, root=schema)
-    return _conj(compile_checks(schema, dtype, null_is_absent=null_is_absent,
-                                _ctx=ctx))
+    return _conj(compile_checks(schema, dtype, registry=registry, draft=draft,
+                                null_is_absent=null_is_absent, _ctx=ctx))

@@ -1,12 +1,13 @@
-"""Dynamic-typing compiler: the leaf JSON-Schema keywords over VariantType.
+"""Dynamic-typing compiler: the JSON-Schema keywords over VariantType.
 
 The reference is schema-on-read — type is discovered per value
 (jesse_lib.erl:92-110) — and the JSON-Schema-Test-Suite exercises
-heterogeneous instances.  This module compiles the leaf keywords against
-a ``VariantType`` column with **runtime** type dispatch via
-``schema_of_variant``, still 100% JVM-side expressions; ``$ref``
-inlining and the combinators come from jesse_spark.compiler, shared
-with the typed mode.
+heterogeneous instances.  This module holds the variant type view: the
+runtime type predicates over ``schema_of_variant``, the accessors, and
+the value-level recursions (deep equality for enum/const, the
+uniqueItems canonical form).  Every keyword itself is written once, in
+jesse_spark.compiler, and asks this view its type questions; the
+output is still 100% JVM-side expressions.
 
 Semantics notes (mirroring the reference):
 - a keyword type-guarded in jesse (e.g. ``minimum`` only
@@ -26,36 +27,24 @@ Semantics notes (mirroring the reference):
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from jesse_spark.compiler import (
     Builder,
     Check,
     Ctx,
-    _combinator_checks,
+    _compile,
     _conj,
-    _format_pred,
-    _num_bound,
-    _ref_checks,
+    _json_escape,
     _reduce_or,
-    _scoped,
-    _validate_pattern,
+    _root_ctx,
 )
-from jesse_spark.errors import ErrorCodes as E
 from jesse_spark.errors import SchemaError
-from jesse_spark.schema.parser import (
-    DRAFT3,
-    DRAFT4,
-    DRAFT6,
-    SchemaRegistry,
-    detect_draft,
-    hoist_ref,
-    normalize_schema,
-)
+from jesse_spark.schema.parser import DRAFT6, SchemaRegistry
 
 _DECIMAL0 = r"^DECIMAL\(\d+,0\)$"
 
@@ -139,46 +128,6 @@ def as_arr(v: Column) -> Column:
     return v.cast("array<variant>")
 
 
-def _present(m: Column, name: str) -> Column:
-    """Property present (may still be JSON null)."""
-    return F.map_contains_key(m, F.lit(name))
-
-
-def _type_members(decl: Any, ctx: Ctx) -> list:
-    """``type``/``disallow`` members for :func:`_type_name_pred`; draft3
-    schema-valued ones compile here, once, as in compiler._type_pred."""
-    members = []
-    for name in decl if isinstance(decl, list) else [decl]:
-        if isinstance(name, dict):
-            if ctx.draft != DRAFT3:
-                raise SchemaError(E.WRONG_TYPE_SPECIFICATION, name)
-            name = compile_variant_pred(name, ctx=ctx)
-        members.append(name)
-    return members
-
-
-def _type_name_pred(v: Column, name: Any, ctx: Ctx) -> Column:
-    if callable(name):
-        return name(v)
-    if name == "string":
-        return is_string(v)
-    if name == "number":
-        return is_number(v)
-    if name == "integer":
-        return is_integer(v, ctx.draft)
-    if name == "boolean":
-        return is_boolean(v)
-    if name == "object":
-        return is_object(v)
-    if name == "array":
-        return is_array(v)
-    if name == "null":
-        return is_null(v)
-    if name == "any":
-        return F.lit(True)
-    raise SchemaError(E.WRONG_TYPE_SPECIFICATION, name)
-
-
 def _enum_value_pred(v: Column, val: Any) -> Column:
     """Deep structural equality against a Python JSON literal:
     order-INsensitive for object properties (per-key comparison),
@@ -249,11 +198,7 @@ def _elem_canonical(e: Column, depth: int = _CANON_DEPTH) -> Column:
         F.lit("{"),
         F.array_join(
             F.transform(entries, lambda ent: F.concat(
-                F.lit('"'),
-                F.regexp_replace(F.regexp_replace(ent.getField("key"),
-                                                  r"\\", r"\\\\"),
-                                 '"', '\\\\"'),
-                F.lit('":'),
+                F.lit('"'), _json_escape(ent.getField("key")), F.lit('":'),
                 _elem_canonical(ent.getField("value"), depth - 1))),
             ","),
         F.lit("}"))
@@ -268,14 +213,75 @@ def _elem_canonical(e: Column, depth: int = _CANON_DEPTH) -> Column:
             .otherwise(F.to_json(e)))
 
 
-def _guard(cond: Column, body: Column) -> Column:
-    """Type-guarded keyword: inapplicable type → valid (jesse no-op)."""
-    return F.when(cond, body).otherwise(F.lit(True))
+# ---------------------------------------------------------------------------
+# the variant type view and the compiler entry points
+# ---------------------------------------------------------------------------
+_IS = {"string": is_string, "number": is_number, "boolean": is_boolean,
+       "object": is_object, "array": is_array, "null": is_null}
 
 
-# ---------------------------------------------------------------------------
-# the compiler
-# ---------------------------------------------------------------------------
+class VariantView:
+    """A VariantType value: every type question is a runtime
+    ``schema_of_variant`` test, and a type-guarded keyword compiles to
+    ``WHEN <type test> THEN check ELSE true``.  A SQL null is an absent
+    value (JSON null is a variant of type VOID).  Properties and
+    elements are variants again, so every child view is this one.  The
+    typed-mode counterpart is ``jesse_spark.compiler.TypedView``."""
+
+    null_is_absent = True
+    fields = None       # object keys are runtime data
+    integral = False    # numbers are read as double
+    observed = staticmethod(F.to_json)
+    num = staticmethod(as_num)
+    str = staticmethod(as_str)
+    obj = staticmethod(as_map)
+    arr = staticmethod(as_arr)
+
+    def may(self, jtype: str) -> bool:
+        return True
+
+    def has(self, v: Column, jtype: str, draft: int | None = None) -> Column:
+        if jtype == "integer":
+            return is_integer(v, draft)
+        if jtype == "any":
+            return F.lit(True)
+        return _IS[jtype](v)
+
+    def guard(self, jtype: str, body: Builder) -> Builder:
+        return lambda v: F.when(self.has(v, jtype), body(v)).otherwise(F.lit(True))
+
+    def present(self, v: Column, name: str) -> Column:
+        """Property present (may still be JSON null)."""
+        return is_object(v) & F.map_contains_key(as_map(v), F.lit(name))
+
+    def absent(self, v: Column, key: str | int) -> Column:
+        if isinstance(key, int):
+            return v.isNull() | ~(is_array(v) & (F.size(as_arr(v)) > key))
+        return v.isNull() | ~self.present(v, key)
+
+    def get(self, v: Column, key: str | int) -> Column:
+        if isinstance(key, int):
+            return F.get(as_arr(v), key)
+        return F.element_at(as_map(v), F.lit(key))
+
+    def child(self, name: str | None = None) -> "VariantView":
+        return self
+
+    item = as_value = child
+
+    def prop_count(self, v: Column) -> Column:
+        return F.size(F.map_keys(as_map(v)))
+
+    def equals_any(self, v: Column, values: list) -> Column:
+        return _reduce_or([_enum_value_pred(v, x) for x in values])
+
+    def unique_items(self, v: Column) -> Column:
+        return F.transform(as_arr(v), lambda x: _elem_canonical(x))
+
+
+_VARIANT = VariantView()
+
+
 def compile_variant_checks(
     schema: Any,
     *,
@@ -286,299 +292,16 @@ def compile_variant_checks(
     pattern_lint: bool = True,
     _ctx: Ctx | None = None,
 ) -> list[Check]:
-    if _ctx is None:
-        _ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
-                   registry=registry, root=schema,
-                   anyof_detail_max=anyof_detail_max,
-                   ref_unroll_max=ref_unroll_max,
-                   pattern_lint=pattern_lint)
-    ctx = _ctx
-    schema = normalize_schema(schema, ctx.draft)
-    ctx = _scoped(ctx, schema)
-    schema = hoist_ref(schema)
-
-    checks: list[Check] = []
-
-    def add(constraint: str, pred: Builder, path: str = "",
-            observed: Builder | None = None) -> None:
-        checks.append(Check(constraint, path, pred,
-                            observed or (lambda v: F.to_json(v))))
-
-    def compile_sub(s: Any, c: Ctx) -> list[Check]:
-        return compile_variant_checks(s, _ctx=c)
-
-    def sub_pred(s: Any) -> Builder:
-        return _conj(compile_sub(s, ctx))
-
-    inlined = _ref_checks(schema, ctx, compile_sub, F.to_json)
-    if inlined is not None:
-        return inlined
-
-    # ---- type / disallow --------------------------------------------------
-    if "type" in schema:
-        ns = _type_members(schema["type"], ctx)
-        add(E.WRONG_TYPE,
-            lambda v, ns=ns: _reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
-    if ctx.draft == DRAFT3 and "disallow" in schema:
-        ns = _type_members(schema["disallow"], ctx)
-        add(E.NOT_ALLOWED,
-            lambda v, ns=ns: ~_reduce_or([_type_name_pred(v, n, ctx) for n in ns]))
-
-    # ---- enum / const -------------------------------------------------------
-    if "enum" in schema:
-        vals = schema["enum"]
-        if not isinstance(vals, list):
-            raise SchemaError("schema_invalid", vals)
-        add(E.NOT_IN_ENUM,
-            lambda v, vs=vals: _reduce_or([_enum_value_pred(v, x) for x in vs]))
-    if ctx.draft >= DRAFT6 and "const" in schema:
-        add(E.NOT_IN_ENUM,
-            lambda v, x=schema["const"]: _enum_value_pred(v, x))
-
-    # ---- numeric ---------------------------------------------------------------
-    if "minimum" in schema:
-        m = _num_bound(schema["minimum"])
-        excl = ctx.draft <= DRAFT4 and schema.get("exclusiveMinimum") is True
-        add(E.NOT_IN_RANGE, lambda v, m=m, e=excl: _guard(
-            is_number(v), (as_num(v) > m) if e else (as_num(v) >= m)))
-    if "maximum" in schema:
-        m = _num_bound(schema["maximum"])
-        excl = ctx.draft <= DRAFT4 and schema.get("exclusiveMaximum") is True
-        add(E.NOT_IN_RANGE, lambda v, m=m, e=excl: _guard(
-            is_number(v), (as_num(v) < m) if e else (as_num(v) <= m)))
-    if ctx.draft >= DRAFT6:
-        for kw, op in (("exclusiveMinimum", "gt"), ("exclusiveMaximum", "lt")):
-            b = schema.get(kw)
-            if isinstance(b, (int, float)) and not isinstance(b, bool):
-                b = _num_bound(b)
-                add(E.NOT_IN_RANGE, lambda v, b=b, op=op: _guard(
-                    is_number(v),
-                    (as_num(v) > b) if op == "gt" else (as_num(v) < b)))
-    kw = "divisibleBy" if ctx.draft == DRAFT3 else "multipleOf"
-    if kw in schema:
-        k = schema[kw]
-        code = E.NOT_DIVISIBLE if ctx.draft == DRAFT3 else E.NOT_MULTIPLE_OF
-        if not isinstance(k, (int, float)) or isinstance(k, bool):
-            raise SchemaError(E.NOT_MULTIPLE_OF, k)
-        if k == 0 and ctx.draft == DRAFT3:
-            add(code, lambda v: _guard(is_number(v), F.lit(False)))
-        elif k <= 0:
-            raise SchemaError("wrong_multiple_of", k)
-        else:
-            # jesse's float-tolerant formula (jesse_validator_draft4.erl:1019-1029)
-            add(code, lambda v, k=float(k): _guard(
-                is_number(v),
-                (as_num(v) / k - F.floor(as_num(v) / k)) * k == F.lit(0.0)))
-
-    # ---- string ------------------------------------------------------------------
-    if "minLength" in schema:
-        n = schema["minLength"]
-        add(E.WRONG_LENGTH, lambda v, n=n: _guard(is_string(v), F.length(as_str(v)) >= n))
-    if "maxLength" in schema:
-        n = schema["maxLength"]
-        add(E.WRONG_LENGTH, lambda v, n=n: _guard(is_string(v), F.length(as_str(v)) <= n))
-    if "pattern" in schema:
-        p = schema["pattern"]
-        _validate_pattern(p, ctx)
-        add(E.NO_MATCH, lambda v, p=p: _guard(is_string(v), as_str(v).rlike(p)))
-    if "format" in schema and ctx.draft != DRAFT3:
-        fp = _format_pred(schema["format"])
-        add(E.WRONG_FORMAT, lambda v, fp=fp: _guard(is_string(v), fp(as_str(v))))
-
-    # ---- examples (draft6) -------------------------------------------------
-    # jesse QUIRK reproduced faithfully: the instance must be an array
-    # when the schema carries `examples` (jesse_validator_draft6.erl:
-    # 157-165 checks is_array(Value); the spec calls it annotation)
-    if ctx.draft >= DRAFT6 and "examples" in schema:
-        add(E.NOT_ARRAY, lambda v: is_array(v))
-
-    # ---- object -----------------------------------------------------------------
-    props: dict = schema.get("properties", {}) or {}
-    pattern_props: dict = schema.get("patternProperties", {}) or {}
-
-    req: list[str] = []
-    if ctx.draft >= DRAFT4:
-        r = schema.get("required")
-        if r is not None:
-            if not isinstance(r, list):
-                raise SchemaError("wrong_required_array", r)
-            req = list(r)
-    else:
-        req = [n for n, s in props.items()
-               if isinstance(s, dict) and s.get("required") is True]
-    for name in req:
-        add(E.MISSING_REQUIRED_PROPERTY,
-            lambda v, n=name: _guard(is_object(v), _present(as_map(v), n)),
-            observed=lambda v, n=name: F.lit(n))
-
-    # per-keyword code granularity preserved through the recursion —
-    # a failing {"properties": {"a": {"minLength": 1}}} reports
-    # wrong_length at /a, not a collapsed not_schema_valid, exactly as
-    # the typed compiler and jesse's error reports do
-    # (jesse_validator_draft4.erl check_value recursion)
-    for name, sub in props.items():
-        for sc in compile_variant_checks(sub, _ctx=ctx):
-            add(sc.constraint,
-                (lambda n, p: lambda v: _guard(
-                    is_object(v) & _present(as_map(v), n),
-                    p(F.element_at(as_map(v), F.lit(n)))))(name, sc.pred),
-                path=f"/{name}{sc.path}",
-                observed=(lambda n, o: lambda v:
-                          o(F.element_at(as_map(v), F.lit(n))))(
-                              name, sc.observed))
-
-    # patternProperties: same inner-code preservation as properties —
-    # one forall per inner keyword check over the matching entries
-    for pat, sub in pattern_props.items():
-        _validate_pattern(pat, ctx)
-        for sc in compile_variant_checks(sub, _ctx=ctx):
-            add(sc.constraint,
-                (lambda p, sp: lambda v: _guard(is_object(v), F.forall(
-                    F.filter(F.map_entries(as_map(v)),
-                             lambda e: e.getField("key").rlike(p)),
-                    lambda e: sp(e.getField("value")))))(pat, sc.pred),
-                path=f"/*{sc.path}")
-
-    addl = schema.get("additionalProperties")
-    if addl is not None and addl is not True:
-        names = list(props.keys())
-        pats = list(pattern_props.keys())
-
-        def extra_keys(v: Column) -> Column:
-            def is_extra(k: Column) -> Column:
-                e = ~k.isin(*names) if names else F.lit(True)
-                for p in pats:
-                    e = e & ~k.rlike(p)
-                return e
-            return F.filter(F.map_keys(as_map(v)), is_extra)
-
-        if addl is False:
-            add(E.NO_EXTRA_PROPERTIES_ALLOWED,
-                lambda v: _guard(is_object(v), F.size(extra_keys(v)) == 0),
-                observed=lambda v: F.to_json(extra_keys(v)))
-        else:
-            # schema form: inner keyword codes survive over the extras
-            for sc in compile_variant_checks(addl, _ctx=ctx):
-                add(sc.constraint,
-                    (lambda sp: lambda v: _guard(is_object(v), F.forall(
-                        extra_keys(v),
-                        lambda k: sp(F.element_at(as_map(v), k)))))(sc.pred),
-                    path=f"/*{sc.path}")
-
-    if ctx.draft >= DRAFT6 and "propertyNames" in schema:
-        # names are plain strings → reuse the TYPED string compiler;
-        # inner codes propagate (jesse_validator_draft6.erl:424-436)
-        from jesse_spark.compiler import compile_checks as _typed_checks
-
-        for sc in _typed_checks(schema["propertyNames"], T.StringType(),
-                                null_is_absent=False, _ctx=ctx):
-            add(sc.constraint,
-                (lambda sp: lambda v: _guard(
-                    is_object(v),
-                    F.forall(F.map_keys(as_map(v)), lambda k: sp(k))))(
-                        sc.pred),
-                path=f"/*{sc.path}")
-
-    for kw2, code, le in (("maxProperties", E.TOO_MANY_PROPERTIES, True),
-                          ("minProperties", E.TOO_FEW_PROPERTIES, False)):
-        if ctx.draft >= DRAFT4 and kw2 in schema:
-            n = schema[kw2]
-            if not isinstance(n, int) or isinstance(n, bool) or n < 0:
-                raise SchemaError("wrong_%s_properties" % ("max" if le else "min"), n)
-            add(code, lambda v, n=n, le=le: _guard(
-                is_object(v),
-                (F.size(F.map_keys(as_map(v))) <= n) if le
-                else (F.size(F.map_keys(as_map(v))) >= n)))
-
-    deps = schema.get("dependencies")
-    if isinstance(deps, dict):
-        for name, dep in deps.items():
-            if isinstance(dep, list):
-                for d in dep:
-                    add(E.MISSING_DEPENDENCY, lambda v, n=name, d=d: _guard(
-                        is_object(v) & _present(as_map(v), n),
-                        _present(as_map(v), d)),
-                        observed=lambda v, d=d: F.lit(d))
-            elif isinstance(dep, str) and ctx.draft == DRAFT3:
-                add(E.MISSING_DEPENDENCY, lambda v, n=name, d=dep: _guard(
-                    is_object(v) & _present(as_map(v), n),
-                    _present(as_map(v), d)),
-                    observed=lambda v, d=dep: F.lit(d))
-            else:
-                # schema form: inner codes propagate, like the typed
-                # compiler (jesse_validator_draft4.erl:653-661)
-                for sc in compile_variant_checks(dep, _ctx=ctx):
-                    add(sc.constraint,
-                        (lambda n, sp: lambda v: _guard(
-                            is_object(v) & _present(as_map(v), n),
-                            sp(v)))(name, sc.pred),
-                        path=sc.path, observed=sc.observed)
-
-    # ---- array -----------------------------------------------------------------
-    items = schema.get("items")
-    if items is not None:
-        if isinstance(items, list):
-            # tuple form: inner keyword codes survive at /<i>, like the
-            # typed compiler's recursion (compiler.py items tuple form)
-            for i, sub in enumerate(items):
-                for sc in compile_variant_checks(sub, _ctx=ctx):
-                    add(sc.constraint,
-                        (lambda i, p: lambda v: _guard(
-                            is_array(v) & (F.size(as_arr(v)) > i),
-                            p(F.get(as_arr(v), i))))(i, sc.pred),
-                        path=f"/{i}{sc.path}",
-                        observed=(lambda i, o: lambda v:
-                                  o(F.get(as_arr(v), i)))(i, sc.observed))
-            adl = schema.get("additionalItems")
-            if adl is False:
-                n = len(items)
-                add(E.NO_EXTRA_ITEMS_ALLOWED, lambda v, n=n: _guard(
-                    is_array(v), F.size(as_arr(v)) <= n))
-            elif isinstance(adl, (dict, bool)) and adl is not True:
-                ap = sub_pred(adl)
-                n = len(items)
-                add(E.NOT_SCHEMA_VALID, lambda v, n=n, ap=ap: _guard(
-                    is_array(v), F.forall(
-                        F.slice(as_arr(v), n + 1,
-                                F.greatest(F.size(as_arr(v)) - n, F.lit(0))),
-                        lambda x: ap(x))))
-        else:
-            # single-schema form: one forall per inner keyword check so
-            # the element's own violation code surfaces at /*
-            for sc in compile_variant_checks(items, _ctx=ctx):
-                add(sc.constraint,
-                    (lambda p: lambda v: _guard(
-                        is_array(v),
-                        F.forall(as_arr(v), lambda x: p(x))))(sc.pred),
-                    path=f"/*{sc.path}")
-
-    if "minItems" in schema:
-        n = schema["minItems"]
-        add(E.WRONG_SIZE, lambda v, n=n: _guard(is_array(v), F.size(as_arr(v)) >= n))
-    if "maxItems" in schema:
-        n = schema["maxItems"]
-        add(E.WRONG_SIZE, lambda v, n=n: _guard(is_array(v), F.size(as_arr(v)) <= n))
-    if schema.get("uniqueItems") is True:
-        add(E.NOT_UNIQUE, lambda v: _guard(
-            is_array(v),
-            F.size(F.array_distinct(
-                F.transform(as_arr(v), lambda x: _elem_canonical(x))))
-            == F.size(as_arr(v))))
-    if ctx.draft >= DRAFT6 and "contains" in schema:
-        cp = sub_pred(schema["contains"])
-        add(E.VALIDATION_ALWAYS_FAILS, lambda v, cp=cp: _guard(
-            is_array(v), F.exists(as_arr(v), lambda x: cp(x))))
-
-    checks.extend(_combinator_checks(schema, ctx, compile_sub, F.to_json))
-
-    # ---- null/absent wrapper ----------------------------------------------------
+    """Compile a schema against a VariantType column: the keyword writer
+    of jesse_spark.compiler over the runtime-typed view."""
+    ctx = _root_ctx(schema, _ctx, draft, registry,
+                    anyof_detail_max=anyof_detail_max,
+                    ref_unroll_max=ref_unroll_max, pattern_lint=pattern_lint)
     # a SQL-null variant is an ABSENT value: every check passes (absent
     # properties are skipped, jesse_validator_draft4.erl:380-400)
-    return [Check(c.constraint, c.path,
-                  (lambda pred: lambda v: F.when(v.isNull(), F.lit(True))
-                   .otherwise(pred(v)))(c.pred),
-                  c.observed)
-            for c in checks]
+    return [replace(c, pred=lambda v, p=c.pred: F.when(v.isNull(), F.lit(True))
+                    .otherwise(p(v)))
+            for c in _compile(schema, _VARIANT, ctx)]
 
 
 def compile_variant_pred(
@@ -588,7 +311,5 @@ def compile_variant_pred(
     draft: int | None = None,
     ctx: Ctx | None = None,
 ) -> Builder:
-    if ctx is None:
-        ctx = Ctx(draft=detect_draft(schema) if draft is None else draft,
-                  registry=registry, root=schema)
-    return _conj(compile_variant_checks(schema, _ctx=ctx))
+    return _conj(compile_variant_checks(schema, registry=registry, draft=draft,
+                                        _ctx=ctx))

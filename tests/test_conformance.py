@@ -518,23 +518,23 @@ def test_ref_expansion_budget_fails_fast():
             compile_checks(branchy, T.LongType(), anyof_detail_max=0)
 
 
+def _compile_in(mode):
+    import jesse_spark.variant_compiler as vc
+
+    if mode == "typed":
+        return lambda schema: compile_checks(schema, T.StringType())
+    return vc.compile_variant_checks
+
+
 @pytest.mark.parametrize("mode", ["typed", "variant"])
 def test_draft3_type_members_compile_once(spark, monkeypatch, mode):
     """Draft3 schema-valued ``type`` members compile with their parent:
     a bad member fails the compile, as the same keyword at top level
     does, and rendering the wrong_type pred compiles nothing."""
-    from functools import partial
-
     import jesse_spark.compiler as tc
-    import jesse_spark.variant_compiler as vc
     from jesse_spark.errors import SchemaError
 
-    if mode == "typed":
-        mod, name = tc, "compile_checks"
-        compile_ = partial(tc.compile_checks, dtype=T.StringType())
-    else:
-        mod, name = vc, "compile_variant_checks"
-        compile_ = vc.compile_variant_checks
+    compile_ = _compile_in(mode)
     bad = {"type": "string", "pattern": "("}
     with pytest.raises(SchemaError) as top:
         compile_({**D3, **bad})
@@ -545,9 +545,23 @@ def test_draft3_type_members_compile_once(spark, monkeypatch, mode):
     checks = compile_({**D3, "type": ["integer", {"type": "string",
                                                   "minLength": 2}]})
     (wt,) = [c for c in checks if c.constraint == "wrong_type"]
+    # every sub-schema of both modes compiles through this one entry
     calls = []
-    real = getattr(mod, name)
+    real = tc._compile
     monkeypatch.setattr(
-        mod, name, lambda *a, **k: calls.append(a) or real(*a, **k))
+        tc, "_compile", lambda *a, **k: calls.append(a) or real(*a, **k))
     assert str(wt.pred(F.col("x"))) == str(wt.pred(F.col("x")))
     assert calls == []
+
+
+@pytest.mark.parametrize("mode", ["typed", "variant"])
+@pytest.mark.parametrize("decl", ["foo", ["integer", "foo"], 5])
+def test_unknown_type_name_fails_compile(mode, decl):
+    """A ``type`` that names no JSON type fails the compile in both
+    modes (wrong_type_specification) instead of compiling a check that
+    rejects every value, or one that raises only when rendered."""
+    from jesse_spark.errors import SchemaError
+
+    with pytest.raises(SchemaError) as err:
+        _compile_in(mode)({**D4, "type": decl})
+    assert err.value.code == "wrong_type_specification"

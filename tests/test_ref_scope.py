@@ -350,3 +350,27 @@ def test_registry_less_unloadable_ref_raises(spark, mode, ref):
     with pytest.raises(SchemaError) as err:
         _ref_codes(spark, mode, {**D6, "$ref": ref}, [1])
     assert err.value.code == "schema_not_found"
+
+
+def test_registry_add_dir_loads_nested_files(spark, tmp_path):
+    """``add_dir`` (jesse's directory loader, jesse_database.erl:96-103)
+    loads every ``*.json`` below a directory, nested ones too, under
+    sorted ``file://`` ids; a ``$ref`` to one compiles from the store."""
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "sub" / "pos.json").write_text(json.dumps(
+        {**D6, "type": "integer", "minimum": 0, "multipleOf": 2}))
+    (tmp_path / "any.json").write_text(json.dumps({**D6}))
+    (tmp_path / "notes.txt").write_text("not a schema")
+    reg = SchemaRegistry()
+    ids = reg.add_dir(tmp_path)
+    pos = f"file://{(tmp_path / 'sub' / 'pos.json').resolve()}"
+    assert ids == sorted(ids) == [
+        f"file://{(tmp_path / 'any.json').resolve()}", pos]
+    # the store answers the ref, not the file loader
+    (tmp_path / "sub" / "pos.json").unlink()
+    checks = compile_checks({**D6, "$ref": pos}, T.LongType(), registry=reg)
+    df = spark.createDataFrame([(v,) for v in [-3, 0, 5]], "value long")
+    got = [sorted(r["codes"]) for r in df.select(F.array_compact(F.array(*[
+        F.when(~F.coalesce(c.pred(F.col("value")), F.lit(False)),
+               F.lit(c.constraint)) for c in checks])).alias("codes")).collect()]
+    assert got == [["not_in_range", "not_multiple_of"], [], ["not_multiple_of"]]
